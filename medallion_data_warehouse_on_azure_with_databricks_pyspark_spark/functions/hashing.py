@@ -38,14 +38,3 @@ def safe_change_hash(df: DataFrame, cols: list[str], out: str = "hash_value") ->
         F.coalesce(F.col(c).cast("string"), F.lit(_NULL_SENTINEL)) for c in cols
     ]
     return df.withColumn(out, F.sha2(F.concat_ws(_SEP, *parts), 256))
-
-
-def surrogate_key(df: DataFrame, out: str) -> DataFrame:
-    """F8: ``monotonically_increasing_id`` surrogate key
-    (``/root/reference/Gold_Customers.py:34``).
-
-    Unique and monotone within a run, *not* dense and not stable across runs
-    — exactly the reference's semantics.  Partition-local: no shuffle, no
-    driver coordination, scales to any executor count.
-    """
-    return df.withColumn(out, F.monotonically_increasing_id())

@@ -1,27 +1,15 @@
 """Aggregation operators (SURVEY.md §2.4, §2.6).
 
 Reference surface: ``groupBy(col).agg(count(key).alias(...))`` ordered desc
-(``/root/reference/Silver_Customers.py:28,34``).  We expose the full agg
-surface (count/sum/avg/min/max/distinct) since it is free in Spark — all map
-to partial+final HashAggregate around a single key exchange, the plan shape
-that scales linearly with data volume.
+(the reference's ``Silver_Customers.py:28,34``) — a partial+final
+HashAggregate around a single key exchange, the plan shape that scales
+linearly with data volume.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_AGG_FNS = {
-    "count": F.count,
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "count_distinct": F.count_distinct,
-}
 
 
 def group_count(
@@ -43,22 +31,6 @@ def group_count(
     out = df.groupBy(group_col).agg(F.count(F.col(count_col)).alias(alias))
     order = F.desc(alias) if descending else F.asc(alias)
     return out.orderBy(order)
-
-
-def group_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    aggs: Mapping[str, tuple[str, str]],
-) -> DataFrame:
-    """General grouped aggregation: ``{out_alias: (fn_name, column)}``.
-
-    Extended surface beyond the reference's count-only usage; every fn is a
-    built-in with map-side partial aggregation.
-    """
-    exprs: list[Column] = [
-        _AGG_FNS[fn](F.col(col)).alias(alias) for alias, (fn, col) in aggs.items()
-    ]
-    return df.groupBy(*group_cols).agg(*exprs)
 
 
 def sort(df: DataFrame, *keys: tuple[str, bool]) -> DataFrame:

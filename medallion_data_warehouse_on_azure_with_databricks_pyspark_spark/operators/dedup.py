@@ -224,31 +224,6 @@ def with_minhash_signature(
     return df.withColumn(out, _signature_udf(num_hashes, seed)(base))
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 128,
-    bands: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """LSH candidate pairs: split signatures into ``bands``, bucket-join on
-    (band index, band hash).  With r = num_hashes/bands rows per band, a pair
-    with Jaccard J collides in ≥1 band with prob 1-(1-J^r)^bands — at the
-    default 32×4, J=0.8 → 0.99999985.
-
-    The only shuffle is the groupBy on band buckets; bucket sizes are the
-    skew hazard (identical boilerplate docs) — downstream verification caps
-    work per bucket, and ``bands`` keys spread load.
-
-    The banded index is persisted across the self-join (both sides read it);
-    at scale you would write it out as the reusable LSH index table.
-    """
-    sh = shingle_frame(df, id_col, text_col, n)
-    return _lsh_candidates_from_shingles(sh, id_col, num_hashes, bands, seed)
-
-
 def banded_frame(
     sh: DataFrame,
     id_col: str,

@@ -1,6 +1,6 @@
-"""Lifecycle maintenance for the on-disk index family (MinHash bands,
-IVF lists, multi-table LSH buckets, PQ codes, IVFADC residual codes,
-SQ8 scalar codes).
+"""Lifecycle maintenance for the on-disk index artifacts — every family
+in ``similarity.CODECS``, the one list of index families (the vector
+families plus the MinHash layout ``operators.dedup`` builds).
 
 A 100 TB corpus does not only grow: takedowns, TTL expiry, and re-crawls
 all REMOVE documents, and an index whose rows outlive their documents
@@ -9,10 +9,10 @@ lifecycle here is the standard log-structured one:
 
 * :func:`delete_from_index` appends the deleted ids to a ``tombstones/``
   table inside the index directory — O(|deleted ids|), no index rows are
-  touched.  Every index read path (``minhash_pairs_against_index``,
-  ``ivf_topk_against_index``, ``lsh_topk_against_index``) anti-joins its
-  candidates against the tombstone set, so a deleted document stops
-  matching immediately.
+  touched.  Every index read path (``dedup.minhash_pairs_against_index``
+  and the shared vector-index probe behind every
+  ``similarity.*_topk_against_index``) anti-joins its candidates against
+  the tombstone set, so a deleted document stops matching immediately.
 * :func:`compact_index` folds the tombstones in: each index table is
   rewritten WITHOUT the tombstoned ids (and without the duplicate rows
   an at-least-once append replay may have left), staged, and promoted
@@ -27,9 +27,11 @@ broadcasts the tombstone set — correct while deletes-since-compaction
 are small, which the compaction cadence guarantees; an unbounded
 tombstone backlog is exactly the signal to compact.
 
-Family detection is by manifest shape (the builders write disjoint
-parameter sets), so one ``compact_index`` entry point serves every
-artifact without the caller restating what built it.
+Every entry point reads the artifact through ``similarity.read_manifest``,
+which recognizes the family by manifest shape and refuses an unknown
+layout version, and takes the family's tables, natural keys and
+retraining recipe from its codec — the caller never restates what built
+the artifact.
 """
 
 from __future__ import annotations
@@ -42,41 +44,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.writers import atomic_dir_swap
+from . import similarity
+
 #: Subdirectory holding the pending-delete id set inside an index dir.
 TOMBSTONE_DIR = "tombstones"
 
 #: Compaction rewrites target this many bytes per output file (matches
 #: sources.writers.compact_path's default bin-packing target).
 _TARGET_FILE_MB = 128
-
-
-def _read_meta(index_path: str) -> dict:
-    with open(os.path.join(index_path, "meta.json")) as f:
-        return json.load(f)
-
-
-def _family(meta: dict) -> str:
-    """Which builder wrote this manifest — the families pin disjoint
-    parameter keys."""
-    if "num_hashes" in meta:
-        return "minhash"
-    if "modulus" in meta and "codebooks" in meta:
-        return "ivfpq"  # carries BOTH keys — must dispatch before either
-    if "modulus" in meta and "mins" in meta:
-        return "ivfsq8"  # coarse lists + scalar codes — before ivf/sq8
-    if "modulus" in meta and "prefix_dims" in meta:
-        return "matryoshka"  # prefix-IVF lists — before plain ivf
-    if "modulus" in meta and "thresholds" in meta:
-        return "ivfbq"  # coarse lists + packed 1-bit codes — before ivf
-    if "modulus" in meta:
-        return "ivf"
-    if "tables" in meta:
-        return "lsh"
-    if "codebooks" in meta:
-        return "pq"
-    if "mins" in meta:
-        return "sq8"
-    raise ValueError(f"unrecognized index manifest: {sorted(meta)}")
 
 
 def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
@@ -118,7 +94,7 @@ def delete_from_index(
     removal physical.  Idempotent — deleting an id twice, or an id the
     index never held, is harmless (tombstones are applied as a distinct
     anti-join set)."""
-    meta = _read_meta(index_path)
+    meta, _codec = similarity.read_manifest(index_path)
     target = meta["id_col"]
     src = id_col or target
     (
@@ -159,101 +135,30 @@ def compact_index(spark: SparkSession, index_path: str) -> str:
     tombstone table) is staged and promoted with one directory rename,
     so readers never see a half-compacted index, and a crash leaves the
     old index fully live."""
-    meta = _read_meta(index_path)
-    fam = _family(meta)
+    meta, codec = similarity.read_manifest(index_path)
     id_col = meta["id_col"]
     tomb = read_tombstones(spark, index_path)
     stage = f"{index_path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
     n_files = _target_files(index_path)
-
-    def rd(table: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(index_path, table))
-
-    def wr(df: DataFrame, table: str, partition_by: str | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(os.path.join(stage, table))
-
-    if fam == "minhash":
-        # band rows replay-duplicate as exact copies -> distinct;
-        # shingle rows carry one set per id -> first row per id.
-        wr(
-            _live(rd("bands"), tomb, id_col).distinct().repartition(n_files),
-            "bands",
+    for i, table in enumerate(codec.tables):
+        # replay copies fold on the table's natural key; a coarse primary
+        # table keeps its hive layout (one directory per inverted list is
+        # the partition-pruning contract every probe relies on)
+        key = codec.key if i == 0 else ()
+        by_list = "pivot_id" in key
+        live = _live(
+            spark.read.parquet(os.path.join(index_path, table)), tomb, id_col
+        ).dropDuplicates([id_col, *key])
+        similarity._write_table(
+            live if by_list else live.repartition(n_files),
+            os.path.join(stage, table), by_list, "overwrite",
         )
-        wr(
-            _live(rd("shingles"), tomb, id_col)
-            .dropDuplicates([id_col])
-            .repartition(n_files),
-            "shingles",
-        )
-    elif fam in ("ivf", "matryoshka"):
-        # keep the hive layout: one directory per inverted list is the
-        # partition-pruning contract the *_topk_against_index readers
-        # rely on (matryoshka adds a flat re-rank vectors table below).
-        wr(
-            _live(rd("lists"), tomb, id_col)
-            .dropDuplicates([id_col, "pivot_id"])
-            .repartition("pivot_id"),
-            "lists",
-            partition_by="pivot_id",
-        )
-        wr(rd("pivots"), "pivots")
-        if fam == "matryoshka":
-            wr(
-                _live(rd("vectors"), tomb, id_col)
-                .dropDuplicates([id_col])
-                .repartition(n_files),
-                "vectors",
-            )
-    elif fam == "lsh":
-        wr(
-            _live(rd("buckets"), tomb, id_col).distinct().repartition(n_files),
-            "buckets",
-        )
-        wr(
-            _live(rd("vectors"), tomb, id_col)
-            .dropDuplicates([id_col])
-            .repartition(n_files),
-            "vectors",
-        )
-    elif fam in ("ivfpq", "ivfsq8", "ivfbq"):
-        # codes keep the hive layout (partition-pruned probes); vectors
-        # are the re-rank table, flat like the pq family's.
-        wr(
-            _live(rd("codes"), tomb, id_col)
-            .dropDuplicates([id_col, "pivot_id"])
-            .repartition("pivot_id"),
-            "codes",
-            partition_by="pivot_id",
-        )
-        wr(rd("pivots"), "pivots")
-        wr(
-            _live(rd("vectors"), tomb, id_col)
-            .dropDuplicates([id_col])
-            .repartition(n_files),
-            "vectors",
-        )
-    else:  # pq / sq8 — flat codes + flat re-rank vectors
-        wr(
-            _live(rd("codes"), tomb, id_col)
-            .dropDuplicates([id_col])
-            .repartition(n_files),
-            "codes",
-        )
-        wr(
-            _live(rd("vectors"), tomb, id_col)
-            .dropDuplicates([id_col])
-            .repartition(n_files),
-            "vectors",
-        )
-
+    if codec.coarse:
+        spark.read.parquet(os.path.join(index_path, "pivots")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "pivots"))
     with open(os.path.join(stage, "meta.json"), "w") as f:
         json.dump(meta, f)
-
-    from ..sources.writers import atomic_dir_swap
-
     atomic_dir_swap(stage, index_path.rstrip("/"))
     return index_path
 
@@ -284,58 +189,26 @@ def rebuild_index(spark: SparkSession, index_path: str) -> str:
     Only the coarse-quantized families (ivf / ivfpq / ivfsq8 / ivfbq)
     and matryoshka rebuild this way; flat pq/sq8/lsh/minhash artifacts
     have no drift-report story and refuse loudly."""
-    from . import similarity
-
-    meta = _read_meta(index_path)
-    fam = _family(meta)
+    meta, codec = similarity.read_manifest(index_path)
+    if codec.retrain is None:
+        raise ValueError(
+            f"{index_path}: family {codec.family!r} has no quantizer-drift "
+            "rebuild (flat/banded artifacts retrain nothing); use "
+            "compact_index for tombstone folding"
+        )
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    vec_dir = os.path.join(index_path, "vectors")
-    src = "vectors" if os.path.isdir(vec_dir) else "lists"
-    tomb = read_tombstones(spark, index_path)
+    src = "vectors" if "vectors" in codec.tables else codec.tables[0]
     corpus = _live(
         spark.read.parquet(os.path.join(index_path, src)).select(
             id_col, vec_col
         ),
-        tomb,
+        read_tombstones(spark, index_path),
         id_col,
     ).dropDuplicates([id_col])
     stage = f"{index_path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    if fam == "ivf":
-        similarity.build_ivf_index(
-            corpus, stage, id_col=id_col, vec_col=vec_col,
-            modulus=meta["modulus"],
-            kmeans_iters=meta.get("kmeans_iters", 0),
-        )
-    elif fam == "ivfpq":
-        similarity.build_ivfpq_index(
-            corpus, stage, modulus=meta["modulus"],
-            n_subspaces=len(meta["codebooks"]),
-            n_codes=len(meta["codebooks"][0]),
-            id_col=id_col, vec_col=vec_col,
-        )
-    elif fam == "ivfsq8":
-        similarity.build_ivfsq8_index(
-            corpus, stage, modulus=meta["modulus"],
-            id_col=id_col, vec_col=vec_col,
-        )
-    elif fam == "ivfbq":
-        similarity.build_ivfbq_index(
-            corpus, stage, modulus=meta["modulus"],
-            id_col=id_col, vec_col=vec_col,
-        )
-    elif fam == "matryoshka":
-        similarity.build_matryoshka_index(
-            corpus, stage, prefix_dims=meta["prefix_dims"],
-            modulus=meta["modulus"], id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        raise ValueError(
-            f"{index_path}: family {fam!r} has no quantizer-drift "
-            "rebuild (flat/banded artifacts retrain nothing); use "
-            "compact_index for tombstone folding"
-        )
-    from ..sources.writers import atomic_dir_swap
-
+    similarity._build_artifact(
+        codec.family, corpus, stage, id_col, vec_col, **codec.retrain(meta)
+    )
     atomic_dir_swap(stage, index_path.rstrip("/"))
     return index_path
 
@@ -367,23 +240,14 @@ def index_health(spark: SparkSession, index_path: str) -> dict:
     metadata-scale, safe to poll on a schedule."""
     from ..streaming.index_stream import drift_flag
 
-    meta = _read_meta(index_path)
-    fam = _family(meta)
+    meta, codec = similarity.read_manifest(index_path)
     id_col = meta["id_col"]
-    primary = {
-        "minhash": "bands", "lsh": "buckets", "ivf": "lists",
-        "matryoshka": "lists", "ivfpq": "codes", "ivfsq8": "codes",
-        "ivfbq": "codes", "pq": "codes", "sq8": "codes",
-    }[fam]
-    tbl = spark.read.parquet(os.path.join(index_path, primary))
+    tbl = spark.read.parquet(os.path.join(index_path, codec.tables[0]))
     # the family's natural storage key: one row per (id, band) for
-    # MinHash, per (id, table) for multi-table LSH, per id otherwise —
-    # rows beyond one per key are replay duplicates, by-design
-    # multiplicity is not
-    nat_key = {
-        "minhash": [id_col, "band"],
-        "lsh": [id_col, "table_id"] if "table_id" in tbl.columns else [id_col],
-    }.get(fam, [id_col])
+    # MinHash, per (id, table) for multi-table LSH, per (id, list) for
+    # coarse families, per id otherwise — rows beyond one per key are
+    # replay duplicates, by-design multiplicity is not
+    nat_key = [id_col, *codec.key]
     agg = tbl.agg(
         F.count(F.lit(1)).alias("rows"),
         F.countDistinct(id_col).alias("live_ids"),
@@ -392,7 +256,7 @@ def index_health(spark: SparkSession, index_path: str) -> dict:
     tomb = read_tombstones(spark, index_path)
     n_tomb = tomb.count() if tomb is not None else 0
     out = {
-        "family": fam,
+        "family": codec.family,
         "rows": agg["rows"],
         "live_ids": agg["live_ids"],
         "replay_duplicates": agg["rows"] - agg["nat_rows"],
@@ -402,7 +266,7 @@ def index_health(spark: SparkSession, index_path: str) -> dict:
         ),
         "drift_flag": drift_flag(index_path),
     }
-    if "pivot_id" in tbl.columns:
+    if codec.coarse:
         sizes = tbl.groupBy("pivot_id").agg(
             F.count(F.lit(1)).alias("n")
         ).agg(

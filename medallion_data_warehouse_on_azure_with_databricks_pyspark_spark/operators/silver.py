@@ -32,20 +32,6 @@ def drop_rescued(df: DataFrame) -> DataFrame:
     return df.drop(RESCUE_COLUMN)
 
 
-def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """P1: drop one or more columns (``/root/reference/Silver_Customers.py:39``).
-
-    Note the reference discards the result of its multi-column drop (dead
-    code) — callers here must rebind, which the type signature enforces.
-    """
-    return df.drop(*cols)
-
-
-def rename_column(df: DataFrame, old: str, new: str) -> DataFrame:
-    """P2: ``withColumnRenamed`` (``/root/reference/Silver_Orders.py:26``)."""
-    return df.withColumnRenamed(old, new)
-
-
 def derive(df: DataFrame, **exprs: Column) -> DataFrame:
     """P3: add derived columns; single ``withColumns`` call keeps one Project.
 
@@ -67,11 +53,6 @@ def filter_eq(df: DataFrame, column: str, value) -> DataFrame:
     Expressed as a Column predicate so it pushes down to the parquet scan.
     """
     return df.filter(F.col(column) == F.lit(value))
-
-
-def cast_timestamp(df: DataFrame, column: str, out: str | None = None) -> DataFrame:
-    """P8/F4: ``to_timestamp`` cast (``/root/reference/Silver_Orders.py:38``)."""
-    return df.withColumn(out or column, F.to_timestamp(F.col(column)))
 
 
 def derive_year(df: DataFrame, ts_column: str, out: str = "year") -> DataFrame:

@@ -12,6 +12,10 @@ Approximate-nearest-neighbor over ``array<float>`` embeddings:
   ranking only bucket members.  Corpus-side cost amortizes via the
   persisted bucket table; per-query cost drops from O(N) to O(bucket).
 * ``cosine_dedup_pairs`` — embedding near-dup pairs via the same bucketing.
+* on-disk index artifacts (end of module) — ``build_*_index`` /
+  ``append_to_*_index`` / ``*_topk_against_index`` for every family
+  (ivf, lsh, pq, sq8, ivfpq, ivfsq8, matryoshka, ivfbq), bound to one
+  build / append / probe lifecycle over the ``CODECS`` table.
 
 Scale design: the corpus never self-joins; planes/queries are broadcast;
 norms are precomputed once.  Distances use double accumulation in element
@@ -20,11 +24,19 @@ order so results are deterministic.
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
+
 import numpy as np
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.writers import atomic_dir_swap
 from . import index_maintenance
 
 
@@ -45,11 +57,6 @@ def _norm(a: Column) -> Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "norm") -> DataFrame:
-    """Precompute L2 norms (do this once, persist with the corpus)."""
-    return df.withColumn(out, _norm(F.col(vec_col)))
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -832,211 +839,54 @@ def cosine_dedup_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# Materialized IVF index (cluster once, probe many)
-# ---------------------------------------------------------------------------
-
-#: Index layout version written by build_ivf_index.
-_IVF_INDEX_VERSION = 1
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    modulus: int = 37,
-    kmeans_iters: int = 0,
-    sample_fraction: float | None = None,
-) -> str:
-    """Materialize the corpus's IVF index to ``path`` — the embedding-side
-    twin of ``dedup.build_minhash_index``.
-
-    Writes:
-
-    * ``{path}/lists``  — the corpus ``(id, vec)`` rows **hive-partitioned
-      by pivot_id** (one parquet directory per inverted list, one file per
-      list via a pre-write repartition).  This layout IS the ANN win at
-      100 TB: a query batch probing ``nprobe`` of ``P`` lists reads
-      ~nprobe/P of the corpus bytes through static partition pruning —
-      the other lists are never opened.
-    * ``{path}/pivots`` — ``(pivot_id, pivot_vec)``, tiny, broadcast at
-      query time.
-    * ``{path}/meta.json`` — ``{id_col, vec_col, modulus, kmeans_iters,
-      version}``; probing is only meaningful against the quantizer that
-      built the lists, so the reader refuses a mismatched manifest.
-
-    ``kmeans_iters > 0`` trains the quantizer with that many Lloyd rounds
-    (``kmeans_pivots``; deterministic, optionally sample-trained);
-    ``kmeans_iters == 0`` uses the fixed-stride pivots (oracle-checkable).
-    Assignment cost is one broadcast-pivot pass over the corpus — paid
-    once, amortized over every subsequent query batch.  Append-only
-    corpora assign-and-append new vectors' list rows under the same
-    manifest; retraining the quantizer requires a rebuild.
-
-    The build stages the whole artifact (lists + pivots + manifest) and
-    promotes it with one directory rename — a crashed rebuild can never
-    leave readers lists quantized by one pivot set next to a different
-    live pivot table.
-    """
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    if kmeans_iters > 0:
-        pivots = kmeans_pivots(
-            corpus, iters=kmeans_iters, modulus=modulus,
-            id_col=id_col, vec_col=vec_col, sample_fraction=sample_fraction,
-        )
-    else:
-        pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    # keep_cols carries the vector through the zero-shuffle assignment —
-    # the only exchange left in the build is the pre-write repartition
-    # that packs each inverted list's files (optimization r18, §2.4).
-    lists = ivf_assign(
-        corpus, pivots, 1, id_col, vec_col, keep_cols=(vec_col,)
-    ).select(F.col(id_col), F.col(vec_col), "pivot_id").repartition("pivot_id")
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    lists.write.mode("overwrite").partitionBy("pivot_id").parquet(
-        os.path.join(stage, "lists")
-    )
-    pivots.write.mode("overwrite").parquet(os.path.join(stage, "pivots"))
-    meta = {
-        "version": _IVF_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "modulus": modulus,
-        "kmeans_iters": kmeans_iters,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
+def _lsh_planes(tables: list[list[list[float]]], n_probes: int = 0) -> int:
+    """Validate a plane-table list (and a probe fan against it); returns
+    the per-table plane count."""
+    if not tables:
+        raise ValueError("tables must be non-empty")
+    n_planes = len(tables[0])
+    if any(len(t) != n_planes for t in tables):
+        raise ValueError("all tables must have the same plane count")
+    if not 0 <= n_probes <= n_planes:
+        raise ValueError("n_probes must be in [0, n_planes]")
+    return n_planes
 
 
-def append_to_ivf_index(
-    new_vectors: DataFrame,
-    index_path: str,
-) -> str:
-    """Extend an existing IVF index with new vectors — the append-only
-    corpus cadence: the new rows are assigned against the index's STORED
-    pivots (reading them is the only index access; standing list rows are
-    never rewritten) and appended into the matching ``pivot_id=``
-    partitions.  The quantizer is deliberately NOT retrained — recall
-    degrades gracefully as the distribution drifts, and a retrain is an
-    explicit rebuild.  Callers own id uniqueness across appends.
-
-    Replay semantics: the append is at-least-once (plain parquet append
-    carries no transaction); a replayed append duplicates the batch's
-    list rows.  The read path (:func:`ivf_topk_against_index`) dedups
-    probed list rows per id before scoring, so a replay can never put
-    the same vector in two of a query's top-k ranks — the cost of a
-    replay is index storage only, reclaimed at the next rebuild."""
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _IVF_INDEX_VERSION:
-        raise ValueError(f"unsupported ivf index version: {meta.get('version')}")
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    spark = new_vectors.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    (
-        ivf_assign(new_vectors, pivots, 1, id_col, vec_col,
-                   keep_cols=(vec_col,))
-        .select(F.col(id_col), F.col(vec_col), "pivot_id")
-        .repartition("pivot_id")
-        .write.mode("append")
-        .partitionBy("pivot_id")
-        .parquet(os.path.join(index_path, "lists"))
-    )
-    return index_path
-
-
-def ivf_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    nprobe: int = 2,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
+def _lsh_probes(
+    q_sel: DataFrame,
+    tables: list[list[list[float]]],
+    n_probes: int,
+    query_id_col: str,
 ) -> DataFrame:
-    """Approximate top-k against a :func:`build_ivf_index` artifact,
-    reading ONLY the probed inverted lists.
+    """``(query_id, table_id, bucket)`` probe rows of a ``(query_id,
+    __qvec)`` frame: each table's multi-probe fan, unioned — shared by
+    the in-memory and the materialized amplified-LSH paths."""
+    n_planes = _lsh_planes(tables, n_probes)
+    per_table = []
+    for t_id, planes in enumerate(tables):
+        qb = (
+            q_sel.withColumn("__dots", _plane_dots(F.col("__qvec"), planes))
+            .withColumn("__b0", _bucket_from_dots(F.col("__dots"), n_planes))
+        )
+        per_table.append(
+            _with_probe_buckets(qb, n_planes, n_probes).select(
+                query_id_col,
+                F.lit(t_id).cast("int").alias("table_id"),
+                "bucket",
+            )
+        )
+    return functools.reduce(DataFrame.unionByName, per_table)
 
-    The query batch is assigned to its ``nprobe`` nearest pivots, the
-    probed list ids are collected driver-side (bounded: ≤ |queries| ×
-    nprobe — the query batch is small by contract, same as
-    ``bm25_topk``'s query set), and the lists table is read with a
-    ``pivot_id IN (...)`` predicate that prunes at the partition level:
-    un-probed lists contribute zero scan tasks, so query cost scales with
-    nprobe/P of the corpus, not the corpus.  Scoring and ranking are the
-    in-memory ``ivf_topk`` path verbatim (same tie-breaks).
 
-    Precondition (ADVICE r18 #2): the ``queries`` plan must be
-    DETERMINISTIC — its probe assignment is collected once for the
-    partition-pruning predicate while the scoring side recomputes it
-    lazily, and a nondeterministic query source (e.g. a fresh
-    ``rand()`` column) could assign to pivots outside the collected
-    set and silently lose candidates.  Every registered lane feeds
-    deterministic parquet-derived query batches.
-    """
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _IVF_INDEX_VERSION:
-        raise ValueError(f"unsupported ivf index version: {meta.get('version')}")
-    id_col = meta["id_col"]
-    spark = queries.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    # The (query_id, pivot_id) assignment is ≤ |queries| × nprobe rows —
-    # bounded small by the same contract as the probed-list collect below.
-    # The collect feeds ONLY the partition-pruning predicate; the scoring
-    # side recomputes the (now zero-shuffle, keep_cols-carrying)
-    # assignment lazily — deterministic, so both sides agree, and no
-    # persist() is left in the SQL cache (ADVICE r6).
-    q_assigned = ivf_assign(
-        queries, pivots, nprobe, query_id_col, vec_col, keep_cols=(vec_col,)
-    )
-    probed = sorted({
-        r["pivot_id"]
-        for r in q_assigned.select("pivot_id").collect()
-    })
-    lists = (
-        spark.read.parquet(os.path.join(index_path, "lists"))
-        .filter(F.col("pivot_id").isin(probed))
-        # Replay guard: an at-least-once append_to_ivf_index can leave
-        # duplicate list rows for a vector; dedup per (id, pivot) over the
-        # PROBED subset only (bounded exchange), so a duplicated vector
-        # can never occupy two of a query's top-k ranks.
-        .dropDuplicates([id_col, "pivot_id"])
-    )
-    # deleted vectors stop ranking immediately (physical removal happens
-    # at the next index_maintenance.compact_index)
-    lists = index_maintenance.exclude_tombstoned(
-        lists, index_path, id_col, id_col
-    )
-    c = lists.select(
-        F.col(id_col), F.col("pivot_id"), F.col(meta["vec_col"]).alias("__cvec")
-    ).withColumn("__cnorm", _norm(F.col("__cvec")))
-    q = q_assigned.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec"), "pivot_id"
-    ).withColumn("__qnorm", _norm(F.col("__qvec")))
-    scored = c.join(F.broadcast(q), "pivot_id")
-    if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    scored = scored.withColumn(
-        "cosine",
-        _dot(F.col("__qvec"), F.col("__cvec"))
-        / (F.col("__qnorm") * F.col("__cnorm")),
-    )
-    return grouped_topk(scored, query_id_col, id_col, k)
+def _lsh_buckets(
+    df: DataFrame, tables: list[list[list[float]]], id_col: str, vec_col: str
+) -> DataFrame:
+    """The exploded ``(id, table_id, bucket)`` corpus side: one pass
+    computes every table's sign bucket, L rows per vector."""
+    return df.select(
+        F.col(id_col),
+        F.array(*[_sign_bucket(F.col(vec_col), t) for t in tables]).alias("__bs"),
+    ).select(id_col, F.posexplode("__bs").alias("table_id", "bucket"))
 
 
 def lsh_multitable_topk(
@@ -1079,23 +929,13 @@ def lsh_multitable_topk(
     buckets; it stays reachable through any non-hot bucket in another
     table, so the recall trade is explicit and bounded.
     """
-    if not tables:
-        raise ValueError("tables must be non-empty")
-    n_planes = len(tables[0])
-    if any(len(t) != n_planes for t in tables):
-        raise ValueError("all tables must have the same plane count")
-    if not 0 <= n_probes <= n_planes:
-        raise ValueError("n_probes must be in [0, n_planes]")
-
-    def bucket_array(vec: Column) -> Column:
-        return F.array(*[_sign_bucket(vec, t) for t in tables])
-
-    cb = (
-        _spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec")))
-        .withColumn("__bs", bucket_array(F.col("__cvec")))
-        .select(
-            id_col, F.posexplode("__bs").alias("table_id", "bucket")
-        )
+    q_probes = _lsh_probes(
+        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")),
+        tables, n_probes, query_id_col,
+    )
+    cb = _lsh_buckets(
+        _spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec"))),
+        tables, id_col, "__cvec",
     )
     if max_bucket_freq is not None:
         # cb (the L-table plane-dot fold over the whole corpus) feeds both
@@ -1109,26 +949,6 @@ def lsh_multitable_topk(
             .select("table_id", "bucket")
         )
         cb = cb.join(F.broadcast(hot), ["table_id", "bucket"], "left_anti")
-    q_sel = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
-    )
-    per_table = []
-    for t_id, planes in enumerate(tables):
-        qb = (
-            q_sel.withColumn("__dots", _plane_dots(F.col("__qvec"), planes))
-            .withColumn("__b0", _bucket_from_dots(F.col("__dots"), n_planes))
-        )
-        qb = _with_probe_buckets(qb, n_planes, n_probes)
-        per_table.append(
-            qb.select(
-                query_id_col,
-                F.lit(t_id).cast("int").alias("table_id"),
-                "bucket",
-            )
-        )
-    q_probes = per_table[0]
-    for p in per_table[1:]:
-        q_probes = q_probes.unionByName(p)
     cand = (
         cb.join(F.broadcast(q_probes), ["table_id", "bucket"])
         .select(query_id_col, id_col)
@@ -1144,147 +964,6 @@ def lsh_multitable_topk(
     # scan that computes the buckets.
     c_vec = corpus.select(
         F.col(id_col), F.col(vec_col).alias("__cvec")
-    ).withColumn("__cnorm", _norm(F.col("__cvec")))
-    q_vec = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
-    ).withColumn("__qnorm", _norm(F.col("__qvec")))
-    scored = (
-        cand.join(c_vec, id_col)
-        .join(F.broadcast(q_vec), query_id_col)
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qnorm") * F.col("__cnorm")),
-        )
-    )
-    return grouped_topk(scored, query_id_col, id_col, k)
-
-
-#: Index layout version written by build_lsh_index.
-_LSH_INDEX_VERSION = 1
-
-
-def build_lsh_index(
-    corpus: DataFrame,
-    path: str,
-    tables: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Materialize the multi-table LSH index — the third artifact of the
-    family (MinHash bands, IVF lists, LSH buckets).
-
-    Writes ``{path}/buckets`` — ``(id, table_id, bucket)``, the exploded
-    per-table sign buckets (L rows/vector, the join side of every future
-    query batch) — ``{path}/vectors`` — ``(id, vec)`` stored ONCE, read
-    only to score candidates — and ``{path}/meta.json`` pinning the plane
-    tables themselves (buckets are only meaningful under the exact planes
-    that produced them, so the reader takes NO plane argument: the
-    manifest is the single source of truth).  Staged + promoted with one
-    rename, like the other index builders."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    if not tables:
-        raise ValueError("tables must be non-empty")
-    if any(len(t) != len(tables[0]) for t in tables):
-        # Same contract as lsh_multitable_topk: a ragged table list must
-        # fail HERE — the reader derives n_planes from table 0 and would
-        # otherwise silently mis-probe the stored buckets.
-        raise ValueError("all tables must have the same plane count")
-
-    def bucket_array(vec: Column) -> Column:
-        return F.array(*[_sign_bucket(vec, t) for t in tables])
-
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    (
-        corpus.select(F.col(id_col), F.col(vec_col).alias("__v"))
-        .withColumn("__bs", bucket_array(F.col("__v")))
-        .select(id_col, F.posexplode("__bs").alias("table_id", "bucket"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(stage, "buckets"))
-    )
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _LSH_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "tables": tables,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def lsh_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-    n_probes: int = 0,
-) -> DataFrame:
-    """Amplified-LSH top-k against a :func:`build_lsh_index` artifact:
-    identical candidates, scores, and ranks as the in-memory
-    :func:`lsh_multitable_topk` under the manifest's plane tables — the
-    corpus is touched only through its bucket index and stored vectors
-    (bucket pass paid once at build, never per query batch)."""
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _LSH_INDEX_VERSION:
-        raise ValueError(f"unsupported lsh index version: {meta.get('version')}")
-    tables = meta["tables"]
-    id_col = meta["id_col"]
-    n_planes = len(tables[0])
-    if not 0 <= n_probes <= n_planes:
-        raise ValueError("n_probes must be in [0, n_planes]")
-    spark = queries.sparkSession
-    cb = spark.read.parquet(os.path.join(index_path, "buckets"))
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    q_sel = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
-    )
-    per_table = []
-    for t_id, planes in enumerate(tables):
-        qb = (
-            q_sel.withColumn("__dots", _plane_dots(F.col("__qvec"), planes))
-            .withColumn("__b0", _bucket_from_dots(F.col("__dots"), n_planes))
-        )
-        qb = _with_probe_buckets(qb, n_planes, n_probes)
-        per_table.append(
-            qb.select(
-                query_id_col,
-                F.lit(t_id).cast("int").alias("table_id"),
-                "bucket",
-            )
-        )
-    q_probes = per_table[0]
-    for p in per_table[1:]:
-        q_probes = q_probes.unionByName(p)
-    cand = (
-        cb.join(F.broadcast(q_probes), ["table_id", "bucket"])
-        .select(query_id_col, id_col)
-        .distinct()
-    )
-    # deleted vectors stop ranking immediately (physical removal happens
-    # at the next index_maintenance.compact_index)
-    cand = index_maintenance.exclude_tombstoned(
-        cand, index_path, id_col, id_col
-    )
-    if exclude_self:
-        cand = cand.filter(F.col(query_id_col) != F.col(id_col))
-    c_vec = vectors.select(
-        F.col(id_col), F.col(meta["vec_col"]).alias("__cvec")
     ).withColumn("__cnorm", _norm(F.col("__cvec")))
     q_vec = queries.select(
         F.col(query_id_col), F.col(vec_col).alias("__qvec")
@@ -2059,347 +1738,6 @@ def ivfpq_residual_topk(
     )
 
 
-_IVFPQ_INDEX_VERSION = 1
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    modulus: int = 37,
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Materialize the full IVFADC artifact — the billion-vector index
-    you actually ship: residual PQ codes **hive-partitioned by inverted
-    list** so a probe reads ~nprobe/P of the CODE bytes (already ~32×
-    smaller than vectors) through static partition pruning, plus the raw
-    vectors stored once for the shortlist re-rank only.
-
-    Writes ``{path}/codes`` (``(id, pq_code)`` under ``pivot_id=``
-    dirs), ``{path}/pivots``, ``{path}/vectors``, and ``meta.json``
-    pinning the residual codebooks (codes are only meaningful under the
-    exact quantizer AND codebooks that produced them — the manifest is
-    the single source of truth, the reader takes neither as arguments).
-    Staged + one-rename promote like every other index builder."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    res = residual_frame(corpus, pivots, id_col, vec_col)
-    codebooks = pq_codebooks_kmeans(
-        res, n_subspaces=n_subspaces, n_codes=n_codes, iters=iters,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = (
-        pq_encode(res, codebooks, id_col, vec_col)
-        .join(res.select(id_col, "pivot_id"), id_col)
-        .repartition("pivot_id")
-    )
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    codes.write.mode("overwrite").partitionBy("pivot_id").parquet(
-        os.path.join(stage, "codes")
-    )
-    pivots.write.mode("overwrite").parquet(os.path.join(stage, "pivots"))
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _IVFPQ_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "modulus": modulus,
-        "codebooks": codebooks,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def append_to_ivfpq_index(
-    new_vectors: DataFrame,
-    index_path: str,
-) -> str:
-    """Extend an IVFADC artifact with new vectors: assign against the
-    STORED pivots, encode residuals under the STORED codebooks (neither
-    retrains — drift means an explicit rebuild, same contract as the
-    other families), append vectors FIRST and codes second — the safe
-    order (ADVICE r7 on the PQ index): a vector without a code is merely
-    unscored; a code without a vector would shortlist and then vanish at
-    the re-rank join, displacing a valid candidate."""
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _IVFPQ_INDEX_VERSION:
-        raise ValueError(
-            f"unsupported ivfpq index version: {meta.get('version')}"
-        )
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    spark = new_vectors.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    res = residual_frame(new_vectors, pivots, id_col, vec_col)
-    codes = (
-        pq_encode(res, meta["codebooks"], id_col, vec_col)
-        .join(res.select(id_col, "pivot_id"), id_col)
-        .repartition("pivot_id")
-    )
-    new_vectors.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-    codes.write.mode("append").partitionBy("pivot_id").parquet(
-        os.path.join(index_path, "codes")
-    )
-    return index_path
-
-
-def ivfpq_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    nprobe: int = 12,
-    shortlist: int = 100,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a :func:`build_ivfpq_index` artifact, reading ONLY the
-    probed lists' code partitions: queries assign against the stored
-    pivots, per-(query, probed-list) residual LUTs broadcast, ADC scores
-    the pruned code rows, and the exact re-rank touches the vectors file
-    for queries × shortlist rows only.  Bit-identical to the in-memory
-    :func:`ivfpq_residual_topk` under the same quantizer/codebooks.
-
-    Precondition (ADVICE r18 #2): the ``queries`` plan must be
-    DETERMINISTIC — its probe assignment is collected once for the
-    partition-pruning predicate while the scoring side recomputes it
-    lazily, and a nondeterministic query source (e.g. a fresh
-    ``rand()`` column) could assign to pivots outside the collected
-    set and silently lose candidates.  Every registered lane feeds
-    deterministic parquet-derived query batches.
-    """
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _IVFPQ_INDEX_VERSION:
-        raise ValueError(
-            f"unsupported ivfpq index version: {meta.get('version')}"
-        )
-    id_col = meta["id_col"]
-    codebooks = meta["codebooks"]
-    spark = queries.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    # bounded: |queries| × nprobe rows (same contract as the IVF reader).
-    # The collect feeds only the pruning predicate; the LUT side reuses
-    # the keep_cols-carrying assignment lazily — no join back to queries.
-    q_assigned = ivf_assign(
-        queries, pivots, nprobe, query_id_col, vec_col, keep_cols=(vec_col,)
-    )
-    probed = sorted({
-        r["pivot_id"]
-        for r in q_assigned.select("pivot_id").collect()
-    })
-    codes = (
-        spark.read.parquet(os.path.join(index_path, "codes"))
-        .filter(F.col("pivot_id").isin(probed))
-        .dropDuplicates([id_col, "pivot_id"])
-    )
-    codes = index_maintenance.exclude_tombstoned(
-        codes, index_path, id_col, id_col
-    )
-    q_lut = (
-        q_assigned.join(F.broadcast(pivots), "pivot_id")
-        .select(
-            query_id_col,
-            "pivot_id",
-            _pq_subdists_kernel(codebooks)(
-                F.zip_with(
-                    _as_double(vec_col), _as_double("pivot_vec"),
-                    lambda x, y: x - y,
-                )
-            ).alias("__lut"),
-        )
-    )
-    scored = codes.join(F.broadcast(q_lut), "pivot_id").filter(
-        F.col(id_col) != F.col(query_id_col)
-    )
-    adc = _adc_score_kernel(len(codebooks), len(codebooks[0]))
-    scored = scored.withColumn(
-        "__negd", -adc(F.col("pq_code"), F.col("__lut"))
-    ).select(query_id_col, id_col, "__negd")
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negd"
-    ).select(query_id_col, id_col)
-    # replay guard: an at-least-once append can duplicate vector rows —
-    # dedup happens inside the re-rank AFTER the shortlist join, so the
-    # guard's exchange is bounded by queries × shortlist rows
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    return _exact_l2_rerank(
-        sl, vectors, queries, k, id_col, meta["vec_col"], query_id_col,
-        dedup_ids=True,
-    )
-
-
-_PQ_INDEX_VERSION = 1
-
-
-def build_pq_index(
-    corpus: DataFrame,
-    path: str,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Materialize the FLAT PQ artifact — fourth member of the index
-    family (MinHash bands, IVF lists, LSH buckets, PQ codes).
-
-    **Default recommendation: build the IVF-composed artifact instead**
-    (:func:`build_ivfpq_index`) — its probe reads ~nprobe/P of the code
-    bytes via static partition pruning, where this flat artifact's probe
-    ADC-scans EVERY stored code.  The flat artifact remains the
-    exactness baseline (full-probe == flat is pinned by
-    ``tests/test_index_lifecycle.py``) and the right choice only when
-    the corpus is small enough that list pruning cannot pay.
-
-    Writes ``{path}/codes`` — ``(id, pq_code)``, the ~32×-compressed
-    representation every future query batch ADC-scans —
-    ``{path}/vectors`` — ``(id, vec)`` stored once, read only for the
-    shortlist re-rank — and ``{path}/meta.json`` pinning the codebooks
-    (codes are only meaningful under the exact codebooks that produced
-    them, so the reader takes NO codebook argument: the manifest is the
-    single source of truth).  Staged + one-rename promote, crash-safe
-    like the other builders."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    if not codebooks or not codebooks[0]:
-        raise ValueError("codebooks must be non-empty")
-    if any(len(b) != len(codebooks[0]) for b in codebooks):
-        raise ValueError("all subspace codebooks must have the same code count")
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    pq_encode(corpus, codebooks, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "codes"))
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _PQ_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "codebooks": codebooks,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def _read_pq_meta(index_path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _PQ_INDEX_VERSION:
-        raise ValueError(f"unsupported pq index version: {meta.get('version')}")
-    return meta
-
-
-def append_to_pq_index(new_vectors: DataFrame, index_path: str) -> str:
-    """Grow the artifact with a frozen quantizer: new vectors encode
-    against the STORED codebooks (drift between builder and appender is
-    impossible — there is no codebook argument) and append into both
-    tables; standing rows are untouched.  At-least-once replay leaves
-    duplicate rows that every read path neutralizes
-    (``dropDuplicates``/``distinct`` on the candidate side) and the next
-    ``compact_index`` folds physically.
-
-    Append order is VECTORS FIRST, then codes (ADVICE r7): a crash
-    between the two appends must not leave an id with a code but no
-    vector — such a row would ADC-shortlist and then silently vanish at
-    the re-rank's inner join, displacing a valid candidate from the
-    shortlist.  A vector without a code is merely unscored until the
-    append is replayed (harmless: it never enters the candidate set)."""
-    import os
-
-    meta = _read_pq_meta(index_path)
-    new_vectors.select(meta["id_col"], meta["vec_col"]).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-    codes = pq_encode(
-        new_vectors, meta["codebooks"], meta["id_col"], meta["vec_col"]
-    )
-    codes.write.mode("append").parquet(os.path.join(index_path, "codes"))
-    return index_path
-
-
-def pq_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    shortlist: int = 100,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Two-stage PQ retrieval against a :func:`build_pq_index` artifact:
-    identical shortlists, distances, and ranks as the in-memory
-    :func:`pq_adc_rerank_topk` under the manifest's codebooks — the
-    corpus is touched only through its stored codes (ADC stage) and
-    stored vectors (shortlist re-rank); the encode pass was paid once at
-    build time.  Tombstoned ids stop ranking immediately."""
-    import os
-
-    meta = _read_pq_meta(index_path)
-    codebooks = meta["codebooks"]
-    id_col = meta["id_col"]
-    n_codes = len(codebooks[0])
-    spark = queries.sparkSession
-    codes = spark.read.parquet(os.path.join(index_path, "codes")).dropDuplicates(
-        [id_col]
-    )
-    vectors = spark.read.parquet(
-        os.path.join(index_path, "vectors")
-    ).dropDuplicates([id_col])
-    q_lut = queries.select(
-        F.col(query_id_col),
-        _pq_subdists_kernel(codebooks)(F.col(vec_col)).alias("__lut"),
-    )
-    scored = codes.join(F.broadcast(q_lut), how="cross")
-    scored = index_maintenance.exclude_tombstoned(
-        scored, index_path, id_col, id_col
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    adc = _adc_score_kernel(len(codebooks), n_codes)
-    scored = scored.withColumn(
-        "__negd", -adc(F.col("pq_code"), F.col("__lut"))
-    ).select(query_id_col, id_col, "__negd")
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negd"
-    ).select(query_id_col, id_col)
-    q_aligned = (
-        queries.withColumnRenamed(vec_col, meta["vec_col"])
-        if vec_col != meta["vec_col"]
-        else queries
-    )
-    return _exact_l2_rerank(
-        sl, vectors, q_aligned, k, id_col, meta["vec_col"], query_id_col
-    )
-
-
 # ---------------------------------------------------------------------------
 # SQ8: scalar (per-dimension affine) quantization — the storage tier between
 # raw floats and PQ codes
@@ -2529,162 +1867,6 @@ def sq8_topk(
     c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec")).withColumn(
         "__cnorm", _norm(F.col("__cvec"))
     )
-    qn = q.withColumn("__qnorm", _norm(F.col("__qvec")))
-    rescored = (
-        sl.join(c, id_col)
-        .join(F.broadcast(qn), query_id_col)
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qnorm") * F.col("__cnorm")),
-        )
-    )
-    return grouped_topk(rescored, query_id_col, id_col, k)
-
-
-_SQ8_INDEX_VERSION = 1
-
-
-def build_sq8_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stats: tuple[list[float], list[float]] | None = None,
-) -> str:
-    """Materialize the FLAT SQ8 artifact — sixth member of the index
-    family (MinHash bands, IVF lists, LSH buckets, PQ codes, IVFADC
-    residual codes).
-
-    **Default recommendation: build the IVF-composed artifact instead**
-    (:func:`build_ivfsq8_index`) — its probe reads ~nprobe/P of the
-    4×-compressed bytes via static partition pruning, where this flat
-    artifact's probe scans EVERY stored code.  The flat artifact remains
-    the exactness baseline (full-probe == flat pinned by
-    ``tests/test_index_lifecycle.py``) and the right choice only when
-    the corpus is small enough that list pruning cannot pay.
-
-    ``{path}/codes`` holds the 4×-compressed per-dimension
-    uint8 codes every future query batch scans; ``{path}/vectors`` the
-    raw vectors read only for the shortlist re-rank; ``meta.json`` pins
-    the per-dimension mins/steps — codes are only meaningful under the
-    exact stats that produced them, so the reader takes NO stats
-    argument (the manifest is the single source of truth, same frozen-
-    quantizer discipline as the PQ codebooks).  Staged + one-rename
-    promote, crash-safe like the other builders."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    mins, steps = stats if stats is not None else sq8_stats(corpus, vec_col)
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    sq8_encode(corpus, mins, steps, vec_col, out="sq8_code").select(
-        F.col(id_col), "sq8_code"
-    ).write.mode("overwrite").parquet(os.path.join(stage, "codes"))
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _SQ8_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "mins": mins,
-        "steps": steps,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def _read_sq8_meta(index_path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _SQ8_INDEX_VERSION or "mins" not in meta:
-        raise ValueError(f"unsupported sq8 index manifest: {sorted(meta)}")
-    return meta
-
-
-def append_to_sq8_index(new_vectors: DataFrame, index_path: str) -> str:
-    """Grow the artifact with FROZEN stats: new vectors encode against
-    the stored mins/steps (values outside the original [min,max] clamp
-    to 0/255 — the appender's accuracy degrades gracefully instead of
-    silently re-deriving stats that would invalidate every standing
-    code).  Append order is VECTORS FIRST, then codes (the PQ lesson,
-    ADVICE r7): a code without its vector would shortlist and then
-    vanish at the re-rank join, displacing a valid candidate; a vector
-    without a code is merely unscored until the replay completes."""
-    import os
-
-    meta = _read_sq8_meta(index_path)
-    new_vectors.select(meta["id_col"], meta["vec_col"]).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-    sq8_encode(
-        new_vectors, meta["mins"], meta["steps"], meta["vec_col"],
-        out="sq8_code",
-    ).select(F.col(meta["id_col"]), "sq8_code").write.mode("append").parquet(
-        os.path.join(index_path, "codes")
-    )
-    return index_path
-
-
-def sq8_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    shortlist: int = 40,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Two-stage SQ8 retrieval against a :func:`build_sq8_index`
-    artifact — bit-identical shortlists, cosines, and ranks as the
-    in-memory :func:`sq8_topk` under the manifest's stats (both rank
-    stages are total orders on (score, id), so layout and partitioning
-    cannot change the result).  The corpus is touched only through its
-    stored codes (approximate scan: a quarter of the raw bytes) and
-    stored vectors (shortlist re-rank); tombstoned ids stop ranking
-    immediately."""
-    import os
-
-    from . import index_maintenance
-
-    meta = _read_sq8_meta(index_path)
-    id_col = meta["id_col"]
-    mn = F.array(*[F.lit(v) for v in meta["mins"]])
-    st = F.array(*[F.lit(v) for v in meta["steps"]])
-    spark = queries.sparkSession
-    codes = spark.read.parquet(os.path.join(index_path, "codes")).dropDuplicates(
-        [id_col]
-    )
-    vectors = spark.read.parquet(
-        os.path.join(index_path, "vectors")
-    ).dropDuplicates([id_col])
-    recon = F.transform(
-        F.col("sq8_code"),
-        lambda c, i: F.element_at(mn, i + 1)
-        + c.cast("double") * F.element_at(st, i + 1),
-    )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    scored = codes.join(F.broadcast(q), how="cross")
-    scored = index_maintenance.exclude_tombstoned(
-        scored, index_path, id_col, id_col
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    scored = scored.withColumn("__approx", _dot(F.col("__qvec"), recon))
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__approx"
-    ).select(query_id_col, id_col)
-    c = vectors.select(
-        F.col(id_col), F.col(meta["vec_col"]).alias("__cvec")
-    ).withColumn("__cnorm", _norm(F.col("__cvec")))
     qn = q.withColumn("__qnorm", _norm(F.col("__qvec")))
     rescored = (
         sl.join(c, id_col)
@@ -2880,193 +2062,6 @@ def ivfsq8_topk(
     )
 
 
-_IVFSQ8_INDEX_VERSION = 1
-
-
-def build_ivfsq8_index(
-    corpus: DataFrame,
-    path: str,
-    modulus: int = 37,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stats: tuple[list[float], list[float]] | None = None,
-) -> str:
-    """Materialize the IVF-SQ8 artifact — the pruned, partition-skipping
-    layout of the scalar-quantization rung: SQ8 codes **hive-partitioned
-    by inverted list** (``{path}/codes`` under ``pivot_id=`` dirs), the
-    coarse pivots (``{path}/pivots``), raw vectors for the shortlist
-    re-rank only (``{path}/vectors``), and ``meta.json`` pinning the
-    per-dimension mins/steps — codes are only meaningful under the exact
-    quantizer stats AND pivot set that produced them, so the reader takes
-    neither as arguments (the frozen-manifest discipline of the IVFADC
-    builder, ``build_ivfpq_index``).  A probe reads ~nprobe/P of code
-    bytes that are already 4× smaller than floats, via static partition
-    pruning (plan-pinned in ``tests/test_llmops.py``).  Staged + one-
-    rename promote, crash-safe like every other index builder."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    mins, steps = stats if stats is not None else sq8_stats(corpus, vec_col)
-    codes = (
-        sq8_encode(
-            ivf_assign(corpus, pivots, 1, id_col, vec_col,
-                       keep_cols=(vec_col,)),
-            mins, steps, vec_col, out="sq8_code",
-        )
-        .select(id_col, "sq8_code", "pivot_id")
-        .repartition("pivot_id")
-    )
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    codes.write.mode("overwrite").partitionBy("pivot_id").parquet(
-        os.path.join(stage, "codes")
-    )
-    pivots.write.mode("overwrite").parquet(os.path.join(stage, "pivots"))
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _IVFSQ8_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "modulus": modulus,
-        "mins": mins,
-        "steps": steps,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def _read_ivfsq8_meta(index_path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _IVFSQ8_INDEX_VERSION or "mins" not in meta:
-        raise ValueError(f"unsupported ivfsq8 index manifest: {sorted(meta)}")
-    return meta
-
-
-def append_to_ivfsq8_index(new_vectors: DataFrame, index_path: str) -> str:
-    """Grow the IVF-SQ8 artifact under the FROZEN manifest: new vectors
-    assign against the STORED pivots and encode against the STORED
-    mins/steps (out-of-range values clamp to 0/255 — graceful accuracy
-    decay instead of silently re-deriving stats that would invalidate
-    every standing code; drift means an explicit rebuild).  Vectors
-    append FIRST, codes second (the PQ lesson, ADVICE r7): a vector
-    without a code is merely unscored, a code without its vector would
-    shortlist and then vanish at the re-rank join."""
-    import os
-
-    meta = _read_ivfsq8_meta(index_path)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    spark = new_vectors.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    codes = (
-        sq8_encode(
-            ivf_assign(new_vectors, pivots, 1, id_col, vec_col,
-                       keep_cols=(vec_col,)),
-            meta["mins"], meta["steps"], vec_col, out="sq8_code",
-        )
-        .select(id_col, "sq8_code", "pivot_id")
-        .repartition("pivot_id")
-    )
-    new_vectors.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-    codes.write.mode("append").partitionBy("pivot_id").parquet(
-        os.path.join(index_path, "codes")
-    )
-    return index_path
-
-
-def ivfsq8_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    nprobe: int = 12,
-    shortlist: int = 40,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Query a :func:`build_ivfsq8_index` artifact reading ONLY the
-    probed lists' code partitions: queries assign against the stored
-    pivots (bounded |queries| × nprobe collect, the IVF-reader
-    contract), the code scan is restricted by static partition pruning
-    (``PartitionFilters: [pivot_id IN (...)]``), reconstructed-vector
-    dot products shortlist, and the exact cosine re-rank touches the
-    vectors file for queries × shortlist rows only.  Bit-identical to
-    the in-memory :func:`ivfsq8_topk` under the manifest's frozen
-    stats + pivots; tombstoned ids stop ranking immediately and
-    replayed appends dedup at both the code and vector reads.
-
-    Precondition (ADVICE r18 #2): the ``queries`` plan must be
-    DETERMINISTIC — its probe assignment is collected once for the
-    partition-pruning predicate while the scoring side recomputes it
-    lazily, and a nondeterministic query source (e.g. a fresh
-    ``rand()`` column) could assign to pivots outside the collected
-    set and silently lose candidates.  Every registered lane feeds
-    deterministic parquet-derived query batches.
-    """
-    import os
-
-    meta = _read_ivfsq8_meta(index_path)
-    id_col = meta["id_col"]
-    spark = queries.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    # collect feeds only the pruning predicate; the scoring side reuses
-    # the keep_cols-carrying assignment lazily (deterministic recompute,
-    # no join back to queries)
-    q_assigned = ivf_assign(
-        queries, pivots, nprobe, query_id_col, vec_col, keep_cols=(vec_col,)
-    )
-    probed = sorted({
-        r["pivot_id"]
-        for r in q_assigned.select("pivot_id").collect()
-    })
-    codes = (
-        spark.read.parquet(os.path.join(index_path, "codes"))
-        .filter(F.col("pivot_id").isin(probed))
-        .dropDuplicates([id_col, "pivot_id"])
-    )
-    codes = index_maintenance.exclude_tombstoned(
-        codes, index_path, id_col, id_col
-    )
-    q = q_assigned.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec"), "pivot_id"
-    )
-    scored = codes.join(F.broadcast(q), "pivot_id")
-    if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    scored = scored.withColumn(
-        "__approx",
-        _dot(F.col("__qvec"),
-             _sq8_recon("sq8_code", meta["mins"], meta["steps"])),
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__approx"
-    ).select(query_id_col, id_col)
-    # replay-guard dedup happens inside the re-rank AFTER the shortlist
-    # join (bounded by queries × shortlist, never the whole vectors table)
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    # queries re-enter under the INDEX's vec_col name so the re-rank reads
-    # both sides through one column contract
-    q_rerank = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias(meta["vec_col"])
-    )
-    return _exact_cosine_rerank(
-        sl, vectors, q_rerank, k, id_col, meta["vec_col"], query_id_col,
-        dedup_ids=True,
-    )
-
-
 def matryoshka_ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -3131,197 +2126,6 @@ def matryoshka_ivf_topk(
     ).select(query_id_col, id_col)
     return _exact_cosine_rerank(
         sl, corpus, queries, k, id_col, vec_col, query_id_col
-    )
-
-
-_MATRYOSHKA_INDEX_VERSION = 1
-
-
-def build_matryoshka_index(
-    corpus: DataFrame,
-    path: str,
-    prefix_dims: int = 16,
-    modulus: int = 37,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Materialize the ANN-prefix matryoshka artifact — the layout that
-    makes :func:`matryoshka_ivf_topk`'s per-call assignment a build-time
-    cost: ``{path}/lists`` holds ``(id, prefix)`` rows **hive-partitioned
-    by prefix-IVF list** (a probe reads ~nprobe/P of rows that already
-    carry only prefix_dims/dim of the coordinates), ``{path}/pivots`` the
-    prefix centroids, ``{path}/vectors`` the FULL vectors read only for
-    the shortlist re-rank, and ``meta.json`` pinning ``prefix_dims`` —
-    prefixes are only comparable under the exact truncation and pivot set
-    that bucketed them, so the reader takes neither as arguments (the
-    frozen-manifest discipline of every sibling artifact).  Staged +
-    one-rename promote, crash-safe like the other builders."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    cpre = corpus.select(
-        F.col(id_col), F.slice(F.col(vec_col), 1, prefix_dims).alias("__pre")
-    )
-    pivots = ivf_pivots(cpre, id_col, "__pre", modulus)
-    lists = (
-        ivf_assign(cpre, pivots, 1, id_col, "__pre", keep_cols=("__pre",))
-        .select(F.col(id_col), F.col("__pre").alias("prefix"), "pivot_id")
-        .repartition("pivot_id")
-    )
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    lists.write.mode("overwrite").partitionBy("pivot_id").parquet(
-        os.path.join(stage, "lists")
-    )
-    pivots.withColumnRenamed("pivot_vec", "prefix_vec").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "pivots"))
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _MATRYOSHKA_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "modulus": modulus,
-        "prefix_dims": prefix_dims,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def _read_matryoshka_meta(index_path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if (
-        meta.get("version") != _MATRYOSHKA_INDEX_VERSION
-        or "prefix_dims" not in meta
-    ):
-        raise ValueError(
-            f"unsupported matryoshka index manifest: {sorted(meta)}"
-        )
-    return meta
-
-
-def append_to_matryoshka_index(new_vectors: DataFrame, index_path: str) -> str:
-    """Grow the artifact under the FROZEN manifest: new vectors truncate
-    to the stored ``prefix_dims`` and assign against the STORED prefix
-    pivots (no re-bucketing — drift means an explicit rebuild).  Vectors
-    append FIRST, list rows second (the PQ lesson, ADVICE r7): a vector
-    without a list row is merely unscored, a list row without its vector
-    would shortlist and then vanish at the re-rank join."""
-    import os
-
-    meta = _read_matryoshka_meta(index_path)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    spark = new_vectors.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots")).select(
-        "pivot_id", F.col("prefix_vec").alias("pivot_vec")
-    )
-    cpre = new_vectors.select(
-        F.col(id_col),
-        F.slice(F.col(vec_col), 1, meta["prefix_dims"]).alias("__pre"),
-    )
-    lists = (
-        ivf_assign(cpre, pivots, 1, id_col, "__pre", keep_cols=("__pre",))
-        .select(F.col(id_col), F.col("__pre").alias("prefix"), "pivot_id")
-        .repartition("pivot_id")
-    )
-    new_vectors.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-    lists.write.mode("append").partitionBy("pivot_id").parquet(
-        os.path.join(index_path, "lists")
-    )
-    return index_path
-
-
-def matryoshka_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    nprobe: int = 12,
-    shortlist: int = 40,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Query a :func:`build_matryoshka_index` artifact reading ONLY the
-    probed prefix lists (static partition pruning on ``pivot_id``):
-    query prefixes assign against the stored pivots (bounded
-    |queries| × nprobe collect), prefix cosine scores the pruned list
-    rows, and the exact full-dimension re-rank touches the vectors file
-    for queries × shortlist rows only.  Bit-identical to the in-memory
-    :func:`matryoshka_ivf_topk` under the manifest's frozen
-    prefix_dims + pivots; tombstoned ids stop ranking immediately and
-    replayed appends dedup at both reads.
-
-    Precondition (ADVICE r18 #2): the ``queries`` plan must be
-    DETERMINISTIC — its probe assignment is collected once for the
-    partition-pruning predicate while the scoring side recomputes it
-    lazily, and a nondeterministic query source (e.g. a fresh
-    ``rand()`` column) could assign to pivots outside the collected
-    set and silently lose candidates.  Every registered lane feeds
-    deterministic parquet-derived query batches.
-    """
-    import os
-
-    meta = _read_matryoshka_meta(index_path)
-    id_col = meta["id_col"]
-    spark = queries.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots")).select(
-        "pivot_id", F.col("prefix_vec").alias("pivot_vec")
-    )
-    qpre = queries.select(
-        F.col(query_id_col),
-        F.slice(F.col(vec_col), 1, meta["prefix_dims"]).alias("__qpre"),
-    )
-    # collect feeds only the pruning predicate; the scoring side reuses
-    # the keep_cols-carrying assignment lazily (deterministic recompute,
-    # no join back to the query prefixes)
-    q_assigned = ivf_assign(
-        qpre, pivots, nprobe, query_id_col, "__qpre", keep_cols=("__qpre",)
-    )
-    probed = sorted({
-        r["pivot_id"]
-        for r in q_assigned.select("pivot_id").collect()
-    })
-    lists = (
-        spark.read.parquet(os.path.join(index_path, "lists"))
-        .filter(F.col("pivot_id").isin(probed))
-        .dropDuplicates([id_col, "pivot_id"])
-    )
-    lists = index_maintenance.exclude_tombstoned(
-        lists, index_path, id_col, id_col
-    )
-    q = q_assigned.select(query_id_col, "__qpre", "pivot_id")
-    scored = lists.join(F.broadcast(q), "pivot_id")
-    if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    scored = scored.withColumn(
-        "__pcos",
-        _dot(F.col("__qpre"), F.col("prefix"))
-        / (_norm(F.col("__qpre")) * _norm(F.col("prefix"))),
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__pcos"
-    ).select(query_id_col, id_col)
-    # replay-guard dedup happens inside the re-rank AFTER the shortlist
-    # join (bounded by queries × shortlist, never the whole vectors table)
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    q_rerank = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias(meta["vec_col"])
-    )
-    return _exact_cosine_rerank(
-        sl, vectors, q_rerank, k, id_col, meta["vec_col"], query_id_col,
-        dedup_ids=True,
     )
 
 
@@ -3520,188 +2324,6 @@ def ivfbq_topk(
     ).select(query_id_col, id_col)
     return _exact_cosine_rerank(
         sl, corpus, queries, k, id_col, vec_col, query_id_col
-    )
-
-
-_IVFBQ_INDEX_VERSION = 1
-
-
-def build_ivfbq_index(
-    corpus: DataFrame,
-    path: str,
-    modulus: int = 37,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    thresholds: list[float] | None = None,
-) -> str:
-    """Materialize the IVF-BQ artifact: packed 1-bit codes
-    **hive-partitioned by inverted list** (``{path}/codes`` under
-    ``pivot_id=`` dirs), the coarse pivots (``{path}/pivots``), raw
-    vectors for the shortlist re-rank only (``{path}/vectors``), and
-    ``meta.json`` pinning the per-dimension thresholds — codes are only
-    meaningful under the exact thresholds AND pivot set that produced
-    them (the frozen-manifest discipline of every builder in the
-    family).  A probe reads ~nprobe/P of code bytes that are 32×
-    smaller than floats, via static partition pruning.  Staged +
-    one-rename promote, crash-safe like every other index builder."""
-    import json
-    import os
-    import uuid
-
-    from ..sources.writers import atomic_dir_swap
-
-    pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    if thresholds is None:
-        thresholds = bq_thresholds(corpus, vec_col)
-    codes = (
-        bq_encode(
-            ivf_assign(corpus, pivots, 1, id_col, vec_col,
-                       keep_cols=(vec_col,)),
-            thresholds, vec_col, out="bq_code",
-        )
-        .select(id_col, "bq_code", "pivot_id")
-        .repartition("pivot_id")
-    )
-    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
-    codes.write.mode("overwrite").partitionBy("pivot_id").parquet(
-        os.path.join(stage, "codes")
-    )
-    pivots.write.mode("overwrite").parquet(os.path.join(stage, "pivots"))
-    corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "vectors"))
-    meta = {
-        "version": _IVFBQ_INDEX_VERSION,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "modulus": modulus,
-        "thresholds": thresholds,
-    }
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    atomic_dir_swap(stage, path.rstrip("/"))
-    return path
-
-
-def _read_ivfbq_meta(index_path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(index_path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _IVFBQ_INDEX_VERSION or "thresholds" not in meta:
-        raise ValueError(f"unsupported ivfbq index manifest: {sorted(meta)}")
-    return meta
-
-
-def append_to_ivfbq_index(new_vectors: DataFrame, index_path: str) -> str:
-    """Grow the IVF-BQ artifact under the FROZEN manifest: new vectors
-    assign against the STORED pivots and binarize against the STORED
-    thresholds (out-of-distribution values still land on one side of the
-    midpoint — graceful accuracy decay instead of re-deriving stats that
-    would invalidate every standing code; drift means an explicit
-    rebuild).  Vectors append FIRST, codes second (the PQ lesson,
-    ADVICE r7): a vector without a code is merely unscored, a code
-    without its vector would shortlist and then vanish at the
-    re-rank join."""
-    import os
-
-    meta = _read_ivfbq_meta(index_path)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    spark = new_vectors.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    codes = (
-        bq_encode(
-            ivf_assign(new_vectors, pivots, 1, id_col, vec_col,
-                       keep_cols=(vec_col,)),
-            meta["thresholds"], vec_col, out="bq_code",
-        )
-        .select(id_col, "bq_code", "pivot_id")
-        .repartition("pivot_id")
-    )
-    new_vectors.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-    codes.write.mode("append").partitionBy("pivot_id").parquet(
-        os.path.join(index_path, "codes")
-    )
-    return index_path
-
-
-def ivfbq_topk_against_index(
-    queries: DataFrame,
-    index_path: str,
-    k: int = 10,
-    nprobe: int = 12,
-    shortlist: int = 40,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Query a :func:`build_ivfbq_index` artifact reading ONLY the probed
-    lists' code partitions: queries assign against the stored pivots
-    (bounded |queries| × nprobe collect, the IVF-reader contract), the
-    code scan is restricted by static partition pruning
-    (``PartitionFilters: [pivot_id IN (...)]``), Hamming over packed
-    words shortlists, and the exact cosine re-rank touches the vectors
-    file for queries × shortlist rows only.  Bit-identical to the
-    in-memory :func:`ivfbq_topk` under the manifest's frozen
-    thresholds + pivots; tombstoned ids stop ranking immediately and
-    replayed appends dedup at both the code and vector reads.
-
-    Precondition (ADVICE r18 #2): the ``queries`` plan must be
-    DETERMINISTIC — its probe assignment is collected once for the
-    partition-pruning predicate while the scoring side recomputes it
-    lazily, and a nondeterministic query source (e.g. a fresh
-    ``rand()`` column) could assign to pivots outside the collected
-    set and silently lose candidates.  Every registered lane feeds
-    deterministic parquet-derived query batches.
-    """
-    import os
-
-    meta = _read_ivfbq_meta(index_path)
-    id_col = meta["id_col"]
-    spark = queries.sparkSession
-    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
-    # collect feeds only the pruning predicate; the scoring side reuses
-    # the keep_cols-carrying assignment lazily (deterministic recompute,
-    # no join back to queries)
-    q_assigned = ivf_assign(
-        queries, pivots, nprobe, query_id_col, vec_col, keep_cols=(vec_col,)
-    )
-    probed = sorted({
-        r["pivot_id"]
-        for r in q_assigned.select("pivot_id").collect()
-    })
-    codes = (
-        spark.read.parquet(os.path.join(index_path, "codes"))
-        .filter(F.col("pivot_id").isin(probed))
-        .dropDuplicates([id_col, "pivot_id"])
-    )
-    codes = index_maintenance.exclude_tombstoned(
-        codes, index_path, id_col, id_col
-    )
-    q = bq_encode(
-        q_assigned, meta["thresholds"], vec_col, out="__qcode"
-    ).select(F.col(query_id_col), "__qcode", "pivot_id")
-    scored = codes.join(F.broadcast(q), "pivot_id")
-    if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    scored = scored.withColumn(
-        "__negham", -bq_hamming("__qcode", "bq_code")
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negham"
-    ).select(query_id_col, id_col)
-    # replay-guard dedup happens inside the re-rank AFTER the shortlist
-    # join (bounded by queries × shortlist, never the whole vectors table)
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    q_rerank = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias(meta["vec_col"])
-    )
-    return _exact_cosine_rerank(
-        sl, vectors, q_rerank, k, id_col, meta["vec_col"], query_id_col,
-        dedup_ids=True,
     )
 
 
@@ -4040,6 +2662,915 @@ def ivf_drift_report(
     )
 
 
+
+# ---------------------------------------------------------------------------
+# On-disk index artifacts: one lifecycle, one codec per family
+# ---------------------------------------------------------------------------
+#
+# Every vector-index family materializes the same shape — a frozen
+# manifest (``meta.json``) pinning the quantizer, a primary table of
+# codes, optional coarse ``pivots`` and a ``vectors`` re-rank store — and
+# runs the same three operations over it (REPOSE-style: a local index per
+# inverted list plus global pruning on the probed lists).  The lifecycle
+# below owns those operations; an :class:`IndexCodec` per family holds
+# only what differs.  ``index_maintenance`` (delete / compact / rebuild /
+# health) and ``streaming.index_stream`` dispatch through the same table.
+
+#: Layout version every index manifest carries; readers refuse others.
+_INDEX_VERSION = 1
+
+
+@dataclass(frozen=True)
+class IndexCodec:
+    """What one index family adds to the shared artifact lifecycle.
+
+    * ``keys`` — manifest keys that identify the family; the most
+      specific match wins (ivfpq's ``modulus`` + ``codebooks`` over pq's
+      ``codebooks``).
+    * ``tables`` — stored tables, primary first; ``"vectors"`` is the
+      full-vector re-rank store.  ``key`` is the primary table's natural
+      key beyond the id (what compaction and health dedup on);
+      ``("pivot_id",)`` marks a coarse family, whose primary table is
+      hive-partitioned by inverted list beside a ``pivots`` table.
+    * ``train(corpus, id_col, vec_col, **params)`` → ``(manifest params,
+      pivots or None)``; ``retrain(meta)`` → the params a drift rebuild
+      re-derives from a manifest (None: the family has no rebuild).
+    * ``encode(df, meta, pivots)`` → primary-table rows under the frozen
+      manifest (build and append share it).
+    * ``space(vec, meta)`` — the quantizer's vector space when it is not
+      the full vector (matryoshka prefixes); ``pivot_col`` names the
+      stored pivot vectors.
+    * ``scan(table, meta)`` / ``query(q, meta, pivots, query_id_col,
+      vec_col, n_probes)`` — the two sides of the probe join (coarse
+      families join on ``pivot_id``, lsh on ``join_on``, flat ones cross).
+    * ``score`` — ``(column, expr(meta))`` ranked per query, or None for
+      set-membership candidates (lsh).
+    * ``rerank`` — ``"l2"`` / ``"cosine"``: the score only shortlists and
+      exact distances over ``vectors`` rank; None: the score ranks.
+    * ``appendable`` — the family takes appends (lsh does not: its probe
+      never dedups ``vectors``, so a replayed append would duplicate
+      candidates).
+    * ``id_first`` spells the exclude-self predicate ``id != query_id``
+      (the PQ families' operand order, which their probe plans carry).
+    """
+
+    family: str
+    keys: tuple[str, ...]
+    tables: tuple[str, ...]
+    key: tuple[str, ...] = ("pivot_id",)
+    train: Callable | None = None
+    retrain: Callable | None = None
+    encode: Callable | None = None
+    space: Callable | None = None
+    pivot_col: str = "pivot_vec"
+    scan: Callable | None = None
+    query: Callable | None = None
+    join_on: list[str] | None = None
+    score: tuple[str, Callable] | None = None
+    rerank: str | None = None
+    appendable: bool = True
+    id_first: bool = False
+
+    @property
+    def coarse(self) -> bool:
+        return self.key == ("pivot_id",)
+
+
+def _coarse_pivots(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    modulus: int,
+    kmeans_iters: int = 0,
+    sample_fraction: float | None = None,
+) -> DataFrame:
+    """The coarse quantizer's training step: k-means when ``kmeans_iters``
+    is set, else the fixed ``modulus`` stride."""
+    if kmeans_iters > 0:
+        return kmeans_pivots(
+            corpus, iters=kmeans_iters, modulus=modulus, id_col=id_col,
+            vec_col=vec_col, sample_fraction=sample_fraction,
+        )
+    return ivf_pivots(corpus, id_col, vec_col, modulus)
+
+
+def _assigned(df: DataFrame, meta: dict, pivots: DataFrame) -> DataFrame:
+    """Rows assigned to their nearest stored pivot, vector carried."""
+    v = meta["vec_col"]
+    return ivf_assign(df, pivots, 1, meta["id_col"], v, keep_cols=(v,))
+
+
+def _prefix(vec: Column, meta: dict) -> Column:
+    return F.slice(vec, 1, meta["prefix_dims"])
+
+
+def _train_lsh(corpus, id_col, vec_col, tables):
+    _lsh_planes(tables)
+    return {"tables": tables}, None
+
+
+def _train_pq(corpus, id_col, vec_col, codebooks):
+    if not codebooks or not codebooks[0]:
+        raise ValueError("codebooks must be non-empty")
+    if any(len(b) != len(codebooks[0]) for b in codebooks):
+        raise ValueError("all subspace codebooks must have the same code count")
+    return {"codebooks": codebooks}, None
+
+
+def _train_ivfpq(
+    corpus, id_col, vec_col, modulus=37, n_subspaces=16, n_codes=16, iters=1
+):
+    pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
+    codebooks = pq_codebooks_kmeans(
+        residual_frame(corpus, pivots, id_col, vec_col),
+        n_subspaces=n_subspaces, n_codes=n_codes, iters=iters,
+        id_col=id_col, vec_col=vec_col,
+    )
+    return {"modulus": modulus, "codebooks": codebooks}, pivots
+
+
+def _encode_ivfpq(df, meta, pivots):
+    """Residual codes under the stored codebooks, keyed by list."""
+    i = meta["id_col"]
+    res = residual_frame(df, pivots, i, meta["vec_col"])
+    return pq_encode(res, meta["codebooks"], i, meta["vec_col"]).join(
+        res.select(i, "pivot_id"), i
+    )
+
+
+def _train_matryoshka(corpus, id_col, vec_col, prefix_dims=16, modulus=37):
+    meta = {"modulus": modulus, "prefix_dims": prefix_dims}
+    pre = corpus.select(
+        F.col(id_col), _prefix(F.col(vec_col), meta).alias("__pre")
+    )
+    return meta, ivf_pivots(pre, id_col, "__pre", modulus)
+
+
+def _encode_matryoshka(df, meta, pivots):
+    i = meta["id_col"]
+    pre = df.select(F.col(i), _prefix(F.col(meta["vec_col"]), meta).alias("__pre"))
+    return ivf_assign(pre, pivots, 1, i, "__pre", keep_cols=("__pre",)).select(
+        F.col(i), F.col("__pre").alias("prefix"), "pivot_id"
+    )
+
+
+def _lut_query(q, meta, pivots, qid, vec_col, n_probes):
+    """Per-query ADC LUTs; on a coarse probe one per (query, probed list)
+    over the residual ``q − pivot``."""
+    sub = _pq_subdists_kernel(meta["codebooks"])
+    if pivots is None:
+        return q.select(F.col(qid), sub(F.col(vec_col)).alias("__lut"))
+    return q.join(F.broadcast(pivots), "pivot_id").select(
+        qid,
+        "pivot_id",
+        sub(
+            F.zip_with(
+                _as_double(vec_col), _as_double("pivot_vec"), lambda x, y: x - y
+            )
+        ).alias("__lut"),
+    )
+
+
+def _cosine(a: str, b: str, na: Column, nb: Column) -> Column:
+    return _dot(F.col(a), F.col(b)) / (na * nb)
+
+
+_ADC = (
+    "__negd",
+    lambda m: -_adc_score_kernel(len(m["codebooks"]), len(m["codebooks"][0]))(
+        F.col("pq_code"), F.col("__lut")
+    ),
+)
+_SQ8 = (
+    "__approx",
+    lambda m: _dot(F.col("__qvec"), _sq8_recon("sq8_code", m["mins"], m["steps"])),
+)
+
+
+def _sq8_params(corpus, vec_col, stats):
+    mins, steps = stats if stats is not None else sq8_stats(corpus, vec_col)
+    return {"mins": mins, "steps": steps}
+
+
+def _train_ivfbq(corpus, id_col, vec_col, modulus=37, thresholds=None):
+    if thresholds is None:
+        thresholds = bq_thresholds(corpus, vec_col)
+    return (
+        {"modulus": modulus, "thresholds": thresholds},
+        ivf_pivots(corpus, id_col, vec_col, modulus),
+    )
+
+
+def _qvec(*keep: str):
+    return lambda q, m, p, qid, vec_col, n: q.select(
+        F.col(qid), F.col(vec_col).alias("__qvec"), *keep
+    )
+
+
+#: The one list of index families — everything a family's layout, training,
+#: encoding, probing and maintenance needs beyond the shared lifecycle.
+CODECS: dict[str, IndexCodec] = {
+    c.family: c
+    for c in (
+        IndexCodec(
+            "ivf", ("modulus",), ("lists",),
+            train=lambda c, i, v, modulus=37, kmeans_iters=0, sample_fraction=None: (
+                {"modulus": modulus, "kmeans_iters": kmeans_iters},
+                _coarse_pivots(c, i, v, modulus, kmeans_iters, sample_fraction),
+            ),
+            retrain=lambda m: {
+                "modulus": m["modulus"], "kmeans_iters": m.get("kmeans_iters", 0)
+            },
+            encode=lambda df, m, p: _assigned(df, m, p).select(
+                F.col(m["id_col"]), F.col(m["vec_col"]), "pivot_id"
+            ),
+            scan=lambda t, m: t.select(
+                F.col(m["id_col"]), F.col("pivot_id"),
+                F.col(m["vec_col"]).alias("__cvec"),
+            ).withColumn("__cnorm", _norm(F.col("__cvec"))),
+            query=lambda q, m, p, qid, vec_col, n: q.select(
+                F.col(qid), F.col(vec_col).alias("__qvec"), "pivot_id"
+            ).withColumn("__qnorm", _norm(F.col("__qvec"))),
+            score=(
+                "cosine",
+                lambda m: _cosine(
+                    "__qvec", "__cvec", F.col("__qnorm"), F.col("__cnorm")
+                ),
+            ),
+        ),
+        IndexCodec(
+            "lsh", ("tables",), ("buckets", "vectors"), key=("table_id",),
+            train=_train_lsh,
+            encode=lambda df, m, p: _lsh_buckets(
+                df, m["tables"], m["id_col"], m["vec_col"]
+            ),
+            query=lambda q, m, p, qid, vec_col, n: _lsh_probes(
+                q.select(F.col(qid), F.col(vec_col).alias("__qvec")),
+                m["tables"], n, qid,
+            ),
+            join_on=["table_id", "bucket"],
+            rerank="cosine",
+            appendable=False,
+        ),
+        IndexCodec(
+            "pq", ("codebooks",), ("codes", "vectors"), key=(),
+            train=_train_pq,
+            encode=lambda df, m, p: pq_encode(
+                df, m["codebooks"], m["id_col"], m["vec_col"]
+            ),
+            query=_lut_query, score=_ADC, rerank="l2", id_first=True,
+        ),
+        IndexCodec(
+            "sq8", ("mins", "steps"), ("codes", "vectors"), key=(),
+            train=lambda c, i, v, stats=None: (_sq8_params(c, v, stats), None),
+            encode=lambda df, m, p: sq8_encode(
+                df, m["mins"], m["steps"], m["vec_col"], out="sq8_code"
+            ).select(F.col(m["id_col"]), "sq8_code"),
+            query=_qvec(), score=_SQ8, rerank="cosine",
+        ),
+        IndexCodec(
+            "ivfpq", ("modulus", "codebooks"), ("codes", "vectors"),
+            train=_train_ivfpq,
+            retrain=lambda m: {
+                "modulus": m["modulus"],
+                "n_subspaces": len(m["codebooks"]),
+                "n_codes": len(m["codebooks"][0]),
+            },
+            encode=_encode_ivfpq, query=_lut_query, score=_ADC, rerank="l2",
+            id_first=True,
+        ),
+        IndexCodec(
+            "ivfsq8", ("modulus", "mins", "steps"), ("codes", "vectors"),
+            train=lambda c, i, v, modulus=37, stats=None: (
+                {"modulus": modulus, **_sq8_params(c, v, stats)},
+                ivf_pivots(c, i, v, modulus),
+            ),
+            retrain=lambda m: {"modulus": m["modulus"]},
+            encode=lambda df, m, p: sq8_encode(
+                _assigned(df, m, p), m["mins"], m["steps"], m["vec_col"],
+                out="sq8_code",
+            ).select(m["id_col"], "sq8_code", "pivot_id"),
+            query=_qvec("pivot_id"), score=_SQ8, rerank="cosine",
+        ),
+        IndexCodec(
+            "matryoshka", ("modulus", "prefix_dims"), ("lists", "vectors"),
+            train=_train_matryoshka,
+            retrain=lambda m: {
+                "prefix_dims": m["prefix_dims"], "modulus": m["modulus"]
+            },
+            encode=_encode_matryoshka,
+            space=_prefix,
+            pivot_col="prefix_vec",
+            query=lambda q, m, p, qid, vec_col, n: q.select(
+                qid, "__qpre", "pivot_id"
+            ),
+            score=(
+                "__pcos",
+                lambda m: _cosine(
+                    "__qpre", "prefix",
+                    _norm(F.col("__qpre")), _norm(F.col("prefix")),
+                ),
+            ),
+            rerank="cosine",
+        ),
+        IndexCodec(
+            "ivfbq", ("modulus", "thresholds"), ("codes", "vectors"),
+            train=_train_ivfbq,
+            retrain=lambda m: {"modulus": m["modulus"]},
+            encode=lambda df, m, p: bq_encode(
+                _assigned(df, m, p), m["thresholds"], m["vec_col"],
+                out="bq_code",
+            ).select(m["id_col"], "bq_code", "pivot_id"),
+            query=lambda q, m, p, qid, vec_col, n: bq_encode(
+                q, m["thresholds"], vec_col, out="__qcode"
+            ).select(F.col(qid), "__qcode", "pivot_id"),
+            score=("__negham", lambda m: -bq_hamming("__qcode", "bq_code")),
+            rerank="cosine",
+        ),
+        # operators.dedup builds and probes MinHash artifacts; maintenance
+        # only needs their layout.
+        IndexCodec(
+            "minhash", ("num_hashes",), ("bands", "shingles"), key=("band",),
+            appendable=False,
+        ),
+    )
+}
+
+
+def read_manifest(
+    index_path: str, family: str | None = None
+) -> tuple[dict, IndexCodec]:
+    """The artifact's frozen manifest and its family's codec — the one
+    manifest reader every index path (probe, append, maintenance,
+    streaming, drift report) goes through.  Refuses a manifest no codec
+    recognizes, one of another family than ``family`` (when given), and
+    any layout version but :data:`_INDEX_VERSION`."""
+    with open(os.path.join(index_path, "meta.json")) as f:
+        meta = json.load(f)
+    fits = [c for c in CODECS.values() if set(c.keys) <= set(meta)]
+    if not fits:
+        raise ValueError(f"unrecognized index manifest: {sorted(meta)}")
+    codec = max(fits, key=lambda c: len(c.keys))
+    if family is not None and codec.family != family:
+        raise ValueError(f"unsupported {family} index manifest: {sorted(meta)}")
+    if meta.get("version") != _INDEX_VERSION:
+        raise ValueError(
+            f"unsupported {codec.family} index version: {meta.get('version')}"
+        )
+    return meta, codec
+
+
+def _read_pivots(spark, index_path: str, codec: IndexCodec) -> DataFrame:
+    pivots = spark.read.parquet(os.path.join(index_path, "pivots"))
+    if codec.pivot_col == "pivot_vec":
+        return pivots
+    return pivots.select("pivot_id", F.col(codec.pivot_col).alias("pivot_vec"))
+
+
+def _write_table(rows: DataFrame, path: str, by_list: bool, mode: str) -> None:
+    """Write one artifact table.  A coarse family's primary table is
+    hive-partitioned by ``pivot_id`` — one directory (one file, via the
+    pre-write repartition) per inverted list — so a probe's
+    ``pivot_id IN (...)`` predicate prunes unprobed lists at planning
+    time and query cost scales with nprobe/P of the corpus."""
+    if by_list:
+        rows = rows.repartition("pivot_id")
+    w = rows.write.mode(mode)
+    if by_list:
+        w = w.partitionBy("pivot_id")
+    w.parquet(path)
+
+
+def _build_artifact(
+    family: str,
+    corpus: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    **params,
+) -> str:
+    """Build: train the codec, then stage the whole artifact — the codec's
+    table, ``pivots``, ``vectors``, ``meta.json`` — and promote it with one
+    directory rename (``atomic_dir_swap``), so a crashed rebuild never
+    leaves readers codes of one quantizer beside another's manifest."""
+    codec = CODECS[family]
+    extra, pivots = codec.train(corpus, id_col, vec_col, **params)
+    meta = {"version": _INDEX_VERSION, "id_col": id_col, "vec_col": vec_col,
+            **extra}
+    stage = f"{path.rstrip('/')}.__stage_{uuid.uuid4().hex[:8]}"
+    _write_table(
+        codec.encode(corpus, meta, pivots),
+        os.path.join(stage, codec.tables[0]), codec.coarse, "overwrite",
+    )
+    if pivots is not None:
+        pivots.withColumnRenamed("pivot_vec", codec.pivot_col).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "pivots"))
+    if "vectors" in codec.tables:
+        corpus.select(F.col(id_col), F.col(vec_col)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "vectors"))
+    with open(os.path.join(stage, "meta.json"), "w") as f:
+        json.dump(meta, f)
+    atomic_dir_swap(stage, path.rstrip("/"))
+    return path
+
+
+def _append_artifact(
+    new_vectors: DataFrame, index_path: str, family: str | None = None
+) -> str:
+    """Append under the FROZEN manifest: new rows assign against the
+    stored pivots and encode under the stored quantizer (nothing
+    retrains; drift means an explicit rebuild), standing rows are never
+    rewritten.  Vectors append FIRST, codes second (ADVICE r7): a vector
+    without a code is merely unscored until a replay completes, while a
+    code without its vector would shortlist and then vanish at the
+    re-rank join, displacing a valid candidate.  The append is
+    at-least-once; every probe dedups replayed rows and
+    ``index_maintenance.compact_index`` reclaims them."""
+    meta, codec = read_manifest(index_path, family)
+    spark = new_vectors.sparkSession
+    pivots = _read_pivots(spark, index_path, codec) if codec.coarse else None
+    rows = codec.encode(new_vectors, meta, pivots)
+    if "vectors" in codec.tables:
+        new_vectors.select(F.col(meta["id_col"]), F.col(meta["vec_col"])).write.mode(
+            "append"
+        ).parquet(os.path.join(index_path, "vectors"))
+    _write_table(
+        rows, os.path.join(index_path, codec.tables[0]), codec.coarse, "append"
+    )
+    return index_path
+
+
+def _probe_artifact(
+    queries: DataFrame,
+    index_path: str,
+    family: str,
+    k: int,
+    query_id_col: str,
+    vec_col: str,
+    exclude_self: bool = True,
+    nprobe: int | None = None,
+    shortlist: int | None = None,
+    n_probes: int = 0,
+) -> DataFrame:
+    """Probe: frozen-manifest read → (coarse) query assignment against
+    the stored pivots and ``pivot_id IN (...)`` pruning of the codec's
+    table → replay dedup → tombstone exclusion → the codec's score,
+    shortlisted per query by :func:`grouped_topk` → the codec's re-rank
+    (exact L2 or exact cosine over ``vectors``, or none).
+
+    The probed-list collect is bounded by |queries| × nprobe rows (the
+    query batch is small by contract) and feeds ONLY the pruning
+    predicate; the scoring side recomputes the assignment lazily.
+    Precondition (ADVICE r18 #2): the ``queries`` plan must therefore be
+    DETERMINISTIC — a nondeterministic source (e.g. a fresh ``rand()``
+    column) could assign to pivots outside the collected set and
+    silently lose candidates.
+
+    Replay dedup: coarse tables dedup per (id, list) over the probed
+    lists only and the re-rank dedups after its shortlist join (both
+    bounded); flat appendable artifacts dedup both tables per id; lsh has
+    no append and dedups its candidate pairs.  Queries enter the re-rank
+    under the index's ``vec_col``, whatever the caller's column is
+    named."""
+    meta, codec = read_manifest(index_path, family)
+    id_col = meta["id_col"]
+    spark = queries.sparkSession
+    table = spark.read.parquet(os.path.join(index_path, codec.tables[0]))
+    q, pivots = queries, None
+    if codec.coarse:
+        pivots = _read_pivots(spark, index_path, codec)
+        qcol = vec_col
+        if codec.space is not None:
+            qcol = "__qpre"
+            q = q.select(
+                F.col(query_id_col), codec.space(F.col(vec_col), meta).alias(qcol)
+            )
+        q = ivf_assign(q, pivots, nprobe, query_id_col, qcol, keep_cols=(qcol,))
+        probed = sorted({r["pivot_id"] for r in q.select("pivot_id").collect()})
+        table = table.filter(F.col("pivot_id").isin(probed))
+    if codec.appendable:
+        table = table.dropDuplicates([id_col, *codec.key])
+    # deleted vectors stop ranking immediately (physical removal happens
+    # at the next index_maintenance.compact_index)
+    table = index_maintenance.exclude_tombstoned(table, index_path, id_col, id_col)
+    if codec.scan is not None:
+        table = codec.scan(table, meta)
+    on = "pivot_id" if codec.coarse else codec.join_on
+    scored = table.join(
+        F.broadcast(codec.query(q, meta, pivots, query_id_col, vec_col, n_probes)),
+        on, "inner" if on else "cross",
+    )
+    if codec.score is None:
+        scored = scored.select(query_id_col, id_col).distinct()
+    if exclude_self:
+        a, b = (id_col, query_id_col) if codec.id_first else (query_id_col, id_col)
+        scored = scored.filter(F.col(a) != F.col(b))
+    if codec.score is not None:
+        name, expr = codec.score
+        ranked = grouped_topk(
+            scored.withColumn(name, expr(meta)), query_id_col, id_col,
+            shortlist if codec.rerank else k, score_col=name,
+        )
+        if codec.rerank is None:
+            return ranked
+        scored = ranked.select(query_id_col, id_col)
+    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
+    if codec.appendable and not codec.coarse:
+        vectors = vectors.dropDuplicates([id_col])
+    rerank = _exact_l2_rerank if codec.rerank == "l2" else _exact_cosine_rerank
+    return rerank(
+        scored, vectors,
+        queries.select(F.col(query_id_col), F.col(vec_col).alias(meta["vec_col"])),
+        k, id_col, meta["vec_col"], query_id_col, dedup_ids=codec.coarse,
+    )
+
+
+def _artifact_drift_report(
+    spark,
+    index_path: str,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    query_id_col: str,
+    family: str | None = None,
+) -> DataFrame:
+    """:func:`ivf_drift_report` in the artifact's quantizer space: the
+    stored pivots are the stale side, the live full-vector store (deduped
+    per id — appends are at-least-once) is the corpus, and the fresh side
+    retrains pivots on it with the manifest's recipe."""
+    meta, codec = read_manifest(index_path, family)
+    if not codec.coarse:
+        raise ValueError(
+            f"{index_path}: manifest has no coarse-quantizer modulus — "
+            "not a coarse-quantized index artifact"
+        )
+    if codec.space is not None and family is None:
+        raise ValueError(
+            f"{index_path}: {codec.family} pivots live in prefix-space — a "
+            "full-dim drift report would silently zip-truncate every "
+            "distance; run matryoshka_drift_report instead"
+        )
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    space = codec.space or (lambda v, m: v)
+    src = "vectors" if "vectors" in codec.tables else codec.tables[0]
+    corpus = (
+        spark.read.parquet(os.path.join(index_path, src))
+        .select(F.col(id_col), space(F.col(vec_col), meta).alias(vec_col))
+        .dropDuplicates([id_col])
+    )
+    if codec.space is not None:
+        queries = queries.select(
+            F.col(query_id_col), space(F.col(vec_col), meta).alias(vec_col)
+        )
+    fresh = _coarse_pivots(
+        corpus, id_col, vec_col, meta["modulus"], meta.get("kmeans_iters", 0)
+    )
+    return ivf_drift_report(
+        corpus, _read_pivots(spark, index_path, codec), fresh, queries,
+        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
+        query_id_col=query_id_col,
+    )
+
+
+# -- public bindings, one build / append / probe per family -----------------
+
+def build_ivf_index(
+    corpus: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    modulus: int = 37,
+    kmeans_iters: int = 0,
+    sample_fraction: float | None = None,
+) -> str:
+    """Materialize the corpus's IVF index to ``path`` — the embedding-side
+    twin of ``dedup.build_minhash_index``: ``lists`` holds the ``(id,
+    vec)`` rows hive-partitioned by ``pivot_id``, ``pivots`` the coarse
+    quantizer, ``meta.json`` ``{id_col, vec_col, modulus, kmeans_iters}``.
+    ``kmeans_iters > 0`` trains the quantizer with that many Lloyd rounds
+    (:func:`kmeans_pivots`, optionally sample-trained); ``0`` uses the
+    fixed-stride pivots (oracle-checkable)."""
+    return _build_artifact(
+        "ivf", corpus, path, id_col, vec_col, modulus=modulus,
+        kmeans_iters=kmeans_iters, sample_fraction=sample_fraction,
+    )
+
+
+def append_to_ivf_index(
+    new_vectors: DataFrame,
+    index_path: str,
+) -> str:
+    """Assign new vectors against the STORED pivots and append them into
+    the matching ``pivot_id=`` lists (see :func:`_append_artifact`)."""
+    return _append_artifact(new_vectors, index_path, "ivf")
+
+
+def ivf_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    nprobe: int = 2,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Approximate cosine top-k against a :func:`build_ivf_index` artifact,
+    reading ONLY the probed inverted lists; bit-identical to
+    :func:`ivf_topk` under the stored pivots (same tie-breaks).  See
+    :func:`_probe_artifact` for the deterministic-queries precondition."""
+    return _probe_artifact(
+        queries, index_path, "ivf", k, query_id_col, vec_col, exclude_self,
+        nprobe=nprobe,
+    )
+
+
+def build_lsh_index(
+    corpus: DataFrame,
+    path: str,
+    tables: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Materialize the multi-table LSH index: ``buckets`` ``(id,
+    table_id, bucket)`` (L rows per vector, the join side of every query
+    batch), ``vectors`` stored once for scoring, and ``meta.json`` pinning
+    the plane tables themselves — the reader takes no plane argument."""
+    return _build_artifact("lsh", corpus, path, id_col, vec_col, tables=tables)
+
+
+def lsh_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+    n_probes: int = 0,
+) -> DataFrame:
+    """Amplified-LSH top-k against a :func:`build_lsh_index` artifact:
+    identical candidates, scores and ranks as the in-memory
+    :func:`lsh_multitable_topk` under the manifest's plane tables."""
+    return _probe_artifact(
+        queries, index_path, "lsh", k, query_id_col, vec_col, exclude_self,
+        n_probes=n_probes,
+    )
+
+
+def build_ivfpq_index(
+    corpus: DataFrame,
+    path: str,
+    modulus: int = 37,
+    n_subspaces: int = 16,
+    n_codes: int = 16,
+    iters: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Materialize the IVFADC artifact: residual PQ ``codes``
+    hive-partitioned by inverted list (a probe reads ~nprobe/P of code
+    bytes already ~32× smaller than vectors), ``pivots``, ``vectors`` for
+    the shortlist re-rank, and ``meta.json`` pinning the residual
+    codebooks trained on this corpus."""
+    return _build_artifact(
+        "ivfpq", corpus, path, id_col, vec_col, modulus=modulus,
+        n_subspaces=n_subspaces, n_codes=n_codes, iters=iters,
+    )
+
+
+def append_to_ivfpq_index(
+    new_vectors: DataFrame,
+    index_path: str,
+) -> str:
+    """Assign against the STORED pivots and encode residuals under the
+    STORED codebooks; vectors first, codes second."""
+    return _append_artifact(new_vectors, index_path, "ivfpq")
+
+
+def ivfpq_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    nprobe: int = 12,
+    shortlist: int = 100,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Probe a :func:`build_ivfpq_index` artifact: per-(query, probed
+    list) residual LUTs ADC-score the pruned codes, the exact L2 re-rank
+    reads ``vectors`` for queries × shortlist rows only.  Bit-identical
+    to :func:`ivfpq_residual_topk` under the same quantizer/codebooks.
+    Output: ``(query_id, vec_id, l2_dist, rank)``."""
+    return _probe_artifact(
+        queries, index_path, "ivfpq", k, query_id_col, vec_col,
+        nprobe=nprobe, shortlist=shortlist,
+    )
+
+
+def build_pq_index(
+    corpus: DataFrame,
+    path: str,
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Materialize the FLAT PQ artifact: ``codes`` ``(id, pq_code)``,
+    ``vectors`` for the re-rank, ``meta.json`` pinning the codebooks.
+    Prefer :func:`build_ivfpq_index`, whose probe prunes lists; this
+    artifact ADC-scans every code and stays the exactness baseline."""
+    return _build_artifact(
+        "pq", corpus, path, id_col, vec_col, codebooks=codebooks
+    )
+
+
+def append_to_pq_index(new_vectors: DataFrame, index_path: str) -> str:
+    """Encode new vectors against the STORED codebooks; vectors first,
+    codes second."""
+    return _append_artifact(new_vectors, index_path, "pq")
+
+
+def pq_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    shortlist: int = 100,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Two-stage PQ retrieval against a :func:`build_pq_index` artifact:
+    identical to :func:`pq_adc_rerank_topk` under the stored codebooks."""
+    return _probe_artifact(
+        queries, index_path, "pq", k, query_id_col, vec_col, exclude_self,
+        shortlist=shortlist,
+    )
+
+
+def build_sq8_index(
+    corpus: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    stats: tuple[list[float], list[float]] | None = None,
+) -> str:
+    """Materialize the FLAT SQ8 artifact: 4×-compressed uint8 ``codes``,
+    ``vectors`` for the re-rank, ``meta.json`` pinning the per-dimension
+    mins/steps.  Prefer :func:`build_ivfsq8_index`, whose probe prunes
+    lists; this artifact scans every code and stays the exactness
+    baseline."""
+    return _build_artifact("sq8", corpus, path, id_col, vec_col, stats=stats)
+
+
+def append_to_sq8_index(new_vectors: DataFrame, index_path: str) -> str:
+    """Encode new vectors against the STORED mins/steps (values outside
+    the original range clamp to 0/255); vectors first, codes second."""
+    return _append_artifact(new_vectors, index_path, "sq8")
+
+
+def sq8_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    shortlist: int = 40,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Two-stage SQ8 retrieval against a :func:`build_sq8_index`
+    artifact: bit-identical to :func:`sq8_topk` under the stored stats."""
+    return _probe_artifact(
+        queries, index_path, "sq8", k, query_id_col, vec_col, exclude_self,
+        shortlist=shortlist,
+    )
+
+
+def build_ivfsq8_index(
+    corpus: DataFrame,
+    path: str,
+    modulus: int = 37,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    stats: tuple[list[float], list[float]] | None = None,
+) -> str:
+    """Materialize the IVF-SQ8 artifact: SQ8 ``codes`` hive-partitioned by
+    inverted list, ``pivots``, ``vectors`` for the re-rank, and
+    ``meta.json`` pinning the mins/steps."""
+    return _build_artifact(
+        "ivfsq8", corpus, path, id_col, vec_col, modulus=modulus, stats=stats
+    )
+
+
+def append_to_ivfsq8_index(new_vectors: DataFrame, index_path: str) -> str:
+    """Assign against the STORED pivots, encode under the STORED
+    mins/steps; vectors first, codes second."""
+    return _append_artifact(new_vectors, index_path, "ivfsq8")
+
+
+def ivfsq8_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    nprobe: int = 12,
+    shortlist: int = 40,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Probe a :func:`build_ivfsq8_index` artifact reading only the probed
+    lists' codes; bit-identical to :func:`ivfsq8_topk` under the stored
+    stats and pivots."""
+    return _probe_artifact(
+        queries, index_path, "ivfsq8", k, query_id_col, vec_col, exclude_self,
+        nprobe=nprobe, shortlist=shortlist,
+    )
+
+
+def build_matryoshka_index(
+    corpus: DataFrame,
+    path: str,
+    prefix_dims: int = 16,
+    modulus: int = 37,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Materialize the ANN-prefix matryoshka artifact: ``lists`` of ``(id,
+    prefix)`` rows hive-partitioned by prefix-IVF list, the prefix
+    centroids in ``pivots`` (``prefix_vec``), the FULL ``vectors`` for
+    the re-rank, and ``meta.json`` pinning ``prefix_dims``."""
+    return _build_artifact(
+        "matryoshka", corpus, path, id_col, vec_col,
+        prefix_dims=prefix_dims, modulus=modulus,
+    )
+
+
+def append_to_matryoshka_index(new_vectors: DataFrame, index_path: str) -> str:
+    """Truncate new vectors to the stored ``prefix_dims`` and assign
+    against the STORED prefix pivots; vectors first, list rows second."""
+    return _append_artifact(new_vectors, index_path, "matryoshka")
+
+
+def matryoshka_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    nprobe: int = 12,
+    shortlist: int = 40,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Probe a :func:`build_matryoshka_index` artifact: prefix cosine over
+    the probed lists shortlists, the exact full-dimension cosine
+    re-ranks; bit-identical to :func:`matryoshka_ivf_topk`."""
+    return _probe_artifact(
+        queries, index_path, "matryoshka", k, query_id_col, vec_col,
+        exclude_self, nprobe=nprobe, shortlist=shortlist,
+    )
+
+
+def build_ivfbq_index(
+    corpus: DataFrame,
+    path: str,
+    modulus: int = 37,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    thresholds: list[float] | None = None,
+) -> str:
+    """Materialize the IVF-BQ artifact: packed 1-bit ``codes``
+    hive-partitioned by inverted list, ``pivots``, ``vectors`` for the
+    re-rank, and ``meta.json`` pinning the per-dimension thresholds."""
+    return _build_artifact(
+        "ivfbq", corpus, path, id_col, vec_col, modulus=modulus,
+        thresholds=thresholds,
+    )
+
+
+def append_to_ivfbq_index(new_vectors: DataFrame, index_path: str) -> str:
+    """Assign against the STORED pivots, binarize under the STORED
+    thresholds; vectors first, codes second."""
+    return _append_artifact(new_vectors, index_path, "ivfbq")
+
+
+def ivfbq_topk_against_index(
+    queries: DataFrame,
+    index_path: str,
+    k: int = 10,
+    nprobe: int = 12,
+    shortlist: int = 40,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Probe a :func:`build_ivfbq_index` artifact: Hamming over the probed
+    lists' packed words shortlists, exact cosine re-ranks; bit-identical
+    to :func:`ivfbq_topk` under the stored thresholds and pivots."""
+    return _probe_artifact(
+        queries, index_path, "ivfbq", k, query_id_col, vec_col, exclude_self,
+        nprobe=nprobe, shortlist=shortlist,
+    )
+
+
 def index_drift_report(
     spark,
     index_path: str,
@@ -4048,72 +3579,16 @@ def index_drift_report(
     nprobe: int = 4,
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """:func:`ivf_drift_report` against a MATERIALIZED
-    :func:`build_ivf_index` artifact — the form a deployment actually
-    schedules: the standing index's stored pivots are the "stale"
-    quantizer, its CURRENT list contents (including everything
-    :func:`append_to_ivf_index` added under the frozen pivots) are the
-    corpus, and the "fresh" side retrains pivots on that corpus with the
-    same recipe the manifest records (fixed-stride or k-means).  The
-    report's ``recall_hits_fresh − recall_hits_stale`` gap is the
-    rebuild decision; ``list_size`` rows expose the append pile-up that
-    inflates probe cost even where recall holds.
-
-    Works against ANY of the coarse-quantized artifacts that store their
-    pivots in FULL vector space — ``build_ivf_index`` (corpus from
-    ``lists``) and the composed ``build_ivfpq_index`` /
-    ``build_ivfsq8_index`` / ``build_ivfbq_index`` (corpus from their
-    re-rank ``vectors`` store): drift lives in the coarse quantizer, so
-    one report shape serves every rung.  Matryoshka indexes are REFUSED
-    loudly — their pivots live in prefix space, and a silent zip-with
-    against truncated dimensions would measure the wrong thing (the
-    prefix quantizer's drift audit is a prefix-space report on the same
-    operator, pivots and queries both prefixed).
-
-    Cost: one read of the artifact's vector rows (deduped per id —
-    appends are at-least-once) plus the :func:`ivf_drift_report` passes;
-    nothing touches the artifact's layout."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_path, "meta.json")) as f:
-        meta = _json.load(f)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    if "modulus" not in meta:
-        raise ValueError(
-            f"{index_path}: manifest has no coarse-quantizer modulus — "
-            "not a coarse-quantized index artifact"
-        )
-    if "prefix_dims" in meta:
-        raise ValueError(
-            f"{index_path}: matryoshka pivots live in prefix-space — a "
-            "full-dim drift report would silently zip-truncate every "
-            "distance; run a prefix-space report (prefix the corpus and "
-            "queries, then ivf_drift_report) instead"
-        )
-    stored_pivots = spark.read.parquet(_os.path.join(index_path, "pivots"))
-    # composed artifacts (ivfpq/ivfsq8/ivfbq) store full vectors for the
-    # re-rank; the plain ivf artifact's full vectors ARE its lists
-    vec_dir = _os.path.join(index_path, "vectors")
-    src = vec_dir if _os.path.isdir(vec_dir) else _os.path.join(
-        index_path, "lists"
-    )
-    corpus = (
-        spark.read.parquet(src)
-        .select(F.col(id_col), F.col(vec_col))
-        .dropDuplicates([id_col])
-    )
-    if meta.get("kmeans_iters", 0) > 0:
-        fresh_pivots = kmeans_pivots(
-            corpus, iters=meta["kmeans_iters"], modulus=meta["modulus"],
-            id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        fresh_pivots = ivf_pivots(corpus, id_col, vec_col, meta["modulus"])
-    return ivf_drift_report(
-        corpus, stored_pivots, fresh_pivots, queries,
-        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col,
+    """:func:`ivf_drift_report` against a materialized coarse artifact
+    (ivf / ivfpq / ivfsq8 / ivfbq — their pivots live in full vector
+    space): the stored pivots are the stale quantizer, the artifact's
+    current vectors (everything appended under the frozen pivots
+    included) the corpus, and pivots retrained with the manifest's recipe
+    the fresh side.  ``recall_hits_fresh − recall_hits_stale`` is the
+    rebuild decision.  Matryoshka artifacts are refused loudly — use
+    :func:`matryoshka_drift_report`."""
+    return _artifact_drift_report(
+        spark, index_path, queries, k, nprobe, query_id_col
     )
 
 
@@ -4125,40 +3600,10 @@ def matryoshka_drift_report(
     nprobe: int = 4,
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """The prefix-space drift audit :func:`index_drift_report` points
-    matryoshka users at: the artifact's quantizer lives in prefix space,
-    so the report runs there too — corpus and queries are truncated to
-    the manifest's ``prefix_dims``, the stored prefix pivots are the
-    stale side, and the fresh side retrains prefix pivots on the current
-    prefixed corpus.  Recall is measured within prefix space (the stage
-    this quantizer owns; the full-dim re-rank stage is exact by
-    construction and cannot drift), and the ``list_size`` rows expose
-    append pile-up exactly as in the full-dim report."""
-    import os as _os
-
-    meta = _read_matryoshka_meta(index_path)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    pd_ = int(meta["prefix_dims"])
-    stored_pivots = spark.read.parquet(
-        _os.path.join(index_path, "pivots")
-    ).select(
-        "pivot_id", F.col("prefix_vec").alias("pivot_vec")
-    )
-    corpus = (
-        spark.read.parquet(_os.path.join(index_path, "vectors"))
-        .select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), 1, pd_).alias(vec_col),
-        )
-        .dropDuplicates([id_col])
-    )
-    q = queries.select(
-        F.col(query_id_col),
-        F.slice(F.col(vec_col), 1, pd_).alias(vec_col),
-    )
-    fresh_pivots = ivf_pivots(corpus, id_col, vec_col, meta["modulus"])
-    return ivf_drift_report(
-        corpus, stored_pivots, fresh_pivots, q,
-        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col,
+    """The prefix-space drift audit of a matryoshka artifact: corpus and
+    queries are truncated to the manifest's ``prefix_dims`` and recall is
+    measured there (the full-dim re-rank stage is exact and cannot
+    drift)."""
+    return _artifact_drift_report(
+        spark, index_path, queries, k, nprobe, query_id_col, "matryoshka"
     )

@@ -301,8 +301,3 @@ def simhash64_poly(
         ),
     )
     return _simhash_vote(tmp, hashes_col, out)
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit fingerprints (bit_count of XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))

@@ -31,11 +31,6 @@ def drop_table(spark: SparkSession, name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def temp_view(df: DataFrame, name: str) -> None:
-    """S15: ``createOrReplaceTempView`` (``/root/reference/Silver_Products.py:20``)."""
-    df.createOrReplaceTempView(name)
-
-
 def table_exists(spark: SparkSession, name: str) -> bool:
     """S16: existence probe gating initial-load vs merge
     (``/root/reference/Gold_Customers.py:55``)."""

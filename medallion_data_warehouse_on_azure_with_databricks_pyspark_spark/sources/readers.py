@@ -33,8 +33,3 @@ def read_delta(spark: SparkSession, path: str) -> DataFrame:
 
     fmt = "delta" if delta_available() else "parquet"
     return spark.read.format(fmt).load(path)
-
-
-def sql_scan(spark: SparkSession, sql: str) -> DataFrame:
-    """S7: SQL entry point (``/root/reference/Gold_Orders.py:2``)."""
-    return spark.sql(sql)

@@ -19,10 +19,6 @@ from pyspark.sql import DataFrame
 from ..session import delta_available
 
 
-def _fmt() -> str:
-    return "delta" if delta_available() else "parquet"
-
-
 def overwrite_path(
     df: DataFrame,
     path: str,
@@ -65,23 +61,6 @@ def atomic_dir_swap(stage: str, path: str) -> None:
     os.rename(stage, path)
     if os.path.exists(old):
         shutil.rmtree(old)
-
-
-def save_as_table(
-    df: DataFrame,
-    name: str,
-    path: str | None = None,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """S10/S11: catalog-registered write; external when ``path`` is given
-    (``/root/reference/Gold_Customers.py:65-68``, ``Gold_Orders.py:84-86``)."""
-    writer = df.write.format(_fmt()).mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(name)
 
 
 def save_bucketed_table(

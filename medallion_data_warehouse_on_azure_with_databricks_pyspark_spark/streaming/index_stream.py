@@ -36,30 +36,24 @@ the exact contract the MinHash streaming appender documents.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import similarity
+
 
 def _append_fn(family: str):
-    """The family's incremental-append surface — every vector-index
-    builder ships one with the same ``(new_vectors, index_path)``
-    signature and the same frozen-quantizer contract."""
-    from ..operators import similarity
-
-    try:
-        return {
-            "ivf": similarity.append_to_ivf_index,
-            "pq": similarity.append_to_pq_index,
-            "sq8": similarity.append_to_sq8_index,
-            "ivfpq": similarity.append_to_ivfpq_index,
-            "ivfsq8": similarity.append_to_ivfsq8_index,
-            "ivfbq": similarity.append_to_ivfbq_index,
-            "matryoshka": similarity.append_to_matryoshka_index,
-        }[family]
-    except KeyError:
+    """The family's incremental-append surface, looked up in the codec
+    table: every appendable family shares the lifecycle's frozen-manifest
+    append."""
+    codec = similarity.CODECS.get(family)
+    if codec is None or not codec.appendable:
         raise ValueError(
             f"no streaming append surface for index family {family!r}"
-        ) from None
+        )
+    return functools.partial(similarity._append_artifact, family=family)
 
 
 DRIFT_FLAG_FILE = "drift_flag.json"
@@ -111,10 +105,9 @@ def evaluate_drift(
     scan on the query SAMPLE) — run it on a bounded sample and at a
     bounded cadence (``drift_every`` in :func:`index_ingest`), never
     per-query."""
-    from ..operators.similarity import index_drift_report
     from ..sources.versioned import _fsync_json
 
-    rep = index_drift_report(
+    rep = similarity.index_drift_report(
         spark, index_path, queries, k=k, nprobe=nprobe
     )
     agg = {
@@ -160,10 +153,9 @@ def index_ingest(
     drift_nprobe: int = 4,
 ) -> None:
     """Run-once streaming maintenance of ANY vector-index artifact from a
-    parquet directory of vector CDC events — the family (IVF / PQ / SQ8 /
-    IVFADC / IVF-SQ8) is read from the artifact's own manifest and
-    dispatched to its ``append_to_*`` surface, so one streaming wire
-    serves the whole ladder.
+    parquet directory of vector CDC events — the family is read from the
+    artifact's own manifest and its append is looked up in
+    ``similarity.CODECS``, so one streaming wire serves the whole ladder.
 
     Rows whose ``op_col`` equals ``delete_op`` tombstone their id; every
     other row is an upsert appended to the index (assigned/encoded under
@@ -188,9 +180,9 @@ def index_ingest(
     """
     from ..operators import index_maintenance
 
-    meta = index_maintenance._read_meta(index_path)
+    meta, codec = similarity.read_manifest(index_path)
+    append = _append_fn(codec.family)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    append = _append_fn(index_maintenance._family(meta))
     if drift_every < 1:
         raise ValueError("drift_every must be >= 1")
     appended_batches = {"n": 0}

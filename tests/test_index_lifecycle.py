@@ -151,7 +151,6 @@ def test_ivf_compact_without_tombstones_is_bit_identical(spark, tmp_path):
 # LSH
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_lsh_delete_then_probe_and_compact(spark, tmp_path):
     from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.workload_llm import (
         _LSH_TABLES, _emb_queries,
@@ -217,7 +216,6 @@ def test_compact_unrecognized_manifest_raises(spark, tmp_path):
         index_maintenance.compact_index(spark, str(bad))
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_pq_index_matches_inmemory_and_lifecycle(spark, tmp_path):
     """PQ artifact: index read path is bit-identical to the in-memory
     two-stage operator; append encodes with the STORED codebooks; delete
@@ -263,7 +261,6 @@ def test_pq_index_matches_inmemory_and_lifecycle(spark, tmp_path):
     assert not os.path.isdir(os.path.join(path, "tombstones"))
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_ivfpq_index_matches_inmemory_and_lifecycle(spark, tmp_path):
     """IVFADC artifact (residual codes hive-partitioned by list): read
     path is bit-identical to the in-memory residual operator under the
@@ -318,7 +315,6 @@ def test_ivfpq_index_matches_inmemory_and_lifecycle(spark, tmp_path):
     )
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_sq8_index_matches_inmemory_and_lifecycle(spark, tmp_path):
     """SQ8 artifact: index probe bit-identical to the in-memory two-stage
     operator under the manifest's frozen stats; append encodes with the
@@ -379,3 +375,173 @@ def test_sq8_append_uses_frozen_stats(spark, tmp_path):
         .collect()[0]["sq8_code"]
     )
     assert all(c == 255 for c in code)  # clamped, never out of range
+
+
+# ---------------------------------------------------------------------------
+# every vector codec through the shared artifact lifecycle
+# ---------------------------------------------------------------------------
+
+#: nprobe past the list count: every inverted list is probed.
+FULL = 1000
+
+
+def _round_trip_cases(base):
+    from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.workload_llm import (
+        _LSH_TABLES,
+    )
+
+    books = similarity.pq_codebooks_from_corpus(base, 8, 8)
+    def ivfpq_twin(q, p):
+        import json
+
+        with open(os.path.join(p, "meta.json")) as f:
+            books_p = json.load(f)["codebooks"]
+        return similarity.ivfpq_residual_topk(
+            base, q, k=10, nprobe=FULL, shortlist=40, codebooks=books_p,
+            pivots=base.sparkSession.read.parquet(os.path.join(p, "pivots")),
+        )
+
+    # family -> (build, probe(queries, path, vec_col), in-memory twin)
+    return {
+        "ivf": (
+            lambda c, p: similarity.build_ivf_index(c, p),
+            lambda q, p, v: similarity.ivf_topk_against_index(
+                q, p, k=10, nprobe=FULL, vec_col=v
+            ),
+            lambda q, p: similarity.ivf_topk(base, q, k=10, nprobe=FULL),
+        ),
+        "lsh": (
+            lambda c, p: similarity.build_lsh_index(c, p, _LSH_TABLES),
+            lambda q, p, v: similarity.lsh_topk_against_index(
+                q, p, k=10, n_probes=2, vec_col=v
+            ),
+            lambda q, p: similarity.lsh_multitable_topk(
+                base, q, _LSH_TABLES, k=10, n_probes=2
+            ),
+        ),
+        "pq": (
+            lambda c, p: similarity.build_pq_index(c, p, books),
+            lambda q, p, v: similarity.pq_topk_against_index(
+                q, p, k=10, shortlist=40, vec_col=v
+            ),
+            lambda q, p: similarity.pq_adc_rerank_topk(
+                base, q, books, k=10, shortlist=40
+            ),
+        ),
+        "sq8": (
+            lambda c, p: similarity.build_sq8_index(c, p),
+            lambda q, p, v: similarity.sq8_topk_against_index(
+                q, p, k=10, shortlist=40, vec_col=v
+            ),
+            lambda q, p: similarity.sq8_topk(base, q, k=10, shortlist=40),
+        ),
+        "ivfpq": (
+            lambda c, p: similarity.build_ivfpq_index(
+                c, p, n_subspaces=8, n_codes=8
+            ),
+            lambda q, p, v: similarity.ivfpq_topk_against_index(
+                q, p, k=10, nprobe=FULL, shortlist=40, vec_col=v
+            ),
+            ivfpq_twin,
+        ),
+        "ivfsq8": (
+            lambda c, p: similarity.build_ivfsq8_index(c, p),
+            lambda q, p, v: similarity.ivfsq8_topk_against_index(
+                q, p, k=10, nprobe=FULL, shortlist=40, vec_col=v
+            ),
+            lambda q, p: similarity.ivfsq8_topk(
+                base, q, k=10, nprobe=FULL, shortlist=40
+            ),
+        ),
+        "matryoshka": (
+            lambda c, p: similarity.build_matryoshka_index(c, p),
+            lambda q, p, v: similarity.matryoshka_topk_against_index(
+                q, p, k=10, nprobe=FULL, shortlist=40, vec_col=v
+            ),
+            lambda q, p: similarity.matryoshka_ivf_topk(
+                base, q, k=10, prefix_dims=16, nprobe=FULL, shortlist=40
+            ),
+        ),
+        "ivfbq": (
+            lambda c, p: similarity.build_ivfbq_index(c, p),
+            lambda q, p, v: similarity.ivfbq_topk_against_index(
+                q, p, k=10, nprobe=FULL, shortlist=40, vec_col=v
+            ),
+            lambda q, p: similarity.ivfbq_topk(
+                base, q, k=10, nprobe=FULL, shortlist=40
+            ),
+        ),
+    }
+
+
+ROUND_TRIP_FAMILIES = [
+    "ivf", "lsh", "pq", "sq8", "ivfpq", "ivfsq8", "matryoshka", "ivfbq"
+]
+
+
+def test_round_trip_covers_every_vector_codec():
+    assert set(ROUND_TRIP_FAMILIES) == {
+        f for f, c in similarity.CODECS.items() if c.encode is not None
+    }
+
+
+@pytest.mark.parametrize("family", ROUND_TRIP_FAMILIES)
+def test_index_round_trip_every_codec(spark, tmp_path, family):
+    """Build → full-probe equals the in-memory twin (also when the query
+    vector column is named differently from the index's) → append →
+    delete → the deleted ids stop ranking → compact → identical."""
+    emb = spark.read.parquet(EMB)
+    base = emb.filter(F.col("vec_id") < 400)
+    q = base.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    build, probe, twin = _round_trip_cases(base)[family]
+    path = str(tmp_path / family)
+    build(base, path)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    built = rows(probe(q, path, "embedding"))
+    assert built == rows(twin(q, path))
+    assert rows(
+        probe(q.withColumnRenamed("embedding", "q_emb"), path, "q_emb")
+    ) == built
+
+    append = getattr(similarity, f"append_to_{family}_index", None)
+    if append is not None:
+        append(emb.filter(F.col("vec_id") >= 400), path)
+    before = rows(probe(q, path, "embedding"))
+    victims = sorted({r[1] for r in before})[:5]
+    _delete(spark, path, victims, "vec_id")
+    deleted = rows(probe(q, path, "embedding"))
+    assert deleted and not {r[1] for r in deleted} & set(victims)
+
+    index_maintenance.compact_index(spark, path)
+    assert not os.path.isdir(os.path.join(path, "tombstones"))
+    assert rows(probe(q, path, "embedding")) == deleted
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda spark, p: _delete(spark, p, [1], "vec_id"),
+        lambda spark, p: index_maintenance.compact_index(spark, p),
+        lambda spark, p: index_maintenance.rebuild_index(spark, p),
+    ],
+    ids=["delete_from_index", "compact_index", "rebuild_index"],
+)
+def test_maintenance_refuses_unknown_manifest_version(spark, tmp_path, op):
+    import json
+
+    emb = spark.read.parquet(EMB).limit(60)
+    path = similarity.build_ivf_index(emb, str(tmp_path / "ivf"))
+    meta_path = os.path.join(path, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["version"] = 2
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="version"):
+        op(spark, path)
+    assert not os.path.isdir(os.path.join(path, "tombstones"))

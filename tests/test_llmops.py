@@ -1384,7 +1384,6 @@ def test_ivfsq8_index_roundtrip_and_pruning(spark, tmp_path):
     assert similarity.ivf_pivots(emb).count() > 2  # pruning skipped lists
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_ivfsq8_index_append_frozen_stats_and_tombstone(spark, tmp_path):
     """Append assigns against the STORED pivots and encodes under the
     STORED mins/steps (no retrain — the standing codes stay valid), and a
@@ -1400,9 +1399,9 @@ def test_ivfsq8_index_append_frozen_stats_and_tombstone(spark, tmp_path):
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1)
     idx = similarity.build_ivfsq8_index(old, str(tmp_path / "ivfsq8"))
-    meta_before = similarity._read_ivfsq8_meta(idx)
+    meta_before = similarity.read_manifest(idx, "ivfsq8")[0]
     similarity.append_to_ivfsq8_index(new, idx)
-    assert similarity._read_ivfsq8_meta(idx) == meta_before  # frozen
+    assert similarity.read_manifest(idx, "ivfsq8")[0] == meta_before  # frozen
     queries = _emb_queries(emb)
     got = similarity.ivfsq8_topk_against_index(
         queries, idx, k=10, nprobe=12, shortlist=40
@@ -1528,7 +1527,6 @@ def test_sq8_stats_empty_corpus_raises_clearly(spark):
         similarity.sq8_stats(empty)
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_matryoshka_index_roundtrip_pruning_and_lifecycle(spark, tmp_path):
     """The materialized prefix-IVF artifact must (a) reproduce the
     in-memory ANN-prefix lane bit-for-bit under the manifest's frozen
@@ -1572,9 +1570,9 @@ def test_matryoshka_index_roundtrip_pruning_and_lifecycle(spark, tmp_path):
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1)
     idx2 = similarity.build_matryoshka_index(old, str(tmp_path / "mat2"))
-    meta_before = similarity._read_matryoshka_meta(idx2)
+    meta_before = similarity.read_manifest(idx2, "matryoshka")[0]
     similarity.append_to_matryoshka_index(new, idx2)
-    assert similarity._read_matryoshka_meta(idx2) == meta_before  # frozen
+    assert similarity.read_manifest(idx2, "matryoshka")[0] == meta_before  # frozen
     got = similarity.matryoshka_topk_against_index(
         queries, idx2, k=10, nprobe=12, shortlist=40
     ).collect()
@@ -1687,7 +1685,6 @@ def test_ivfbq_recall_floor(spark):
     assert recall >= 0.40, recall
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_ivfbq_index_roundtrip_and_pruning(spark, tmp_path):
     """The materialized artifact must (a) reproduce the in-memory
     operator bit-for-bit under the manifest's frozen thresholds + pivots
@@ -1724,7 +1721,6 @@ def test_ivfbq_index_roundtrip_and_pruning(spark, tmp_path):
     assert similarity.ivf_pivots(emb).count() > 2  # pruning skipped lists
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_ivfbq_index_append_frozen_thresholds_and_tombstone(spark, tmp_path):
     """Append assigns against the STORED pivots and binarizes under the
     STORED thresholds (no retrain — standing codes stay valid), a
@@ -1742,9 +1738,9 @@ def test_ivfbq_index_append_frozen_thresholds_and_tombstone(spark, tmp_path):
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1)
     idx = similarity.build_ivfbq_index(old, str(tmp_path / "ivfbq"))
-    meta_before = similarity._read_ivfbq_meta(idx)
+    meta_before = similarity.read_manifest(idx, "ivfbq")[0]
     similarity.append_to_ivfbq_index(new, idx)
-    assert similarity._read_ivfbq_meta(idx) == meta_before  # frozen
+    assert similarity.read_manifest(idx, "ivfbq")[0] == meta_before  # frozen
     queries = _emb_queries(emb)
     got = similarity.ivfbq_topk_against_index(
         queries, idx, k=10, nprobe=12, shortlist=40
@@ -1971,7 +1967,6 @@ def test_drift_report_no_drift_reports_parity(spark):
         assert rows[("recall_hits_stale", q)] == rows[("recall_hits_fresh", q)]
 
 
-@pytest.mark.slow  # opt-in tier: index-lifecycle e2e (pytest.ini)
 def test_index_drift_report_detects_append_drift_and_rebuild_heals(spark, tmp_path):
     """The artifact-level wrapper: append a shifted cluster under frozen
     pivots -> the report shows the recall gap; rebuild -> parity."""

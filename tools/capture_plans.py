@@ -1,13 +1,13 @@
-"""Capture ``explain("formatted")`` for headline lanes into plans/<tag>/.
+"""Capture ``explain("formatted")`` for headline lanes into plans/r19/.
 
 Usage::
 
     python tools/capture_plans.py before            # all headline lanes
     python tools/capture_plans.py after lane1 lane2 # specific lanes
 
-Writes ``plans/r18/<lane>_<tag>.txt``.  The judge reads these files to
-check plan-shape claims (Exchange counts, join strategies, pushed
-filters) against the code, so they are committed artifacts, not scratch.
+Writes ``plans/r19/<lane>_<tag>.txt`` (the directory is ``ROUND_DIR``).
+These files back plan-shape claims (Exchange counts, join strategies,
+pushed filters) made about the code, so they are committed artifacts.
 """
 
 from __future__ import annotations
