@@ -629,32 +629,21 @@ def _stage_dir(path: str, tag: str) -> str:
 
 def _claim_dv_writer(path: str, intent: dict) -> None:
     """Atomically claim the sidecar's single WRITER slot (O_EXCL-create
-    the intent file — the same primitive as ``versioned._claim_intent``).
-    Every DV mutator (:func:`merge_dv`, :func:`delete_where_dv`,
-    :func:`purge_dv`) serializes through this slot, so two concurrent
-    mutators never interleave marks, stage files, or the purge swap: the
-    loser raises :class:`versioned.ConcurrentWriteError` immediately and
-    commits nothing.  Readers are never blocked and never claim."""
-    from .versioned import ConcurrentWriteError
+    the intent file — ``versioned._exclusive_claim``, the primitive
+    behind the table commit slot too).  Every DV mutator
+    (:func:`merge_dv`, :func:`delete_where_dv`, :func:`purge_dv`)
+    serializes through this slot, so two concurrent mutators never
+    interleave marks, stage files, or the purge swap: the loser raises
+    :class:`versioned.ConcurrentWriteError` immediately and commits
+    nothing.  Readers are never blocked and never claim."""
+    from .versioned import _exclusive_claim
 
-    try:
-        fd = os.open(
-            _intent_file(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-        )
-    except FileExistsError:
-        raise ConcurrentWriteError(
-            f"{path}: another deletion-vector writer is in flight (live "
-            "_dv_merge_intent.json); if that writer crashed, run "
-            "recover_dv_merge() first"
-        ) from None
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(intent, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-    except BaseException:  # pragma: no cover — release the half-claim
-        os.remove(_intent_file(path))
-        raise
+    _exclusive_claim(
+        _intent_file(path), intent,
+        f"{path}: another deletion-vector writer is in flight (live "
+        "_dv_merge_intent.json); if that writer crashed, run "
+        "recover_dv_merge() first",
+    )
 
 
 def _release_dv_writer(path: str) -> None:

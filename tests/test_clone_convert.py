@@ -163,6 +163,24 @@ def test_clone_is_zero_copy_and_independent(spark, tmp_path, vtable):
     assert V.read_current(spark, dst).count() == n0 - 7
 
 
+def test_clone_losing_the_claim_leaves_no_stage(spark, tmp_path, vtable):
+    """A clone that loses the commit-slot race (a live intent at the
+    destination) raises ConcurrentWriteError and removes its
+    hard-linked stage — nothing is left for recover() to sweep."""
+    dst = str(tmp_path / "dst")
+    V._claim_intent(dst, {"stage": "in-flight"})  # a rival mid-commit
+    with pytest.raises(V.ConcurrentWriteError):
+        V.clone_table(vtable, dst, now=3.0)
+    assert not [
+        d for d in os.listdir(tmp_path) if d.startswith("dst.__stage_")
+    ]
+    V._release_intent(dst)
+    assert V.clone_table(vtable, dst, now=4.0) == 0
+    assert V.read_current(spark, dst).count() == (
+        V.read_current(spark, vtable).count()
+    )
+
+
 def test_clone_version_as_of_and_deep(spark, tmp_path, vtable):
     old = str(tmp_path / "old")
     V.clone_table(vtable, old, version=0, now=3.0)

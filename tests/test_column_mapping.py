@@ -511,6 +511,42 @@ def test_identity_allocation_race_fails_loudly(spark, tmp_path, monkeypatch):
     assert got.select("row_id").distinct().count() == 36
 
 
+@pytest.mark.parametrize("alter", [
+    lambda t: V.rename_column_versioned(t, "v", "vv", now=3.0),
+    lambda t: V.drop_column_versioned(t, "v", now=3.0),
+], ids=["rename", "drop"])
+def test_alter_refuses_a_rival_commit_after_its_schema_read(
+    spark, mtable, monkeypatch, alter
+):
+    """An ALTER reads the logical schema and mapping before it claims
+    the commit slot.  A rival commit landing in between (here an
+    overwrite adding column ``c``) must fail the ALTER — never be
+    silently undone by the ALTER's stale schema."""
+    real_claim = V._claim_intent
+    fired = []
+
+    def rival_then_claim(path, intent):
+        if not fired:
+            fired.append(True)
+            V.overwrite_versioned(
+                spark.range(5).selectExpr("id AS k", "id * 2 AS v",
+                                          "id AS c"),
+                mtable, now=2.0,
+            )
+        return real_claim(path, intent)
+
+    monkeypatch.setattr(V, "_claim_intent", rival_then_claim)
+    with pytest.raises(V.ConcurrentWriteError):
+        alter(mtable)
+    monkeypatch.undo()
+    assert fired and V.current_version(mtable) == 1  # the rival only
+    assert V.read_current(spark, mtable).columns == ["k", "v", "c"]
+    assert V._read_intent(mtable) is None  # the slot was released
+    # re-run on the fresh snapshot: the ALTER lands and keeps column c
+    alter(mtable)
+    assert "c" in V.read_current(spark, mtable).columns
+
+
 def test_stray_user_column_is_not_silently_shed(spark, mtable):
     """An unknown extra column on a mapped table is a USER error — the
     schema check must raise, never silently shed it as if it were a

@@ -663,35 +663,6 @@ def test_log_checkpointing_bounds_tail_and_resolves_identically(spark, tmp_path)
     assert _ids(V.read_version(spark, path, 19)) == list(range(20))
 
 
-def test_legacy_monolithic_log_migrates_in_place(spark, tmp_path):
-    """A pre-r9 table whose history lives in one log.json keeps working:
-    the legacy file acts as the base checkpoint, new commits append
-    per-commit files, and the first checkpoint subsumes it."""
-    import json as _json
-    path = str(tmp_path / "legacy")
-    for i in range(3):
-        V.overwrite_versioned(spark.range(i + 1), path, now=float(i))
-    # devolve the per-commit log into the legacy monolithic shape
-    log = V._read_log(path)
-    import shutil as _shutil
-    _shutil.rmtree(V._log_dir(path))
-    with open(os.path.join(V._vroot(path), V.LOG_FILE), "w") as fh:
-        _json.dump(log, fh)
-    assert V.log_read_footprint(path)["base"] == "legacy"
-    assert [e["version"] for e in V._read_log(path)] == [0, 1, 2]
-    # new commits land as per-commit files on top of the legacy base
-    V.overwrite_versioned(spark.range(9), path, now=9.0)
-    assert V.current_version(path) == 3
-    assert [e["version"] for e in V._read_log(path)] == [0, 1, 2, 3]
-    assert _ids(V.read_version(spark, path, 2)) == [0, 1, 2]
-    # push past the next boundary: the checkpoint takes over from legacy
-    for i in range(4, 12):
-        V.overwrite_versioned(spark.range(i), path, now=float(i + 10))
-    fp = V.log_read_footprint(path)
-    assert fp["base"] == "checkpoint" and fp["base_version"] == 10
-    assert [e["version"] for e in V._read_log(path)] == list(range(12))
-
-
 def test_recover_tolerates_torn_or_claim_only_intent(spark, tmp_path):
     """Power loss mid-intent-write leaves garbage; a crash holding only
     the claim leaves an entry-less intent.  Both prove the commit never
@@ -1406,12 +1377,16 @@ def test_replace_files_sidecar_crash_window_recovers(spark, tmp_path, mode):
     assert not os.path.exists(V._stats_hint_path(t))  # hint spent
 
 
+@pytest.mark.parametrize("kind", ["replace_files", "replace_partitions"])
+@pytest.mark.parametrize("mode", ["manifest", "physical"])
 def test_replace_files_rebuild_failure_drops_sidecars(spark, tmp_path,
-                                                      monkeypatch):
+                                                      monkeypatch, kind,
+                                                      mode):
     """r16 (ADVICE r15 #2/#3 family): when the post-commit sidecar
     rebuild RAISES (not crashes), the transaction has landed — the
     stale sidecars are dropped before the error surfaces, and the
-    commit slot is released so the table isn't wedged."""
+    commit slot is released so the table isn't wedged.  File-subset
+    (append) and partition commits share the same sidecar window."""
     from pyspark.sql import functions as F
 
     from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.sources import (
@@ -1420,21 +1395,31 @@ def test_replace_files_rebuild_failure_drops_sidecars(spark, tmp_path,
 
     t = str(tmp_path / "t")
     df = spark.range(1_000).select(
-        F.col("id").alias("a"), (F.col("id") * 3).alias("b")
+        (F.col("id") % 4).cast("int").alias("g"), F.col("id").alias("a"),
+        (F.col("id") * 3).alias("b"),
     )
-    V.overwrite_versioned(df.repartition(4), t, now=1.0,
-                          snapshot_mode="manifest", stats_columns=["a"])
+    V.overwrite_versioned(df.repartition(4), t, now=1.0, partition_by=["g"],
+                          snapshot_mode=mode, stats_columns=["a"])
 
     def explode(*a, **k):
         raise RuntimeError("rebuild died")
 
-    monkeypatch.setattr(skipping, "write_stats_manifest", explode)
+    extra = df.filter("g = 1").limit(10)
     with pytest.raises(RuntimeError, match="rebuild died"):
-        V.append_versioned(df.limit(10), t, now=2.0)
+        if kind == "replace_files":
+            monkeypatch.setattr(skipping, "write_stats_manifest", explode)
+            V.append_versioned(extra, t, now=2.0)
+        else:
+            monkeypatch.setattr(
+                skipping, "update_stats_manifest_partitions", explode
+            )
+            V.replace_partitions(extra, t, "g", expected_version=0, now=2.0)
     monkeypatch.undo()
     assert V.current_version(t) == 1              # the commit LANDED
     assert not os.path.isdir(os.path.join(t, skipping.STATS_DIR))
-    assert V.read_current(spark, t).count() == 1_010
+    expect = 1_010 if kind == "replace_files" else 760
+    assert V.read_current(spark, t).count() == expect
+    assert V._read_intent(t) is None
     # slot released: the next commit proceeds and restores the manifest
     V.append_versioned(df.limit(5), t, now=3.0, stats_columns=["a"])
     assert V.current_version(t) == 2
@@ -1534,6 +1519,34 @@ def test_replace_files_maintains_bloom_manifest(spark, tmp_path, mode):
         F.col("a") == 2500
     ).count()
     assert hit == 1
+
+
+@pytest.mark.parametrize("mode", ["manifest", "physical"])
+def test_replace_files_retiring_every_file_keeps_bloom_exact(spark, tmp_path,
+                                                             mode):
+    """A file-subset commit that retires the WHOLE live set (an
+    incremental OPTIMIZE packing a table of small files) keeps no file
+    to link, so the physical successor tree is the stage itself — the
+    bloom sidecar must still name exactly the files that went live."""
+    from pyspark.sql import functions as F
+
+    from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.sources import (
+        skipping,
+    )
+
+    t = str(tmp_path / "t")
+    df = spark.range(300).select(F.col("id").cast("int").alias("a"))
+    V.overwrite_versioned(df.repartition(3), t, now=1.0, snapshot_mode=mode)
+    skipping.write_bloom_manifest(
+        spark, t, "a", files=(V._live_data_files(t) or None)
+    )
+    v = V.optimize_compact_incremental(spark, t, target_file_bytes=10**9,
+                                       now=2.0)
+    assert v == 1 and len(V._live_data_files(t)) == 1
+    man = spark.read.parquet(os.path.join(t, skipping.BLOOM_DIR))
+    named = {r.file_path.replace("file:", "") for r in man.collect()}
+    assert named == {os.path.abspath(f) for f in V._live_data_files(t)}
+    assert V.read_current(spark, t).count() == 300
 
 
 @pytest.mark.parametrize("mode", ["manifest", "physical"])
