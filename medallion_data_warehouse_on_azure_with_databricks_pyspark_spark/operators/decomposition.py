@@ -16,7 +16,9 @@ Determinism is the design constraint everything else follows from:
   summation does not commute across partitions; ``floor(x * fp)``
   per-coordinate BIGINT quantization makes every per-row product an
   integer, and integer sums are exact in ANY order — the same trick the
-  PQ codebook trainer uses (``similarity.pq_codebooks_kmeans``).  The
+  quantizer trainers use (``similarity.kmeans_pivots`` and
+  ``pq_codebooks_kmeans``, whose ``_quantizer_kernel`` partials reduce
+  like these, as BIGINT sums of ``floor(v·2³⁰)``).  The
   per-partition partial sums stay within int64 (|x| < 2 with the default
   ``fp = 2^20`` gives per-term bound 2^42; a partition would need ~2^21
   rows to threaten 2^63), and the cross-partition reduction runs in

@@ -24,17 +24,28 @@ order so results are deterministic.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
+import re
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from ..sources.writers import atomic_dir_swap
 from . import index_maintenance
@@ -628,9 +639,255 @@ def ivf_assign(
 #: dimension, and the workload oracles replay the arithmetic bit-for-bit.
 _PQ_FIXED_POINT = 1 << 30
 
+#: Schema of the training partials :func:`_quantizer_kernel` emits.
+_PARTIALS = "m int, k int, j int, s long, n long"
+
+
+class _Coarse(NamedTuple):
+    """A collected coarse quantizer: pivot ids ascending (the order
+    ``ivf_assign`` breaks ties in), their vectors as one (P, D) float64
+    matrix, and the Spark type of ``pivot_id``."""
+
+    ids: list
+    vecs: np.ndarray
+    id_type: DataType
+
+
+def _pivot_matrix(pivots: DataFrame) -> _Coarse:
+    rows = sorted(
+        pivots.select("pivot_id", "pivot_vec").collect(), key=lambda r: r[0]
+    )
+    return _Coarse(
+        [r[0] for r in rows],
+        _dense([r[1] for r in rows], "pivot_vec"),
+        pivots.schema["pivot_id"].dataType,
+    )
+
+
+def _dense(vectors: list, col: str) -> np.ndarray:
+    """Collected vectors as one (n, D) float64 matrix, refusing null and
+    ragged ones the way :func:`_quantizer_kernel` does."""
+    if not vectors:
+        return np.empty((0, 0))
+    if any(v is None or None in v or len(v) != len(vectors[0]) for v in vectors):
+        raise ValueError(f"column {col!r} has a null or ragged vector")
+    return np.asarray(vectors, dtype=np.float64)
+
+
+def _quantizer(books, cents=None, residual: bool = False):
+    """The assign step every trained quantizer shares, as a numpy closure
+    that runs inside :func:`_quantizer_kernel` on the executors and on the
+    driver for residual seeds.  ``quantize(x)`` takes a (B, D) float64
+    block and returns ``(lists, r, codes)``:
+
+    * ``lists`` — each row's nearest row of ``cents`` (None without a
+      coarse quantizer), and ``r`` the rows minus that centroid when
+      ``residual`` is set, else the rows unchanged;
+    * ``codes`` — per subspace ``m`` the nearest codeword of
+      ``books[m]`` to ``r``'s ``m``-th slice, (B, M) int32 (None when
+      ``books`` is None).
+
+    Both argmins reproduce the Catalyst ``ivf_assign`` / ``_l2sq`` order
+    bit-for-bit: squared distances fold ``(x−c)·(x−c)`` terms left to
+    right over the dimension (explicit multiply and add chain — numpy's
+    pairwise ``sum`` would re-associate); ties go to the lowest index
+    (callers order pivots by id); NaN distances rank greatest, and a row
+    whose distances are all NaN takes index 0."""
+    books = None if books is None else np.asarray(books, dtype=np.float64)
+    cents = None if cents is None else np.asarray(cents, dtype=np.float64)
+
+    def nearest(x, c):
+        import numpy as np
+
+        acc = None
+        for j in range(x.shape[1]):
+            t = x[:, j, None] - c[None, :, j]
+            acc = t * t if acc is None else acc + t * t
+        nan = np.isnan(acc)
+        if not nan.any():
+            return acc.argmin(axis=1)
+        best = np.where(nan, np.inf, acc).argmin(axis=1)
+        rows = np.arange(len(best))
+        bad = nan[rows, best]
+        if bad.any():
+            # every real distance of these rows is +inf (or there is none):
+            # the first real one beats any NaN
+            real = ~nan[bad]
+            best[bad] = np.where(real.any(axis=1), real.argmax(axis=1), 0)
+        return best
+
+    def quantize(x):
+        import numpy as np
+
+        lists = None
+        if cents is not None:
+            lists = nearest(x, cents)
+            if residual:
+                x = x - cents[lists]
+        if books is None:
+            return lists, x, None
+        n_sub, _, d = books.shape
+        codes = np.empty((len(x), n_sub), dtype=np.int32)
+        for m in range(n_sub):
+            codes[:, m] = nearest(x[:, m * d:(m + 1) * d], books[m])
+        return lists, x, codes
+
+    return quantize
+
+
+def _quantizer_kernel(
+    books,
+    vec_col: str,
+    coarse: _Coarse | None = None,
+    residual: bool = False,
+    names: tuple[str, ...] | None = None,
+):
+    """The one Arrow assign-and-accumulate pass behind every trained
+    quantizer (``mapInArrow``).  Per partition it reads the vector column
+    as (B, D) float64 blocks, runs :func:`_quantizer` (nearest pivot of
+    ``coarse`` and, with ``residual``, the residual against it; then the
+    nearest codeword per subspace of ``books``), and emits one of two
+    outputs:
+
+    * ``names is None`` — training partials :data:`_PARTIALS`: per
+      (subspace ``m``, codeword ``k``, dimension ``j``) with members in
+      this partition, ``s = Σ floor(v·2³⁰)`` over them and ``n`` their
+      count, once per partition.  ``floor`` converts like Spark's
+      double → BIGINT (NaN → 0, saturating), so summing the partials is
+      the exact integer sum the Catalyst round computed, in any order.
+    * ``names = (id, codes[, pivot_id])`` — encode rows: the input's
+      first column, the (M,) code array, and the pivot's id.
+
+    A null vector, a null element or a vector whose length is not
+    ``D = M·d`` raises ``ValueError`` naming ``vec_col`` (a Catalyst
+    ``zip_with`` would pad it with nulls and rank it first)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    quantize = _quantizer(books, None if coarse is None else coarse.vecs, residual)
+    n_sub, n_codes, d = np.asarray(books).shape
+    dim, fp = n_sub * d, float(_PQ_FIXED_POINT)
+    ids = None
+    if coarse is not None:
+        ids = pa.array(coarse.ids, type=to_arrow_type(coarse.id_type))
+
+    def block(col):
+        import numpy as np
+        import pyarrow.compute as pc
+
+        flat = col.flatten()
+        lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+        if col.null_count or flat.null_count or (lens != dim).any():
+            raise ValueError(
+                f"column {vec_col!r} has a null or ragged vector; every row "
+                f"needs {dim} non-null values"
+            )
+        return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
+
+    def fixed(r):
+        import numpy as np
+
+        q = np.nan_to_num(np.floor(r * fp), nan=0.0)
+        out = np.clip(q, -2.0**63, 2.0**63 - 1024).astype(np.int64)
+        out[q >= 2.0**63] = np.iinfo(np.int64).max
+        return out
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        sums = np.zeros((n_sub, n_codes, d), dtype=np.int64)
+        counts = np.zeros((n_sub, n_codes), dtype=np.int64)
+        for b in batches:
+            if not b.num_rows:
+                continue
+            lists, r, codes = quantize(block(b.column(b.num_columns - 1)))
+            if names is not None:
+                flat = pa.array(codes.ravel())
+                offsets = pa.array(
+                    np.arange(0, codes.size + 1, n_sub, dtype=np.int32)
+                )
+                cols = [b.column(0), pa.ListArray.from_arrays(offsets, flat)]
+                if ids is not None:
+                    cols.append(ids.take(pa.array(lists)))
+                yield pa.RecordBatch.from_arrays(cols, names=list(names))
+                continue
+            q = fixed(r)
+            for m in range(n_sub):
+                np.add.at(sums[m], codes[:, m], q[:, m * d:(m + 1) * d])
+                counts[m] += np.bincount(codes[:, m], minlength=n_codes)
+        if names is None and counts.any():
+            mk = np.argwhere(counts > 0)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(mk[:, 0], d), pa.int32()),
+                    pa.array(np.repeat(mk[:, 1], d), pa.int32()),
+                    pa.array(np.tile(np.arange(d), len(mk)), pa.int32()),
+                    pa.array(sums[mk[:, 0], mk[:, 1]].ravel(), pa.int64()),
+                    pa.array(np.repeat(counts[mk[:, 0], mk[:, 1]], d), pa.int64()),
+                ],
+                names=["m", "k", "j", "s", "n"],
+            )
+
+    return kernel
+
+
+@contextlib.contextmanager
+def _kernel_errors():
+    """Spark hands an executor-side exception to the driver wrapped in
+    its own type; re-raise a quantizer kernel's bad-vector ``ValueError``
+    as the ``ValueError`` it is."""
+    try:
+        yield
+    except ValueError:
+        raise
+    except Exception as exc:
+        found = re.search(r"ValueError: (column '.*)", str(exc))
+        if found is None:
+            raise
+        raise ValueError(found.group(1)) from exc
+
+
+def _lloyd_means(vecs: DataFrame, vec_col: str, books, coarse=None, residual=False):
+    """One Lloyd round's statistics over ``vecs``: the kernel's partials,
+    summed per (m, k, j) — integer sums, exact in any order (the
+    :func:`decomposition.gram_moments` reduction) — and turned into
+    fixed-point means ``(s→double / n) / 2³⁰``.  Returns ``(means,
+    counts)`` shaped like ``books`` and ``books[..., 0]``; means of empty
+    codewords are NaN."""
+    kernel = _quantizer_kernel(books, vec_col, coarse, residual)
+    with _kernel_errors():
+        rows = (
+            vecs.select(vec_col)
+            .mapInArrow(kernel, _PARTIALS)
+            .groupBy("m", "k", "j")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
+    shape = np.asarray(books).shape
+    means = np.full(shape, np.nan)
+    counts = np.zeros(shape[:2], dtype=np.int64)
+    if rows:
+        m, k, j, s, n = (np.array(c) for c in zip(*rows))
+        means[m, k, j] = s.astype(np.float64) / n.astype(np.float64) / float(
+            _PQ_FIXED_POINT
+        )
+        counts[m, k] = n
+    return means, counts
+
+
+def _hash_sample(vecs: DataFrame, id_col: str, fraction: float) -> DataFrame:
+    """Deterministic hash gate: keep ids whose xxhash64 bucket (out of
+    1e6) falls below ``fraction`` — stable under any partitioning."""
+    if not 0.0 < fraction <= 1.0:
+        raise ValueError("sample_fraction must be in (0, 1]")
+    return vecs.filter(
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000))
+        < F.lit(int(fraction * 1_000_000))
+    )
+
 
 def kmeans_pivots(
-
     corpus: DataFrame,
     iters: int = 3,
     modulus: int = 37,
@@ -645,17 +902,17 @@ def kmeans_pivots(
     Deterministic by construction, run-to-run and cluster-to-cluster:
 
     * init = the every-``modulus``-th seed set (no RNG);
-    * assignment tie-breaks on ``pivot_id`` (:func:`ivf_assign`);
+    * assignment is :func:`ivf_assign`'s (ties → lowest ``pivot_id``,
+      NaN distances greatest), reproduced by the quantizer kernel;
     * per-dimension means accumulate in 2⁻³⁰ fixed point —
       ``floor(val · 2³⁰)`` summed as BIGINT, exact and therefore
       **partition-order independent** (a double sum would drift with
       Spark's nondeterministic partial-agg merge order), then
       ``(sum→double / n) / 2³⁰``.  Every step is bit-identical across
       engines, so a one-round training is fully replayable in ANSI SQL
-      (see :func:`pq_codebooks_kmeans` for why decimal sums are NOT —
-      Spark's double→decimal cast goes through the shortest string
-      repr).  The 2⁻³⁰ quantization (~1e-9) is far below centroid
-      resolution on unit-norm data;
+      (see :func:`pq_codebooks_kmeans` for why decimal sums are NOT).
+      The 2⁻³⁰ quantization (~1e-9) is far below centroid resolution on
+      unit-norm data;
     * sampling gates are pure functions of the id, so the same rows
       train regardless of partitioning or cluster size (``df.sample``
       would not be reproducible across plans): ``sample_fraction`` gates
@@ -667,72 +924,46 @@ def kmeans_pivots(
     Sampling is the production-scale knob: centroid quality converges
     long before the full corpus is seen (IVF trains on ~1–10% in
     practice), so training cost should NOT grow linearly with corpus
-    size.  Each Lloyd round then shuffles only sample·N·D skinny rows
-    instead of N·D; the probe path still covers the full corpus.
+    size; the probe path still covers the full corpus.
 
-    Scale shape per iteration: one broadcast assignment pass over the
-    (sampled) corpus + one (cluster, dim) partial-aggregated shuffle of
-    skinny rows — fully map-side combinable; no vector ever funnels
-    through the driver and centroids stay a (P, D) DataFrame,
-    localCheckpoint'ed per round to keep the iterative lineage flat (same
-    pattern as ``dedup.dedup_keep_representatives``).  Empty clusters drop
-    out naturally (no assigned rows → no centroid row).
+    Scale shape per round: the centroids (P × D floats) go to the
+    executors inside :func:`_quantizer_kernel` — a PQ quantizer of one
+    subspace whose codewords are the centroids — which assigns each
+    (sampled) vector and emits per-partition partial sums; only those
+    (partitions × P × D rows) are shuffled and summed, and the P × D
+    means come back to the driver.  No vector is exploded, shuffled or
+    collected.  Empty clusters drop out.  Returns ``(pivot_id,
+    pivot_vec)`` with ``array<double>`` centroids (the seed relation
+    itself when ``iters`` is 0).
     """
     if sample_fraction is not None and sample_modulus is not None:
         raise ValueError("pass sample_fraction OR sample_modulus, not both")
-    # lazy checkpoints throughout the loop (optimization r18): the plan
-    # barrier (lineage truncation + materialize-once) is identical, but
-    # materialization folds into the next round's first job instead of
-    # dispatching a standalone eager job per round.
-    cents = ivf_pivots(corpus, id_col, vec_col, modulus).localCheckpoint(
-        eager=False
-    )
-    vecs = _spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__v")))
+    seeds = ivf_pivots(corpus, id_col, vec_col, modulus)
+    vecs = corpus.select(F.col(vec_col), F.col(id_col))
     if sample_fraction is not None:
-        if not 0.0 < sample_fraction <= 1.0:
-            raise ValueError("sample_fraction must be in (0, 1]")
-        # Deterministic hash gate: keep ids whose xxhash64 bucket (out of
-        # 1e6) falls below the fraction — stable under any partitioning.
-        vecs = vecs.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000))
-            < F.lit(int(sample_fraction * 1_000_000))
-        )
+        vecs = _hash_sample(vecs, id_col, sample_fraction)
     elif sample_modulus is not None:
         if sample_modulus < 1:
             raise ValueError("sample_modulus must be >= 1")
         vecs = vecs.filter(F.col(id_col) % sample_modulus == 0)
+    if iters <= 0:
+        return seeds
+    ids, cents, id_type = _pivot_matrix(seeds)
     for _ in range(iters):
-        # keep_cols carries the vector through the (now zero-shuffle)
-        # assignment, so no re-join by id per Lloyd round — each round is
-        # one narrow assignment projection + the (cluster, dim) aggregate.
-        assigned = ivf_assign(
-            vecs, cents, 1, id_col, "__v", keep_cols=("__v",)
-        )
-        dims = assigned.select(
-            "pivot_id", F.posexplode(F.col("__v")).alias("dim", "val")
-        )
-        sums = dims.groupBy("pivot_id", "dim").agg(
-            F.sum(
-                F.floor(F.col("val").cast("double") * F.lit(_PQ_FIXED_POINT))
-            ).alias("s"),
-            F.count("*").alias("n"),
-        )
-        cents = (
-            sums.withColumn(
-                "mean",
-                F.col("s").cast("double") / F.col("n")
-                / F.lit(float(_PQ_FIXED_POINT)),
-            )
-            .groupBy("pivot_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "mean"))),
-                    lambda x: x["mean"],
-                ).alias("pivot_vec")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return cents
+        if not ids:
+            break
+        means, counts = _lloyd_means(vecs, vec_col, cents[None])
+        keep = counts[0] > 0
+        ids = [i for i, kept in zip(ids, keep) if kept]
+        cents = means[0][keep]
+    spark = corpus.sparkSession
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(list(zip(ids, cents.tolist())), 1),
+        StructType([
+            StructField("pivot_id", id_type),
+            StructField("pivot_vec", ArrayType(DoubleType()), nullable=False),
+        ]),
+    )
 
 
 def ivf_topk(
@@ -1143,6 +1374,30 @@ def mean_pool_chunks(
 # Product quantization (Jégou et al., TPAMI 2011): compressed-domain ANN
 # ---------------------------------------------------------------------------
 
+def _seed_vectors(corpus, n_codes, id_col, vec_col, modulus) -> np.ndarray:
+    rows = (
+        corpus.filter(F.col(id_col) % modulus == 0)
+        .orderBy(id_col)
+        .limit(n_codes)
+        .select(vec_col)
+        .collect()
+    )
+    if len(rows) < n_codes:
+        raise ValueError(
+            f"corpus has only {len(rows)} vectors with {id_col} % {modulus} == 0; "
+            f"need {n_codes} codebook seeds"
+        )
+    return _dense([r[0] for r in rows], vec_col)
+
+
+def _split_books(seeds: np.ndarray, n_subspaces: int) -> np.ndarray:
+    """(K, D) seed vectors → (M, K, D/M) per-subspace codebooks."""
+    n_codes, dim = seeds.shape
+    if dim % n_subspaces:
+        raise ValueError(f"dim {dim} not divisible by {n_subspaces} subspaces")
+    return seeds.reshape(n_codes, n_subspaces, -1).transpose(1, 0, 2)
+
+
 def pq_codebooks_from_corpus(
     corpus: DataFrame,
     n_subspaces: int = 8,
@@ -1162,26 +1417,8 @@ def pq_codebooks_from_corpus(
     in the plan — PQ's whole point is that the codebook is small enough
     to live everywhere.
     """
-    rows = (
-        corpus.filter(F.col(id_col) % modulus == 0)
-        .orderBy(id_col)
-        .limit(n_codes)
-        .select(vec_col)
-        .collect()
-    )
-    if len(rows) < n_codes:
-        raise ValueError(
-            f"corpus has only {len(rows)} vectors with {id_col} % {modulus} == 0; "
-            f"need {n_codes} codebook seeds"
-        )
-    dim = len(rows[0][0])
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by {n_subspaces} subspaces")
-    d = dim // n_subspaces
-    return [
-        [[float(r[0][m * d + j]) for j in range(d)] for r in rows]
-        for m in range(n_subspaces)
-    ]
+    seeds = _seed_vectors(corpus, n_codes, id_col, vec_col, modulus)
+    return _split_books(seeds, n_subspaces).tolist()
 
 
 def pq_codebooks_kmeans(
@@ -1201,7 +1438,7 @@ def pq_codebooks_kmeans(
     Deterministic by the same construction as :func:`kmeans_pivots`:
 
     * init = the fixed ``id % modulus`` sample codewords (no RNG);
-    * assignment = :func:`_pq_codes_kernel`'s first-min argmin (ties →
+    * assignment = the first-min argmin of :func:`_quantizer` (ties →
       lowest code id), the SAME arithmetic the encode pass uses, so the
       quantizer that trains is the quantizer that encodes;
     * per-dimension means accumulate in 2⁻³⁰ fixed point:
@@ -1223,66 +1460,47 @@ def pq_codebooks_kmeans(
     ``sample_fraction`` gates training rows by ``xxhash64(id)`` exactly
     like :func:`kmeans_pivots` — the production-scale knob: PQ codebooks
     converge on a ~1% sample, so training cost must not grow with corpus
-    size.  Per iteration the plan is one Arrow assignment pass over the
-    (sampled) corpus plus one (subspace, code, dim) partial-aggregated
-    shuffle of skinny decimal rows — fully map-side combinable, nothing
-    driver-side except the (M·K·d)-float codebook itself, which is the
-    artifact PQ ships broadcast everywhere anyway.
+    size.  Per iteration the plan is one :func:`_quantizer_kernel` pass
+    over the (sampled) corpus that assigns every subspace and emits
+    per-partition BIGINT partial sums, then a shuffle of those partials
+    (at most partitions × M·K·d rows) into one (subspace, code, dim)
+    sum.  Nothing reaches the driver except the (M·K·d)-float means —
+    the codebook PQ ships broadcast everywhere anyway.
     """
-    books = pq_codebooks_from_corpus(
-        corpus, n_subspaces, n_codes, id_col, vec_col, modulus
-    )
-    d = len(books[0][0])
-    vecs = corpus.select(F.col(id_col), F.col(vec_col).alias("__v"))
+    return _pq_lloyd(
+        corpus, n_subspaces, n_codes, iters, id_col, vec_col, modulus,
+        sample_fraction,
+    ).tolist()
+
+
+def _pq_lloyd(
+    corpus: DataFrame,
+    n_subspaces: int,
+    n_codes: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    modulus: int = 31,
+    sample_fraction: float | None = None,
+    coarse: _Coarse | None = None,
+) -> np.ndarray:
+    """:func:`pq_codebooks_kmeans` as an (M, K, d) array; with ``coarse``
+    it trains on each vector's residual against its nearest pivot —
+    seeds included — without materializing them."""
+    seeds = _seed_vectors(corpus, n_codes, id_col, vec_col, modulus)
+    if coarse is not None:
+        if not coarse.ids:
+            raise ValueError("no coarse pivots to take residuals against")
+        seeds = _quantizer(None, coarse.vecs, residual=True)(seeds)[1]
+    books = _split_books(seeds, n_subspaces)
+    vecs = corpus.select(F.col(vec_col), F.col(id_col))
     if sample_fraction is not None:
-        if not 0.0 < sample_fraction <= 1.0:
-            raise ValueError("sample_fraction must be in (0, 1]")
-        vecs = vecs.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000))
-            < F.lit(int(sample_fraction * 1_000_000))
-        )
+        vecs = _hash_sample(vecs, id_col, sample_fraction)
     for _ in range(iters):
-        # One pass, no join (r19, guide §2.4): the subspace code for an
-        # exploded dimension is just ``codes[__dim div d]`` off the SAME
-        # row — the previous shape posexploded assignment and dims
-        # separately and shuffle-joined N×dim rows back to N×M rows per
-        # iteration.  The Arrow codes kernel still evaluates once per
-        # input row (materialized by its ArrowEvalPython node BEFORE
-        # the Generate — the r18 double-evaluation lesson); sums group
-        # by the identical (m, k, j) cells, so every fixed-point mean
-        # is bit-identical to the joined form.
-        dims = vecs.select(
-            _pq_codes_kernel(books)(F.col("__v")).alias("__codes"),
-            F.posexplode("__v").alias("__dim", "__val"),
-        ).select(
-            (F.col("__dim") / d).cast("int").alias("__m"),
-            F.element_at(
-                "__codes", (F.col("__dim") / d).cast("int") + 1
-            ).alias("__k"),
-            (F.col("__dim") % d).alias("__j"),
-            F.floor(
-                F.col("__val").cast("double") * F.lit(_PQ_FIXED_POINT)
-            ).alias("__q"),
+        means, counts = _lloyd_means(
+            vecs, vec_col, books, coarse, residual=coarse is not None
         )
-        means = (
-            dims.groupBy("__m", "__k", "__j")
-            .agg(F.sum("__q").alias("s"), F.count("*").alias("n"))
-            .select(
-                "__m", "__k", "__j",
-                (
-                    F.col("s").cast("double") / F.col("n")
-                    / F.lit(float(_PQ_FIXED_POINT))
-                ).alias("mean"),
-            )
-            .collect()
-        )
-        new = [
-            [list(books[m][k]) for k in range(n_codes)]
-            for m in range(n_subspaces)
-        ]
-        for r in means:
-            new[r["__m"]][r["__k"]][r["__j"]] = r["mean"]
-        books = new
+        books = np.where(counts[..., None] > 0, means, books)
     return books
 
 
@@ -1323,38 +1541,6 @@ def _pq_subdists_kernel(codebooks: list[list[list[float]]]):
     return subdists
 
 
-def _pq_codes_kernel(codebooks: list[list[list[float]]]):
-    """Arrow kernel: per input vector, the array of per-subspace nearest
-    code ids.  Same distance arithmetic as :func:`_pq_subdists_kernel`
-    (left-associative adds, explicit multiply); ``np.argmin`` returns the
-    FIRST minimum, matching the oracle's ``ORDER BY dist, k`` tie-break.
-    (A Catalyst argmin over the distance array costs n_sub × n_codes
-    interpreted ``element_at`` calls per row — measured ~3 s of the
-    encode pass at sf0.1 before this kernel absorbed it.)"""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    books = np.asarray(codebooks, dtype=np.float64)  # (M, K, d)
-    n_sub, n_codes, d = books.shape
-
-    @pandas_udf("array<int>")
-    def codes(col):
-        # type: (pd.Series) -> pd.Series
-        if not len(col):
-            return pd.Series([], dtype="object")
-        v = np.stack([np.asarray(e, dtype=np.float64) for e in col])
-        sub = v.reshape(len(v), n_sub, 1, d)
-        diff = sub - books[None]
-        sq = diff * diff
-        acc = sq[..., 0].copy()
-        for j in range(1, d):
-            acc = acc + sq[..., j]
-        best = np.argmin(acc, axis=2).astype(np.int32)  # (B, M), first-min
-        return pd.Series(list(best))
-
-    return codes
-
-
 def _adc_score_kernel(n_sub: int, n_codes: int):
     """Arrow kernel for the ADC scoring projection: per (pq_code, lut)
     row, ``Σ_m lut[m·K + code_m]`` with an explicit left-associative add
@@ -1393,13 +1579,34 @@ def pq_encode(
 ) -> DataFrame:
     """Encode each vector as ``n_subspaces`` small codes: per subspace the
     nearest codebook entry by squared L2 (tie → lowest code id).  One
-    Catalyst projection — at 100 TB this is the compression pass that
-    shrinks the vector column ~``32·dim / (subspaces·log2 K)``× before it
-    ever hits an index."""
-    return corpus.select(
-        F.col(id_col),
-        _pq_codes_kernel(codebooks)(F.col(vec_col)).alias(out),
+    :func:`_quantizer_kernel` pass — at 100 TB this is the compression
+    pass that shrinks the vector column ~``32·dim / (subspaces·log2 K)``×
+    before it ever hits an index."""
+    return _pq_codes(corpus, codebooks, id_col, vec_col, out=out)
+
+
+def _pq_codes(
+    df: DataFrame,
+    codebooks,
+    id_col: str,
+    vec_col: str,
+    coarse: _Coarse | None = None,
+    residual: bool = False,
+    out: str = "pq_code",
+) -> DataFrame:
+    """``(id, out)`` code rows through :func:`_quantizer_kernel`; with
+    ``coarse`` also the nearest pivot's ``pivot_id``, and with
+    ``residual`` the codes encode ``v − pivot``."""
+    fields = [df.schema[id_col], StructField(out, ArrayType(IntegerType()))]
+    if coarse is not None:
+        fields.append(StructField("pivot_id", coarse.id_type))
+    schema = StructType(fields)
+    if coarse is not None and not coarse.ids:
+        return df.sparkSession.createDataFrame([], schema)
+    kernel = _quantizer_kernel(
+        codebooks, vec_col, coarse, residual, tuple(schema.names)
     )
+    return df.select(F.col(id_col), F.col(vec_col)).mapInArrow(kernel, schema)
 
 
 def pq_adc_topk(
@@ -1546,19 +1753,12 @@ def ivfpq_topk(
     q_probes = ivf_assign(
         queries, pivots, nprobe=nprobe, id_col=query_id_col, vec_col=vec_col
     ).select(query_id_col, "pivot_id")
-    # One corpus pass carrying assignment AND codes (keep_cols through the
-    # zero-shuffle assignment, encode kernel on top), materialized for the
-    # same per-output-row re-evaluation hazard as pq_adc_topk (the
-    # candidate join replicates code rows per query).  Candidates then
-    # join codes directly on pivot_id — the old per-call id-join of a
-    # (query, id) candidate list back to the code table is gone
-    # (optimization r18, guide §2.4).
-    codes = ivf_assign(
-        corpus, pivots, nprobe=1, id_col=id_col, vec_col=vec_col,
-        keep_cols=(vec_col,),
-    ).select(
-        F.col(id_col), F.col("pivot_id"),
-        _pq_codes_kernel(codebooks)(F.col(vec_col)).alias("pq_code"),
+    # One quantizer-kernel pass carrying assignment AND codes,
+    # materialized for the same per-output-row re-evaluation hazard as
+    # pq_adc_topk (the candidate join replicates code rows per query).
+    # Candidates then join codes directly on pivot_id.
+    codes = _pq_codes(
+        corpus, codebooks, id_col, vec_col, _pivot_matrix(pivots)
     ).localCheckpoint(eager=False)
     n_codes = len(codebooks[0])
     q_lut = queries.select(
@@ -1585,54 +1785,6 @@ def ivfpq_topk(
 def _as_double(col) -> Column:
     return F.transform(F.col(col) if isinstance(col, str) else col,
                        lambda x: x.cast("double"))
-
-
-def residual_frame(
-    corpus: DataFrame,
-    pivots: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Each vector's residual against its nearest coarse centroid:
-    ``(id, pivot_id, r = double(v) − double(c))``.  Double-on-double
-    subtraction so any IEEE engine replays it bit-for-bit.
-
-    Zero-shuffle (optimization r18, guide §2.4): the argmin struct
-    carries the winning pivot's VECTOR alongside its id, so assignment
-    and residual subtraction happen in one narrow projection over the
-    broadcast pivot array.  The previous form paid the assignment
-    shuffle, a corpus re-join by id (shuffling the heavy vectors), and a
-    second pivot join.  Selection semantics are unchanged: the struct
-    ordering compares ``(__d, pivot_id)`` first and ``pivot_id`` is
-    unique, so the trailing ``pivot_vec`` field never participates."""
-    parr = _pivot_array_frame(pivots)
-    best = F.array_min(
-        F.transform(
-            F.col("__pivarr"),
-            lambda p: F.struct(
-                _l2sq(F.col("__resv"), p["pivot_vec"]).alias("__d"),
-                p["pivot_id"].alias("pivot_id"),
-                p["pivot_vec"].alias("pivot_vec"),
-            ),
-        )
-    )
-    # inline(array(best)) materializes the argmin ONCE per row (Generate
-    # node) — projecting two fields off the struct expression would run
-    # the P-way distance fold twice per row (§4.4 duplication hazard).
-    return (
-        corpus.select(F.col(id_col), F.col(vec_col).alias("__resv"))
-        .join(F.broadcast(parr), how="cross")
-        .where(F.size(F.col("__pivarr")) > 0)
-        .select(F.col(id_col), F.col("__resv"), F.inline(F.array(best)))
-        .select(
-            F.col(id_col),
-            F.col("pivot_id"),
-            F.zip_with(
-                _as_double("__resv"), _as_double(F.col("pivot_vec")),
-                lambda x, y: x - y,
-            ).alias(vec_col),
-        )
-    )
 
 
 def ivfpq_residual_topk(
@@ -1672,10 +1824,11 @@ def ivfpq_residual_topk(
     per-probe ADC, and the exact re-rank.
 
     Scale shape is identical to :func:`ivfpq_topk` (every stage touches
-    the small thing); the extra cost is one broadcast join against the
-    tiny pivot set during encode, paid at index-build time.
+    the small thing): training and encode are :func:`_quantizer_kernel`
+    passes that take each residual in flight, so no residual relation
+    is ever materialized, joined or shuffled.
     ``codebooks`` overrides training for callers that cache (they MUST
-    come from this function's own residual frame to mean anything).
+    be residual codebooks under the same pivots to mean anything).
     ``pivots`` overrides the coarse quantizer — pass
     :func:`kmeans_pivots` output for the production pairing: residuals
     only concentrate when the centroids actually sit in the data's
@@ -1686,20 +1839,19 @@ def ivfpq_residual_topk(
     """
     if pivots is None:
         pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    res = residual_frame(corpus, pivots, id_col, vec_col)
+    coarse = _pivot_matrix(pivots)
     if codebooks is None:
-        codebooks = pq_codebooks_kmeans(
-            res, n_subspaces=n_subspaces, n_codes=n_codes, iters=iters,
-            id_col=id_col, vec_col=vec_col,
-        )
-    # One residual pass carrying assignment AND codes (residual_frame is
-    # already a single zero-shuffle projection), materialized for the same
-    # per-output-row re-evaluation hazard as pq_adc_topk.  Candidates join
-    # the code table directly on pivot_id — no per-call id-join of a
-    # candidate list back to the codes (optimization r18, guide §2.4).
-    codes = res.select(
-        F.col(id_col), F.col("pivot_id"),
-        _pq_codes_kernel(codebooks)(F.col(vec_col)).alias("pq_code"),
+        codebooks = _pq_lloyd(
+            corpus, n_subspaces, n_codes, iters, id_col, vec_col,
+            coarse=coarse,
+        ).tolist()
+    # One residual encode pass carrying assignment AND codes, materialized
+    # for the same per-output-row re-evaluation hazard as pq_adc_topk.
+    # Candidates join the code table directly on pivot_id — no per-call
+    # id-join of a candidate list back to the codes (optimization r18,
+    # guide §2.4).
+    codes = _pq_codes(
+        corpus, codebooks, id_col, vec_col, coarse, residual=True
     ).localCheckpoint(eager=False)
     # keep_cols carries the query vector through the probe assignment, so
     # the per-(query, probed-list) LUT needs no join back to ``queries``.
@@ -2781,20 +2933,18 @@ def _train_ivfpq(
     corpus, id_col, vec_col, modulus=37, n_subspaces=16, n_codes=16, iters=1
 ):
     pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    codebooks = pq_codebooks_kmeans(
-        residual_frame(corpus, pivots, id_col, vec_col),
-        n_subspaces=n_subspaces, n_codes=n_codes, iters=iters,
-        id_col=id_col, vec_col=vec_col,
-    )
+    codebooks = _pq_lloyd(
+        corpus, n_subspaces, n_codes, iters, id_col, vec_col,
+        coarse=_pivot_matrix(pivots),
+    ).tolist()
     return {"modulus": modulus, "codebooks": codebooks}, pivots
 
 
 def _encode_ivfpq(df, meta, pivots):
     """Residual codes under the stored codebooks, keyed by list."""
-    i = meta["id_col"]
-    res = residual_frame(df, pivots, i, meta["vec_col"])
-    return pq_encode(res, meta["codebooks"], i, meta["vec_col"]).join(
-        res.select(i, "pivot_id"), i
+    return _pq_codes(
+        df, meta["codebooks"], meta["id_col"], meta["vec_col"],
+        _pivot_matrix(pivots), residual=True,
     )
 
 
@@ -3038,7 +3188,8 @@ def _write_table(rows: DataFrame, path: str, by_list: bool, mode: str) -> None:
     w = rows.write.mode(mode)
     if by_list:
         w = w.partitionBy("pivot_id")
-    w.parquet(path)
+    with _kernel_errors():
+        w.parquet(path)
 
 
 def _build_artifact(

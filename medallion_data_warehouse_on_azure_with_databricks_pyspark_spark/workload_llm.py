@@ -1899,13 +1899,9 @@ def emb_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the _RESIDUAL_BOOKS_CACHE memo fell to the same VERDICT r18 #1
     # ruling as the SQ8/BQ stat caches); emb_ivfpq_indexed_topk is the
     # amortized shape — its artifact freezes the trained books.
-    res = similarity.residual_frame(emb, similarity.ivf_pivots(emb))
-    books = similarity.pq_codebooks_kmeans(
-        res, n_subspaces=16, n_codes=16, iters=1
-    )
     return similarity.ivfpq_residual_topk(
         emb, _emb_queries(emb), k=10, nprobe=12, shortlist=100,
-        codebooks=books,
+        n_subspaces=16, n_codes=16, iters=1,
     )
 
 

@@ -24,9 +24,10 @@ EMB = "/root/testdata/sf0.001/embeddings.parquet"
 SCHEMA = "vec_id long, embedding array<float>, op string"
 
 
-
-#: opt-in tier (pytest.ini): checkpointed streaming-ingest e2e harness
-pytestmark = pytest.mark.slow
+#: opt-in tier (pytest.ini): the checkpointed streaming-ingest e2e
+#: harnesses, all but the batch-parity case (default tier: its appends
+#: run the quantizer kernel's residual encode).
+slow = pytest.mark.slow
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -129,6 +130,7 @@ def test_streaming_ingest_matches_batch_append_and_excludes_tombstones(
     )
 
 
+@slow
 def test_streaming_ingest_without_op_column_is_all_upserts(spark, tmp_path):
     emb = spark.read.parquet(EMB)
     standing = emb.filter(F.col("vec_id") < 300)
@@ -156,6 +158,7 @@ def test_streaming_ingest_without_op_column_is_all_upserts(spark, tmp_path):
     assert {r.vec_id for r in arrivals.select("vec_id").collect()} <= got
 
 
+@slow
 def test_index_ingest_dispatches_by_family_and_rejects_unknown(
     spark, tmp_path
 ):
@@ -204,6 +207,7 @@ def test_index_ingest_dispatches_by_family_and_rejects_unknown(
         _append_fn("minhash")
 
 
+@slow
 def test_index_ingest_serves_ivfbq_family(spark, tmp_path):
     """The streaming wire's newest family: an IVF-BQ artifact maintained
     through the generic `index_ingest` equals direct append maintenance
@@ -255,6 +259,7 @@ def _write_one_file(df, src, name):
     shutil.rmtree(tmp)
 
 
+@slow
 def test_drifted_appends_flip_rebuild_flag_and_rebuild_heals(spark, tmp_path):
     """The frozen-quantizer loop closes: streaming appends of a shifted
     cluster degrade stale-pivot recall, the post-batch evaluation raises
@@ -306,6 +311,7 @@ def test_drifted_appends_flip_rebuild_flag_and_rebuild_heals(spark, tmp_path):
     assert index_stream.drift_flag(idx) is None
 
 
+@slow
 def test_undrifted_appends_do_not_flag(spark, tmp_path):
     """In-distribution arrivals (inside the existing clusters) keep the
     stale pivots optimal — the evaluation runs and raises nothing."""
@@ -341,6 +347,7 @@ def test_undrifted_appends_do_not_flag(spark, tmp_path):
     assert index_stream.drift_flag(idx) is None
 
 
+@slow
 def test_rebuild_index_heals_drift_and_clears_flag(spark, tmp_path):
     """The flag's actuator: after drifted appends raise the rebuild
     flag, one rebuild_index call retrains the quantizer on the live
@@ -386,6 +393,7 @@ def test_rebuild_index_heals_drift_and_clears_flag(spark, tmp_path):
     assert index_maintenance.read_tombstones(spark, idx) is None
 
 
+@slow
 def test_rebuild_index_refuses_flat_families(spark, tmp_path):
     import pytest
 
@@ -396,6 +404,7 @@ def test_rebuild_index_refuses_flat_families(spark, tmp_path):
         index_maintenance.rebuild_index(spark, idx)
 
 
+@slow
 def test_index_health_reports_the_maintenance_signals(spark, tmp_path):
     rows = [(i, [0.5 + 0.01 * i, 0.05]) for i in range(10)]
     rows += [(10 + i, [10.0 + 0.01 * i, 0.05]) for i in range(10)]

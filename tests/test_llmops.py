@@ -1244,6 +1244,189 @@ def test_ivfpq_residual_full_probe_includes_all_candidates(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
+# ---------------------------------------------------------------------------
+# Quantizer training: bit-exactness against the Catalyst Lloyd round
+# ---------------------------------------------------------------------------
+
+#: 2³⁰, the fixed-point scale of the Lloyd means (restated here so the
+#: reference below depends on nothing but Spark SQL).
+_FP = 1 << 30
+
+
+def _hash_gate(vecs, fraction):
+    return vecs.filter(
+        F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000))
+        < F.lit(int(fraction * 1_000_000))
+    )
+
+
+def _catalyst_pq_books(emb, n_sub, n_codes, iters, fraction=None):
+    """Reference PQ training: a Catalyst argmin over each subspace's
+    codewords (struct order: distance, then code id), then the
+    ``posexplode`` + ``groupBy`` fixed-point round."""
+    books = similarity.pq_codebooks_from_corpus(emb, n_sub, n_codes)
+    d = len(books[0][0])
+    vecs = emb.select("vec_id", F.col("embedding").alias("__v"))
+    if fraction is not None:
+        vecs = _hash_gate(vecs, fraction)
+    for _ in range(iters):
+        lit = F.array(*[
+            F.array(*[F.array(*[F.lit(float(x)) for x in cw]) for cw in book])
+            for book in books
+        ])
+        codes = F.transform(
+            F.sequence(F.lit(0), F.lit(n_sub - 1)),
+            lambda m: F.array_min(F.transform(
+                F.sequence(F.lit(0), F.lit(n_codes - 1)),
+                lambda k: F.struct(
+                    similarity._l2sq(
+                        F.slice("__v", m * d + 1, F.lit(d)),
+                        F.element_at(F.element_at(lit, m + 1), k + 1),
+                    ).alias("d"),
+                    k.alias("k"),
+                ),
+            ))["k"],
+        )
+        dims = vecs.select("__v", codes.alias("__codes")).select(
+            "__codes", F.posexplode("__v").alias("__dim", "__val")
+        ).select(
+            (F.col("__dim") / d).cast("int").alias("__m"),
+            F.element_at(
+                "__codes", (F.col("__dim") / d).cast("int") + 1
+            ).alias("__k"),
+            (F.col("__dim") % d).alias("__j"),
+            F.floor(F.col("__val").cast("double") * F.lit(_FP)).alias("__q"),
+        )
+        means = dims.groupBy("__m", "__k", "__j").agg(
+            F.sum("__q").alias("s"), F.count("*").alias("n")
+        ).select(
+            "__m", "__k", "__j",
+            (F.col("s").cast("double") / F.col("n") / F.lit(float(_FP))).alias("mean"),
+        ).collect()
+        new = [[list(cw) for cw in book] for book in books]
+        for r in means:
+            new[r["__m"]][r["__k"]][r["__j"]] = r["mean"]
+        books = new
+    return books
+
+
+def _catalyst_kmeans(emb, iters, modulus, sample_modulus=None, fraction=None):
+    """Reference k-means: ``ivf_assign`` then the ``posexplode`` +
+    ``groupBy`` fixed-point round, as ``{pivot_id: centroid}``."""
+    cents = similarity.ivf_pivots(emb, modulus=modulus)
+    vecs = emb.select("vec_id", F.col("embedding").alias("__v"))
+    if fraction is not None:
+        vecs = _hash_gate(vecs, fraction)
+    if sample_modulus is not None:
+        vecs = vecs.filter(F.col("vec_id") % sample_modulus == 0)
+    for _ in range(iters):
+        assigned = similarity.ivf_assign(
+            vecs, cents, 1, "vec_id", "__v", keep_cols=("__v",)
+        )
+        sums = assigned.select(
+            "pivot_id", F.posexplode("__v").alias("dim", "val")
+        ).groupBy("pivot_id", "dim").agg(
+            F.sum(F.floor(F.col("val").cast("double") * F.lit(_FP))).alias("s"),
+            F.count("*").alias("n"),
+        )
+        cents = sums.withColumn(
+            "mean", F.col("s").cast("double") / F.col("n") / F.lit(float(_FP))
+        ).groupBy("pivot_id").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "mean"))),
+                lambda x: x["mean"],
+            ).alias("pivot_vec")
+        ).localCheckpoint()
+    return {r["pivot_id"]: tuple(r["pivot_vec"]) for r in cents.collect()}
+
+
+def _centroids(pivots):
+    return {r["pivot_id"]: tuple(r["pivot_vec"]) for r in pivots.collect()}
+
+
+@pytest.mark.parametrize("fraction", [None, 0.5])
+def test_pq_training_matches_the_catalyst_round(spark, fraction):
+    emb = spark.read.parquet(EMB)
+    got = similarity.pq_codebooks_kmeans(
+        emb, 8, 16, iters=2, sample_fraction=fraction
+    )
+    assert got == _catalyst_pq_books(emb, 8, 16, 2, fraction)
+
+
+@pytest.mark.parametrize(
+    "gate", [{"sample_modulus": 4}, {"sample_fraction": 0.25}], ids=str
+)
+def test_kmeans_training_matches_the_catalyst_round(spark, gate):
+    emb = spark.read.parquet(EMB)
+    got = _centroids(similarity.kmeans_pivots(emb, iters=2, modulus=37, **gate))
+    want = _catalyst_kmeans(
+        emb, 2, 37, gate.get("sample_modulus"), gate.get("sample_fraction")
+    )
+    assert got == want
+
+
+def _toy_corpus(spark, rows):
+    return spark.createDataFrame(
+        [(i, v) for i, v in enumerate(rows)], "vec_id long, embedding array<float>"
+    )
+
+
+def _toy_vectors(n=160, dim=8, seed=3):
+    rng = np.random.default_rng(seed)
+    return rng.normal(size=(n, dim)).astype(np.float32).tolist()
+
+
+def test_quantizer_training_ties_and_empty_clusters(spark):
+    # Duplicate seeds tie on every distance: the lowest code id / pivot id
+    # wins, so the duplicate's cluster stays empty.  PQ keeps an empty
+    # code's previous codeword (codebooks stay n_codes wide); k-means
+    # drops an empty centroid.
+    rows = _toy_vectors()
+    rows[31] = rows[0]   # PQ seeds are ids 0, 31, 62, 93 (modulus 31)
+    rows[37] = rows[0]   # k-means seeds are ids 0, 37, 74, 111, 148
+    emb = _toy_corpus(spark, rows)
+    seeds = similarity.pq_codebooks_from_corpus(emb, 2, 4)
+    books = similarity.pq_codebooks_kmeans(emb, 2, 4, iters=1)
+    assert books == _catalyst_pq_books(emb, 2, 4, 1)
+    assert [b[1] for b in books] == [b[1] for b in seeds]
+    assert all(b[0] != s[0] for b, s in zip(books, seeds))
+
+    got = _centroids(similarity.kmeans_pivots(emb, iters=2, modulus=37))
+    assert got == _catalyst_kmeans(emb, 2, 37)
+    assert sorted(got) == [0, 74, 111, 148]
+
+
+def test_kmeans_nan_distances_rank_greatest(spark):
+    # A NaN in pivot 0 makes every distance to it NaN: no vector may pick
+    # it over a real distance (ivf_assign's order), while a vector whose
+    # distances are all NaN goes to the lowest pivot id.  Fixed-point sums
+    # take floor(NaN) as 0, like Spark's double -> BIGINT.
+    rows = _toy_vectors()
+    rows[0][3] = float("nan")
+    rows[5][1] = float("nan")
+    emb = _toy_corpus(spark, rows)
+    got = _centroids(similarity.kmeans_pivots(emb, iters=1, modulus=37))
+    want = _catalyst_kmeans(emb, 1, 37)
+    assert repr(sorted(got.items())) == repr(sorted(want.items()))
+
+
+@pytest.mark.parametrize("bad", ["null", "ragged", "null element"])
+def test_quantizers_reject_null_and_ragged_vectors(spark, tmp_path, bad):
+    rows = _toy_vectors()
+    clean = _toy_corpus(spark, rows)
+    rows[7] = {"null": None, "ragged": rows[7][:5],
+               "null element": rows[7][:2] + [None] + rows[7][3:]}[bad]
+    emb = _toy_corpus(spark, rows)
+    with pytest.raises(ValueError, match="'embedding'"):
+        similarity.kmeans_pivots(emb, iters=1, modulus=37).collect()
+    with pytest.raises(ValueError, match="'embedding'"):
+        similarity.pq_codebooks_kmeans(emb, 2, 4, iters=1)
+    path = str(tmp_path / "ivfpq")
+    similarity.build_ivfpq_index(clean, path, modulus=37, n_subspaces=2, n_codes=4)
+    with pytest.raises(ValueError, match="'embedding'"):
+        similarity.append_to_ivfpq_index(emb.filter("vec_id = 7"), path)
+
+
 def test_sq8_topk_recall_floor_and_code_range(spark):
     """SQ8's per-dimension error is bounded by step/2, so on the isotropic
     corpus recall@10 should be near-exact — far above the coarse-quantizer

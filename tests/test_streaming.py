@@ -229,6 +229,10 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     write("b1.parquet", [(1, base, 1.0), (2, base + pd.Timedelta("1min"), 2.0)])
     write("b2.parquet", [(2, base + pd.Timedelta("2min"), 99.0),   # dup key
                          (3, base + pd.Timedelta("3min"), 3.0)])
+    # the file source orders micro-batches by modification time; two files
+    # written in the same millisecond would arrive in listing order
+    t = os.path.getmtime(src / "b2.parquet") - 60
+    os.utime(src / "b1.parquet", (t, t))
 
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, v double")

@@ -8,6 +8,9 @@ Usage::
 Writes ``plans/r19/<lane>_<tag>.txt`` (the directory is ``ROUND_DIR``).
 These files back plan-shape claims (Exchange counts, join strategies,
 pushed filters) made about the code, so they are committed artifacts.
+Below the lane's own plan, each file lists the plans of the queries the
+lane ran eagerly while building its DataFrame (quantizer training,
+index builds), read from Spark's SQL status store.
 """
 
 from __future__ import annotations
@@ -40,12 +43,21 @@ def main() -> None:
 
     spark = session.get_spark(app_name="plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
+    store = spark._jsparkSession.sharedState().statusStore()
     for name in lanes:
         try:
+            seen = store.executionsCount()
             df = workload.QUERIES[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
+            ran = store.executionsList(seen, store.executionsCount() - seen)
+            for i in range(ran.size()):
+                plan += (
+                    f"\n\n== eager query {i + 1} of {ran.size()} run while "
+                    f"building the lane ==\n"
+                    + ran.apply(i).physicalPlanDescription()
+                )
         except Exception:
             plan = "CAPTURE FAILED:\n" + traceback.format_exc()
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
