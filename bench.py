@@ -10,7 +10,10 @@ The per-query timing map therefore goes to (a) an earlier stdout line keyed
 script — never the final line.
 
 Data dir: ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``);
-parallelism: ``local[$SPARK_GRAFT_CPUS]`` (default 32).
+parallelism: ``session.get_spark``'s master (``local[$SPARK_GRAFT_CPUS]``
+for local runs).  The per-core detail copy ``BENCH_QUERIES_c<N>.json``
+takes N from the session's ``defaultParallelism``, the cores the run
+really had.
 
 Each query is forced with a cheap terminal action (``count`` on the final
 plan) so timings cover scan → shuffle → result without driver-side collect
@@ -548,6 +551,7 @@ def main() -> None:
     # Stop the session FIRST so shutdown-time log lines (state-store
     # maintenance, executor teardown) can't land after the JSON result; the
     # final JSON line must be the last stdout the driver sees.
+    cores = spark.sparkContext.defaultParallelism
     spark.stop()
     sys.stdout.flush()
     sys.stderr.flush()
@@ -564,8 +568,7 @@ def main() -> None:
     # (n_common: 0).  Additions-only: the legacy file keeps its exact
     # behavior for driver compatibility; the suffixed copy preserves
     # each core count's detail side by side.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    with open(os.path.join(here, f"BENCH_QUERIES_c{cpus}.json"), "w") as fh:
+    with open(os.path.join(here, f"BENCH_QUERIES_c{cores}.json"), "w") as fh:
         fh.write(detail_line + "\n")
     print(detail_line)
     print(summary_line)

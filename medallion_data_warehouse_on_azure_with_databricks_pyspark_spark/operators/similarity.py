@@ -15,7 +15,11 @@ Approximate-nearest-neighbor over ``array<float>`` embeddings:
 * on-disk index artifacts (end of module) — ``build_*_index`` /
   ``append_to_*_index`` / ``*_topk_against_index`` for every family
   (ivf, lsh, pq, sq8, ivfpq, ivfsq8, matryoshka, ivfbq), bound to one
-  build / append / probe lifecycle over the ``CODECS`` table.
+  build / append / probe lifecycle over the ``CODECS`` table.  A probe
+  collects its (small) query batch once, derives the query side on the
+  driver in numpy, and scores and re-ranks in two ``mapInArrow`` kernels
+  that keep a bounded top-n per query, so no (query, candidate) pair row
+  is ever materialized.
 
 Scale design: the corpus never self-joins; planes/queries are broadcast;
 norms are precomputed once.  Distances use double accumulation in element
@@ -43,6 +47,7 @@ from pyspark.sql.types import (
     DataType,
     DoubleType,
     IntegerType,
+    LongType,
     StructField,
     StructType,
 )
@@ -105,135 +110,233 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(p)
 
 
+def _topk_state(k: int, distinct: bool = False):
+    """The bounded per-group top-k every Arrow selection kernel shares
+    (:func:`grouped_topk`'s phase 1, the probe's scoring and re-rank
+    kernels).  Returns ``(select, emit)``:
+
+    * ``select(state, part)`` — ``state`` (None or the previous result)
+      and ``part`` are Arrow tables of ``(g, nf, key, id, neg)``: group,
+      score class (0 = NaN, 1 = real, 2 = NULL), sort key (the negated
+      score for class 1, a constant otherwise), candidate id and the
+      negated score as emitted.  It keeps the ≤k best rows per group under
+      (nf, key, id) ascending, sorted and segmented by group.  Kernels call
+      it batch by batch, so a partition holds at most groups × k rows plus
+      one batch, never the whole partition.  ``distinct`` also drops exact
+      copies of a candidate (same group, class, key and id: the rows an
+      at-least-once append replays), so a group keeps k distinct ones.
+    * ``emit(state, name, groups=None)`` — one record batch ``(name,
+      __cands)``: the group value (or ``groups.take(g)``, mapping a
+      group index to its value) and the group's candidate structs
+      ``(__nanfirst, __negscore, __id)``.
+
+    Ties beyond all keys are identical candidates, so sort stability is
+    immaterial; null ids sort first, as in the JVM struct order.  Both
+    closures import what they use, so Python workers need not import
+    this package."""
+
+    def segments(codes):
+        import numpy as np
+
+        start = np.empty(len(codes), dtype=bool)
+        start[:1] = True
+        np.not_equal(codes[1:], codes[:-1], out=start[1:])
+        return start
+
+    def select(state, part):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tbl = part if state is None else pa.concat_tables([state, part])
+        tbl = tbl.combine_chunks()
+        n = tbl.num_rows
+        if n == 0:
+            return state
+        codes = pc.fill_null(
+            pc.dictionary_encode(tbl.column("g").chunk(0)).indices, -1
+        )
+        order = pc.sort_indices(
+            pa.table(
+                {"c": codes, "nf": tbl["nf"], "key": tbl["key"], "id": tbl["id"]}
+            ),
+            sort_keys=[
+                ("c", "ascending"),
+                ("nf", "ascending"),
+                ("key", "ascending"),
+                ("id", "ascending"),
+            ],
+            null_placement="at_start",
+        )
+        srt = tbl.take(order)
+        start = segments(codes.take(order).to_numpy(zero_copy_only=False))
+        fresh = np.ones(n, dtype=bool)
+        if distinct and n > 1:
+            same = None
+            for c in ("nf", "key", "id"):
+                col = srt.column(c).chunk(0)
+                eq = pc.fill_null(pc.equal(col.slice(1), col.slice(0, n - 1)), False)
+                same = eq if same is None else pc.and_(same, eq)
+            fresh[1:] = ~same.to_numpy(zero_copy_only=False) | start[1:]
+        count = np.cumsum(fresh)
+        first = np.flatnonzero(start)
+        before = count[first] - fresh[first]
+        rank = count - before[np.cumsum(start) - 1]
+        keep = fresh & (rank <= k)
+        return srt.filter(pa.array(keep))
+
+    def emit(state, name, groups=None):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        g = state.column("g").chunk(0)
+        codes = pc.fill_null(pc.dictionary_encode(g).indices, -1)
+        starts = np.flatnonzero(segments(codes.to_numpy(zero_copy_only=False)))
+        offsets = np.append(starts, state.num_rows).astype(np.int32)
+        cands = pa.ListArray.from_arrays(
+            pa.array(offsets),
+            pa.StructArray.from_arrays(
+                [
+                    state.column("nf").chunk(0).cast(pa.int32()),
+                    state.column("neg").chunk(0),
+                    state.column("id").chunk(0),
+                ],
+                names=["__nanfirst", "__negscore", "__id"],
+            ),
+        )
+        heads = g.take(pa.array(starts, type=pa.int64()))
+        if groups is not None:
+            heads = groups.take(heads)
+        return pa.RecordBatch.from_arrays([heads, cands], names=[name, "__cands"])
+
+    return select, emit
+
+
 def _make_partition_topk_kernel(k: int, is_float: bool, group_name: str):
     """Arrow kernel for :func:`grouped_topk` phase 1: per-(input
     partition, group) top-k candidate selection with NO exchange.
 
-    Receives the whole partition as Arrow batches of exactly
-    ``(group, id, score)`` (the caller projects first — guide §4.1) and
-    emits one row per group present in the partition:
-    ``(group, __cands)`` where ``__cands`` is the ≤k best candidate
-    structs ``(__nanfirst, __negscore, __id)`` under the family's total
-    order (nanfirst asc, negscore asc, id asc) — the same structs the
-    old JVM phase 1 emitted, so the phase-2 merge is unchanged and the
-    selected SET is identical:
+    Receives the partition as Arrow batches of exactly ``(group, id,
+    score)`` (the caller projects first — guide §4.1) and emits one row
+    per group present in the partition: ``(group, __cands)`` where
+    ``__cands`` is the ≤k best candidate structs ``(__nanfirst,
+    __negscore, __id)`` under the family's total order (nanfirst asc,
+    negscore asc, id asc) — the structs the phase-2 merge sorts:
 
-    * ``__nanfirst``: 0 = NaN score, 1 = real, 2 = NULL (computed here
-      exactly as the old Catalyst ``when`` chain).
+    * ``__nanfirst``: 0 = NaN score, 1 = real, 2 = NULL (the old
+      Catalyst ``when`` chain).
     * ``__negscore``: ``pyarrow.compute.negate`` of the INPUT score
       array — an IEEE sign flip for floats, two's-complement negation
       for ints, nulls preserved — bit-identical to Catalyst's ``-col``.
-    * ``__id``: ``take`` of the input id array — value and type
-      untouched.
+    * ``__id``: the input id, value and type untouched.
 
-    Selection order inside the kernel: NaN negscores only occur in the
-    nanfirst=0 class (every member NaN, so the id tiebreak decides —
-    ``np.lexsort``'s stable passes preserve the id order through the
-    all-NaN key); NULL scores land in class 2 with a constant sort key
-    (the id tiebreak decides, matching the JVM struct sort where every
-    class-2 ``__negscore`` is NULL).  Precondition (shared with the old
-    phase 1's documented contract): ids are non-null — a null id would
-    sort NULLS FIRST in the JVM struct order but last here, which can
-    only matter on an exact score tie at the k boundary against a null
-    id, a row no registered corpus produces.
+    Selection runs batch by batch through :func:`_topk_state`, so the
+    kernel holds at most groups × k candidates plus one batch.  Sort
+    keys: the negated score in float64 (floats) or in the native integer
+    width (wrapping like Java; a float64 key would lose precision past
+    2⁵³); NaN and NULL classes take a constant key so the id decides
+    inside them, as in the JVM struct sort where every class-2
+    ``__negscore`` is NULL.  Precondition (shared with the old phase 1's
+    documented contract): ids are non-null — a null id sorts first here
+    and in the JVM order alike, which only matters on an exact score tie
+    at the k boundary against a null id, a row no registered corpus
+    produces.
     """
+    select, emit = _topk_state(k)
 
     def kernel(batches):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        blist = list(batches)
-        if not blist:
-            return
-        tbl = pa.Table.from_batches(blist)
-        n = tbl.num_rows
-        if n == 0:
-            return
-        g_arr = tbl.column(0).combine_chunks()
-        id_arr = tbl.column(1).combine_chunks()
-        s_arr = tbl.column(2).combine_chunks()
-
-        null_mask = pc.is_null(s_arr).to_numpy(zero_copy_only=False)
-        nanfirst = np.ones(n, dtype=np.int32)
-        if is_float:
-            s_np = s_arr.to_numpy(zero_copy_only=False)  # nulls -> NaN
-            negkey = -s_np.astype(np.float64, copy=False)
-            nanfirst[np.isnan(s_np)] = 0
-            if null_mask.any():
-                # class-2 rows need only a CONSTANT key (the JVM struct
-                # sort sees NULL there); 0.0 keeps the id tiebreak in
-                # charge without leaking NaN into the sort.
-                negkey = np.where(null_mask, 0.0, negkey)
-        else:
-            # integer scores: negate in the native width (wraps like
-            # Java); no float64 key, which would lose >2^53 precision.
-            s_np = s_arr.fill_null(0).to_numpy(zero_copy_only=False)
-            negkey = -s_np
-        nanfirst[null_mask] = 2
-
-        # Group codes via Arrow dictionary_encode (C++; first-appearance
-        # indices — any deterministic group keying works, only the
-        # SEGMENTATION matters) instead of pandas factorize, and the
-        # 4-key sort via Arrow sort_indices (C++; native string/id
-        # comparisons) instead of np.lexsort over object arrays —
-        # string-keyed callers (bm25/rrf) paid ~2x kernel time on the
-        # Python-object path.  null_placement="at_start" gives null ids
-        # the JVM struct sort's NULLS FIRST; NaN negkeys only occur in
-        # the nanfirst=0 class where every row is NaN (Arrow sorts NaN
-        # after reals, before nulls — irrelevant inside an all-NaN
-        # class, the id key decides).  Ties beyond all four keys are
-        # bit-identical candidates, so sort stability is immaterial.
-        codes = pc.fill_null(pc.dictionary_encode(g_arr).indices, -1)
-        sort_tbl = pa.table(
-            {
-                "g": codes,
-                "nf": pa.array(nanfirst),
-                "neg": pa.array(negkey),
-                "id": id_arr,
-            }
-        )
-        order = pc.sort_indices(
-            sort_tbl,
-            sort_keys=[
-                ("g", "ascending"),
-                ("nf", "ascending"),
-                ("neg", "ascending"),
-                ("id", "ascending"),
-            ],
-            null_placement="at_start",
-        ).to_numpy(zero_copy_only=False)
-        codes_sorted = codes.to_numpy(zero_copy_only=False)[order]
-        flags = np.empty(n, dtype=bool)
-        flags[0] = True
-        np.not_equal(codes_sorted[1:], codes_sorted[:-1], out=flags[1:])
-        starts = np.flatnonzero(flags)
-        seg_id = np.cumsum(flags) - 1
-        pos = np.arange(n) - starts[seg_id]
-        keep = pos < k
-        sel = order[keep]
-
-        take_sel = pa.array(sel, type=pa.int64())
-        struct = pa.StructArray.from_arrays(
-            [
-                pa.array(nanfirst[sel], type=pa.int32()),
-                pc.negate(s_arr.take(take_sel)),
-                id_arr.take(take_sel),
-            ],
-            names=["__nanfirst", "__negscore", "__id"],
-        )
-        seg_lens = np.diff(np.append(starts, n))
-        kept_counts = np.minimum(seg_lens, k)
-        offsets = pa.array(
-            np.concatenate(([0], np.cumsum(kept_counts))).astype(np.int32)
-        )
-        cands = pa.ListArray.from_arrays(offsets, struct)
-        groups_out = g_arr.take(pa.array(order[starts], type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(
-            [groups_out, cands], names=[group_name, "__cands"]
-        )
+        state = None
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
+                continue
+            s_arr = b.column(2)
+            null = pc.is_null(s_arr).to_numpy(zero_copy_only=False)
+            nf = np.ones(n, dtype=np.int32)
+            if is_float:
+                s_np = s_arr.to_numpy(zero_copy_only=False)  # nulls -> NaN
+                nan = np.isnan(s_np)
+                nf[nan] = 0
+                key = np.where(nan, 0.0, -s_np.astype(np.float64, copy=False))
+            else:
+                key = -s_arr.fill_null(0).to_numpy(zero_copy_only=False)
+            nf[null] = 2
+            part = pa.table(
+                {
+                    "g": b.column(0),
+                    "nf": nf,
+                    "key": key,
+                    "id": b.column(1),
+                    "neg": pc.negate(s_arr),
+                }
+            )
+            state = select(state, part)
+        if state is not None and state.num_rows:
+            yield emit(state, group_name)
 
     return kernel
+
+
+#: Spark types a top-k score may have; the kernels rank no other.
+_SCORE_TYPES = ("float", "double", "tinyint", "smallint", "int", "bigint")
+
+
+def _cands_schema(group: StructField, score: DataType, id_type: DataType) -> StructType:
+    """Schema of the per-partition candidate rows every top-k kernel
+    emits (see :func:`_topk_state`)."""
+    return StructType(
+        [
+            group,
+            StructField(
+                "__cands",
+                ArrayType(
+                    StructType(
+                        [
+                            StructField("__nanfirst", IntegerType(), False),
+                            StructField("__negscore", score, True),
+                            StructField("__id", id_type, True),
+                        ]
+                    )
+                ),
+                False,
+            ),
+        ]
+    )
+
+
+def _merge_topk(
+    partial: DataFrame,
+    group_col: str,
+    id_col: str,
+    k: int,
+    score_col: str,
+    distinct: bool = False,
+) -> DataFrame:
+    """Phase 2 of every top-k: the ONE exchange, carrying only the
+    kernels' k-bounded candidate arrays, merges them per group and
+    re-slices to the global top k.  ``distinct`` drops candidates that
+    arrive identical from two partitions (replayed index rows).  Output:
+    ``(group, id, score, rank)``, the score un-negated (an exact sign
+    flip) and rank 1..k."""
+    cands = F.flatten(F.collect_list("__cands"))
+    if distinct:
+        cands = F.array_distinct(cands)
+    merged = partial.groupBy(group_col).agg(
+        F.slice(F.array_sort(cands), 1, k).alias("__cands")
+    )
+    return merged.select(
+        group_col, F.posexplode("__cands").alias("__pos", "__c")
+    ).select(
+        group_col,
+        F.col("__c.__id").alias(id_col),
+        (-F.col("__c.__negscore")).alias(score_col),
+        (F.col("__pos") + 1).cast("int").alias("rank"),
+    )
 
 
 def grouped_topk(
@@ -277,49 +380,22 @@ def grouped_topk(
     and its per-partition state is the same candidate set the JVM hash
     aggregate held.
 
-    Output: ``(group, id, score, rank)`` with rank 1..k.
+    Output: ``(group, id, score, rank)`` with rank 1..k.  Scores must be
+    float, double or integer; any other type raises ``TypeError``.
     """
-    is_float = dict(scored.dtypes).get(score_col) in ("float", "double")
+    kind = dict(scored.dtypes).get(score_col)
+    if kind not in _SCORE_TYPES:
+        raise TypeError(
+            f"grouped_topk ranks float, double or integer scores; "
+            f"{score_col!r} is {kind}"
+        )
     proj = scored.select(group_col, id_col, score_col)
     sch = proj.schema
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            sch[group_col],
-            T.StructField(
-                "__cands",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("__nanfirst", T.IntegerType(), False),
-                            T.StructField(
-                                "__negscore", sch[score_col].dataType, True
-                            ),
-                            T.StructField("__id", sch[id_col].dataType, True),
-                        ]
-                    )
-                ),
-                False,
-            ),
-        ]
-    )
     partial = proj.mapInArrow(
-        _make_partition_topk_kernel(k, is_float, group_col), out_schema
+        _make_partition_topk_kernel(k, kind in ("float", "double"), group_col),
+        _cands_schema(sch[group_col], sch[score_col].dataType, sch[id_col].dataType),
     )
-    merged = partial.groupBy(group_col).agg(
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("__cands"))), 1, k
-        ).alias("__cands")
-    )
-    return merged.select(
-        group_col, F.posexplode("__cands").alias("__pos", "__c")
-    ).select(
-        group_col,
-        F.col("__c.__id").alias(id_col),
-        (-F.col("__c.__negscore")).alias(score_col),
-        (F.col("__pos") + 1).cast("int").alias("rank"),
-    )
+    return _merge_topk(partial, group_col, id_col, k, score_col)
 
 
 def cosine_topk(
@@ -835,17 +911,21 @@ def _quantizer_kernel(
 @contextlib.contextmanager
 def _kernel_errors():
     """Spark hands an executor-side exception to the driver wrapped in
-    its own type; re-raise a quantizer kernel's bad-vector ``ValueError``
-    as the ``ValueError`` it is."""
+    its own type; re-raise a kernel's bad-vector ``ValueError`` and its
+    zero-divisor ``ArithmeticError`` as what they are."""
     try:
         yield
-    except ValueError:
+    except (ValueError, ArithmeticError):
         raise
     except Exception as exc:
-        found = re.search(r"ValueError: (column '.*)", str(exc))
+        found = re.search(
+            r"(ValueError|ArithmeticError): ((column '|\[DIVIDE_BY_ZERO\]).*)",
+            str(exc),
+        )
         if found is None:
             raise
-        raise ValueError(found.group(1)) from exc
+        kind = ValueError if found.group(1) == "ValueError" else ArithmeticError
+        raise kind(found.group(2)) from exc
 
 
 def _lloyd_means(vecs: DataFrame, vec_col: str, books, coarse=None, residual=False):
@@ -2852,18 +2932,19 @@ class IndexCodec:
     * ``space(vec, meta)`` — the quantizer's vector space when it is not
       the full vector (matryoshka prefixes); ``pivot_col`` names the
       stored pivot vectors.
-    * ``scan(table, meta)`` / ``query(q, meta, pivots, query_id_col,
-      vec_col, n_probes)`` — the two sides of the probe join (coarse
-      families join on ``pivot_id``, lsh on ``join_on``, flat ones cross).
-    * ``score`` — ``(column, expr(meta))`` ranked per query, or None for
-      set-membership candidates (lsh).
+    * ``scorer(meta, qs, pivots, lists)`` → a :class:`_Scorer`: the
+      codec's numpy score over its table's code columns, bound to a
+      collected query batch ``qs`` (in the quantizer's space), the stored
+      pivot matrix and each query's probed lists (None, None for flat
+      codecs).  None for lsh, whose
+      candidates are unscored bucket members: ``query(q, meta, pivots,
+      query_id_col, vec_col, n_probes)`` builds its probe rows, equi-joined
+      to the table on ``join_on``.
     * ``rerank`` — ``"l2"`` / ``"cosine"``: the score only shortlists and
       exact distances over ``vectors`` rank; None: the score ranks.
     * ``appendable`` — the family takes appends (lsh does not: its probe
       never dedups ``vectors``, so a replayed append would duplicate
       candidates).
-    * ``id_first`` spells the exclude-self predicate ``id != query_id``
-      (the PQ families' operand order, which their probe plans carry).
     """
 
     family: str
@@ -2875,13 +2956,11 @@ class IndexCodec:
     encode: Callable | None = None
     space: Callable | None = None
     pivot_col: str = "pivot_vec"
-    scan: Callable | None = None
+    scorer: Callable | None = None
     query: Callable | None = None
     join_on: list[str] | None = None
-    score: tuple[str, Callable] | None = None
     rerank: str | None = None
     appendable: bool = True
-    id_first: bool = False
 
     @property
     def coarse(self) -> bool:
@@ -2964,39 +3043,6 @@ def _encode_matryoshka(df, meta, pivots):
     )
 
 
-def _lut_query(q, meta, pivots, qid, vec_col, n_probes):
-    """Per-query ADC LUTs; on a coarse probe one per (query, probed list)
-    over the residual ``q − pivot``."""
-    sub = _pq_subdists_kernel(meta["codebooks"])
-    if pivots is None:
-        return q.select(F.col(qid), sub(F.col(vec_col)).alias("__lut"))
-    return q.join(F.broadcast(pivots), "pivot_id").select(
-        qid,
-        "pivot_id",
-        sub(
-            F.zip_with(
-                _as_double(vec_col), _as_double("pivot_vec"), lambda x, y: x - y
-            )
-        ).alias("__lut"),
-    )
-
-
-def _cosine(a: str, b: str, na: Column, nb: Column) -> Column:
-    return _dot(F.col(a), F.col(b)) / (na * nb)
-
-
-_ADC = (
-    "__negd",
-    lambda m: -_adc_score_kernel(len(m["codebooks"]), len(m["codebooks"][0]))(
-        F.col("pq_code"), F.col("__lut")
-    ),
-)
-_SQ8 = (
-    "__approx",
-    lambda m: _dot(F.col("__qvec"), _sq8_recon("sq8_code", m["mins"], m["steps"])),
-)
-
-
 def _sq8_params(corpus, vec_col, stats):
     mins, steps = stats if stats is not None else sq8_stats(corpus, vec_col)
     return {"mins": mins, "steps": steps}
@@ -3011,10 +3057,329 @@ def _train_ivfbq(corpus, id_col, vec_col, modulus=37, thresholds=None):
     )
 
 
-def _qvec(*keep: str):
-    return lambda q, m, p, qid, vec_col, n: q.select(
-        F.col(qid), F.col(vec_col).alias("__qvec"), *keep
-    )
+# -- probe kernels -------------------------------------------------------------
+#
+# An indexed probe reads its query batch ONCE on the driver (small by
+# contract) and derives everything query-side there in numpy: each query's
+# probed lists and the codec's query state (ADC LUTs, norms, SQ8 vectors, BQ
+# codes, prefixes).  Two mapInArrow kernels then do the row work — scoring
+# over the codec's table, exact re-rank over ``vectors`` — each keeping a
+# bounded top-n per query that feeds :func:`_merge_topk`'s one exchange, so
+# no (query, candidate) pair row ever materializes.  Every helper a kernel
+# calls is defined inside its factory and imports what it uses: Python
+# workers cannot import this package.
+
+
+class _Scorer(NamedTuple):
+    """A codec's numpy scorer, bound to one collected query batch.
+
+    * ``cols`` — the code-table columns scored, with their fixed widths.
+    * ``score(blocks, qidx, slots)`` — ``blocks`` are those columns of
+      one inverted list's rows as (R, width) arrays, ``qidx`` the indices
+      of the queries probing the list and ``slots`` their flat (query,
+      probe) positions (None for flat codecs); returns the (R, len(qidx))
+      score matrix (higher ranks first) and a mask of the pairs whose
+      score divides by zero (None when the score cannot).
+    * ``is_float`` — float64 scores (else int64)."""
+
+    cols: tuple[tuple[str, int], ...]
+    score: Callable
+    is_float: bool = True
+
+
+def _folds():
+    """``(dot, norms, cosine)`` as :func:`_dot` / :func:`_norm` fold them:
+    products summed left to right from 0.0 over the last axis (operands
+    broadcast over the others), ``sqrt`` of the self-dot for a norm, and
+    ``dot(q, c) / (|q|·|c|)`` with the mask of its zero divisors."""
+
+    def dot(a, b):
+        acc = 0.0
+        for j in range(a.shape[-1]):
+            acc = acc + a[..., j] * b[..., j]
+        return acc
+
+    def norms(x):
+        import numpy as np
+
+        return np.sqrt(dot(x, x))
+
+    def cosine(c, q, qnorm):
+        import numpy as np
+
+        den = qnorm * norms(c)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return dot(q, c) / den, den == 0
+
+    return dot, norms, cosine
+
+
+def _cosine_scorer(col: str | None):
+    """Cosine of the query (in the quantizer's space) against a stored
+    vector column: ``col``, or the manifest's ``vec_col`` when None (ivf
+    lists; matryoshka scores ``prefix``)."""
+
+    def make(meta, qs, pivots, lists):
+        _, norms, cosine = _folds()
+        qn = norms(qs)
+
+        def score(blocks, qidx, slots):
+            import numpy as np
+
+            c = blocks[0].astype(np.float64)[:, None, :]
+            return cosine(c, qs[qidx][None], qn[qidx][None])
+
+        return _Scorer(((col or meta["vec_col"], qs.shape[1]),), score)
+
+    return make
+
+
+def _sq8_scorer(meta, qs, pivots, lists):
+    """``dot(q, min + code·step)``, the reconstruction as
+    :func:`_sq8_recon` spells it, folded from 0.0."""
+    mins = np.asarray(meta["mins"], dtype=np.float64)
+    steps = np.asarray(meta["steps"], dtype=np.float64)
+    if qs.shape[1] != len(mins):
+        raise ValueError(
+            f"query vectors have {qs.shape[1]} dimensions; the sq8 index has "
+            f"{len(mins)}"
+        )
+
+    dot, _, _ = _folds()
+
+    def score(blocks, qidx, slots):
+        import numpy as np
+
+        recon = mins + blocks[0].astype(np.float64) * steps
+        return dot(qs[qidx][None], recon[:, None, :]), None
+
+    return _Scorer((("sq8_code", len(mins)),), score)
+
+
+def _adc_scorer(meta, qs, pivots, lists):
+    """Negated ADC distance ``−Σ_m lut[m, code_m]``, summed in subspace
+    order from the first subspace's term.  LUTs are built here, per query
+    (flat pq) or per (query, probed list) over the residual ``q − pivot``
+    (ivfpq), with :func:`_pq_subdists_kernel`'s arithmetic: ``(x−c)²``
+    folded left over the sub-dimension."""
+    books = np.asarray(meta["codebooks"], dtype=np.float64)  # (M, K, d)
+    n_sub, _, d = books.shape
+    if qs.shape[1] != n_sub * d:
+        raise ValueError(
+            f"query vectors have {qs.shape[1]} dimensions; the codebooks "
+            f"cover {n_sub * d}"
+        )
+    x = qs
+    if lists is not None:
+        x = (qs[:, None, :] - pivots[lists]).reshape(-1, qs.shape[1])
+    diff = x.reshape(len(x), n_sub, 1, d) - books[None]
+    sq = diff * diff
+    luts = sq[..., 0]
+    for j in range(1, d):
+        luts = luts + sq[..., j]
+
+    def score(blocks, qidx, slots):
+        codes = blocks[0]
+        lut = luts[qidx if slots is None else slots]  # (Qp, M, K)
+        acc = lut[:, 0, codes[:, 0]]
+        for m in range(1, n_sub):
+            acc = acc + lut[:, m, codes[:, m]]
+        return -acc.T, None
+
+    return _Scorer((("pq_code", n_sub),), score)
+
+
+def _bq_scorer(meta, qs, pivots, lists):
+    """Negated Hamming distance ``−Σ_w popcount(q_w XOR c_w)`` over the
+    packed words (int64).  Query words pack as :func:`bq_encode` does,
+    with Spark's comparison: NaN is greater than any number."""
+    thr = np.asarray(meta["thresholds"], dtype=np.float64)
+    dim = len(thr)
+    if qs.shape[1] != dim:
+        raise ValueError(
+            f"query vectors have {qs.shape[1]} dimensions; the bq index has {dim}"
+        )
+    bits = (qs > thr) | (np.isnan(qs) & ~np.isnan(thr))
+    n_words = (dim + 31) // 32
+    words = np.zeros((len(qs), n_words), dtype=np.int64)
+    for i in range(dim):
+        words[:, i // 32] += bits[:, i].astype(np.int64) << (i % 32)
+    ones = np.array([bin(b).count("1") for b in range(1 << 16)], dtype=np.int64)
+
+    def score(blocks, qidx, slots):
+        import numpy as np
+
+        codes = blocks[0].astype(np.int64).view(np.uint64)
+        q = words[qidx].view(np.uint64)
+        acc = np.zeros((len(codes), len(q)), dtype=np.int64)
+        for w in range(codes.shape[1]):
+            x = codes[:, w, None] ^ q[None, :, w]
+            for shift in (0, 16, 32, 48):
+                acc = acc + ones[(x >> np.uint64(shift)) & np.uint64(0xFFFF)]
+        return -acc, None
+
+    return _Scorer((("bq_code", n_words),), score, is_float=False)
+
+
+def _vector_block():
+    """Kernel-side decode of a list column into an (n, width) array,
+    refusing null and ragged rows as :func:`_quantizer_kernel` does."""
+
+    def block(col, name, width):
+        import pyarrow.compute as pc
+
+        flat = col.flatten()
+        lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+        if col.null_count or flat.null_count or (lens != width).any():
+            raise ValueError(
+                f"column {name!r} has a null or ragged vector; every row "
+                f"needs {width} non-null values"
+            )
+        return flat.to_numpy(zero_copy_only=False).reshape(-1, width)
+
+    return block
+
+
+def _candidates(score_is_float: bool):
+    """Kernel-side: one group's scored (row, query) pairs as a
+    :func:`_topk_state` part — ranking class, key and negated score — and
+    the refusal of a zero divisor, which Spark's ANSI division raises."""
+
+    def part(g, ids, s, zero):
+        import numpy as np
+        import pyarrow as pa
+
+        if zero is not None and zero.any():
+            raise ArithmeticError(
+                "[DIVIDE_BY_ZERO] Division by zero: a cosine over a "
+                "zero-norm vector"
+            )
+        nf = np.ones(len(s), dtype=np.int32)
+        if score_is_float:
+            nan = np.isnan(s)
+            nf[nan] = 0
+            key = np.where(nan, 0.0, -s)
+        else:
+            key = -s
+        return pa.table({"g": g, "nf": nf, "key": key, "id": ids, "neg": -s})
+
+    return part
+
+
+def _scoring_kernel(
+    scorer: _Scorer,
+    n: int,
+    probes: dict | None,
+    self_ids,
+    qids,
+    group_name: str,
+):
+    """The probe's scoring pass (``mapInArrow`` over the codec's table,
+    columns ``(id, *scorer.cols[, pivot_id])``): each row of a list is
+    scored only against the queries that probe it (``probes``: pivot id
+    → (query indices, flat probe slots); None scores every query), a
+    query's own id is dropped when ``self_ids`` is given, and each query
+    keeps its n best distinct candidates batch by batch."""
+    select, emit = _topk_state(n, distinct=True)
+    block = _vector_block()
+    part = _candidates(scorer.is_float)
+    # the kernel closes over plain values only: a _Scorer would pickle as
+    # a reference to this module
+    cols, score = scorer.cols, scorer.score
+    every = np.arange(len(qids))
+
+    def kernel(batches):
+        import numpy as np
+
+        state = None
+        for b in batches:
+            if not b.num_rows:
+                continue
+            ids = b.column(0).to_numpy(zero_copy_only=False)
+            blocks = [
+                block(b.column(i + 1), name, width)
+                for i, (name, width) in enumerate(cols)
+            ]
+            if probes is None:
+                groups = [(None, every, None)]
+            else:
+                piv = b.column(b.num_columns - 1).to_numpy(zero_copy_only=False)
+                groups = [
+                    (np.flatnonzero(piv == p), *probes[p])
+                    for p in np.unique(piv) if p in probes
+                ]
+            for rows, qidx, slots in groups:
+                sub = blocks if rows is None else [x[rows] for x in blocks]
+                rid = ids if rows is None else ids[rows]
+                s, zero = score(sub, qidx, slots)
+                keep = np.ones(s.shape, dtype=bool)
+                if self_ids is not None:
+                    keep = rid[:, None] != self_ids[qidx][None, :]
+                r, c = np.nonzero(keep)
+                state = select(
+                    state,
+                    part(
+                        qidx[c].astype(np.int32), rid[r], s[r, c],
+                        None if zero is None else zero[r, c],
+                    ),
+                )
+        if state is not None and state.num_rows:
+            yield emit(state, group_name, qids)
+
+    return kernel
+
+
+def _rerank_kernel(
+    metric: str, vec_col: str, qv: np.ndarray, want_ids, want_q, k: int, qids,
+    group_name: str,
+):
+    """The probe's exact re-rank (``mapInArrow`` over ``vectors``, columns
+    ``(id, vec)``): for each stored row among the wanted ``(want_ids[i],
+    query want_q[i])`` pairs (sorted by id), the exact squared L2 (ranked
+    ascending) or exact cosine of that pair only, folded as
+    :func:`_exact_l2_rerank` / :func:`_exact_cosine_rerank` do; each query
+    keeps its k best distinct candidates."""
+    select, emit = _topk_state(k, distinct=True)
+    block = _vector_block()
+    part = _candidates(True)
+    _, norms, cosine = _folds()
+    qn = norms(qv)
+    dim = qv.shape[1]
+
+    def kernel(batches):
+        import numpy as np
+
+        state = None
+        for b in batches:
+            if not b.num_rows:
+                continue
+            ids = b.column(0).to_numpy(zero_copy_only=False)
+            lo = np.searchsorted(want_ids, ids, "left")
+            cnt = np.searchsorted(want_ids, ids, "right") - lo
+            rows = np.flatnonzero(cnt)
+            if not len(rows):
+                continue
+            c = block(b.column(1).take(rows), vec_col, dim).astype(np.float64)
+            per = cnt[rows]
+            at = np.repeat(np.arange(len(rows)), per)
+            first = np.repeat(np.cumsum(per) - per, per)
+            q = want_q[np.repeat(lo[rows], per) + np.arange(len(at)) - first]
+            cv, qq = c[at], qv[q]
+            if metric == "l2":
+                acc = 0.0
+                for j in range(dim):
+                    t = qq[:, j] - cv[:, j]
+                    acc = acc + t * t
+                s, zero = -acc, None
+            else:
+                s, zero = cosine(cv, qq, qn[q])
+            state = select(
+                state, part(q.astype(np.int32), ids[rows][at], s, zero)
+            )
+        if state is not None and state.num_rows:
+            yield emit(state, group_name, qids)
+
+    return kernel
 
 
 #: The one list of index families — everything a family's layout, training,
@@ -3034,19 +3399,7 @@ CODECS: dict[str, IndexCodec] = {
             encode=lambda df, m, p: _assigned(df, m, p).select(
                 F.col(m["id_col"]), F.col(m["vec_col"]), "pivot_id"
             ),
-            scan=lambda t, m: t.select(
-                F.col(m["id_col"]), F.col("pivot_id"),
-                F.col(m["vec_col"]).alias("__cvec"),
-            ).withColumn("__cnorm", _norm(F.col("__cvec"))),
-            query=lambda q, m, p, qid, vec_col, n: q.select(
-                F.col(qid), F.col(vec_col).alias("__qvec"), "pivot_id"
-            ).withColumn("__qnorm", _norm(F.col("__qvec"))),
-            score=(
-                "cosine",
-                lambda m: _cosine(
-                    "__qvec", "__cvec", F.col("__qnorm"), F.col("__cnorm")
-                ),
-            ),
+            scorer=_cosine_scorer(None),
         ),
         IndexCodec(
             "lsh", ("tables",), ("buckets", "vectors"), key=("table_id",),
@@ -3068,7 +3421,7 @@ CODECS: dict[str, IndexCodec] = {
             encode=lambda df, m, p: pq_encode(
                 df, m["codebooks"], m["id_col"], m["vec_col"]
             ),
-            query=_lut_query, score=_ADC, rerank="l2", id_first=True,
+            scorer=_adc_scorer, rerank="l2",
         ),
         IndexCodec(
             "sq8", ("mins", "steps"), ("codes", "vectors"), key=(),
@@ -3076,7 +3429,7 @@ CODECS: dict[str, IndexCodec] = {
             encode=lambda df, m, p: sq8_encode(
                 df, m["mins"], m["steps"], m["vec_col"], out="sq8_code"
             ).select(F.col(m["id_col"]), "sq8_code"),
-            query=_qvec(), score=_SQ8, rerank="cosine",
+            scorer=_sq8_scorer, rerank="cosine",
         ),
         IndexCodec(
             "ivfpq", ("modulus", "codebooks"), ("codes", "vectors"),
@@ -3086,8 +3439,7 @@ CODECS: dict[str, IndexCodec] = {
                 "n_subspaces": len(m["codebooks"]),
                 "n_codes": len(m["codebooks"][0]),
             },
-            encode=_encode_ivfpq, query=_lut_query, score=_ADC, rerank="l2",
-            id_first=True,
+            encode=_encode_ivfpq, scorer=_adc_scorer, rerank="l2",
         ),
         IndexCodec(
             "ivfsq8", ("modulus", "mins", "steps"), ("codes", "vectors"),
@@ -3100,7 +3452,7 @@ CODECS: dict[str, IndexCodec] = {
                 _assigned(df, m, p), m["mins"], m["steps"], m["vec_col"],
                 out="sq8_code",
             ).select(m["id_col"], "sq8_code", "pivot_id"),
-            query=_qvec("pivot_id"), score=_SQ8, rerank="cosine",
+            scorer=_sq8_scorer, rerank="cosine",
         ),
         IndexCodec(
             "matryoshka", ("modulus", "prefix_dims"), ("lists", "vectors"),
@@ -3111,16 +3463,7 @@ CODECS: dict[str, IndexCodec] = {
             encode=_encode_matryoshka,
             space=_prefix,
             pivot_col="prefix_vec",
-            query=lambda q, m, p, qid, vec_col, n: q.select(
-                qid, "__qpre", "pivot_id"
-            ),
-            score=(
-                "__pcos",
-                lambda m: _cosine(
-                    "__qpre", "prefix",
-                    _norm(F.col("__qpre")), _norm(F.col("prefix")),
-                ),
-            ),
+            scorer=_cosine_scorer("prefix"),
             rerank="cosine",
         ),
         IndexCodec(
@@ -3131,10 +3474,7 @@ CODECS: dict[str, IndexCodec] = {
                 _assigned(df, m, p), m["thresholds"], m["vec_col"],
                 out="bq_code",
             ).select(m["id_col"], "bq_code", "pivot_id"),
-            query=lambda q, m, p, qid, vec_col, n: bq_encode(
-                q, m["thresholds"], vec_col, out="__qcode"
-            ).select(F.col(qid), "__qcode", "pivot_id"),
-            score=("__negham", lambda m: -bq_hamming("__qcode", "bq_code")),
+            scorer=_bq_scorer,
             rerank="cosine",
         ),
         # operators.dedup builds and probes MinHash artifacts; maintenance
@@ -3175,6 +3515,22 @@ def _read_pivots(spark, index_path: str, codec: IndexCodec) -> DataFrame:
     if codec.pivot_col == "pivot_vec":
         return pivots
     return pivots.select("pivot_id", F.col(codec.pivot_col).alias("pivot_vec"))
+
+
+def _stored_pivots(index_path: str, codec: IndexCodec) -> tuple[list, np.ndarray]:
+    """The stored coarse quantizer as :func:`_pivot_matrix` returns it
+    (ids ascending, (P, D) float64), read on the driver: the probe needs
+    it only there, and a Spark read would cost a schema job and a
+    collect per probe."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(
+        os.path.join(index_path, "pivots"), columns=["pivot_id", codec.pivot_col]
+    ).sort_by("pivot_id")
+    return (
+        tbl.column(0).to_pylist(),
+        _dense(tbl.column(1).to_pylist(), codec.pivot_col),
+    )
 
 
 def _write_table(rows: DataFrame, path: str, by_list: bool, mode: str) -> None:
@@ -3253,6 +3609,29 @@ def _append_artifact(
     return index_path
 
 
+def _probe_lists(qs: np.ndarray, vecs: np.ndarray, nprobe: int, col: str) -> np.ndarray:
+    """Each query's probed lists, as (Q, min(nprobe, P)) positions into
+    the id-sorted pivots, in :func:`ivf_assign`'s two orders:
+    ``nprobe=1`` takes the argmin with NaN distances greatest (the
+    quantizer kernel's own argmin), ``nprobe>1`` the first ``nprobe``
+    under (NaN first, distance ascending, pivot id ascending)."""
+    if len(vecs) and qs.shape[1] != vecs.shape[1]:
+        raise ValueError(
+            f"column {col!r} has {qs.shape[1]}-dimensional vectors; the "
+            f"index's pivots have {vecs.shape[1]}"
+        )
+    if not len(vecs) or nprobe < 1:
+        return np.empty((len(qs), 0), dtype=np.int64)
+    if nprobe == 1:
+        return _quantizer(None, vecs)(qs)[0][:, None]
+    d = np.zeros((len(qs), len(vecs)))
+    for j in range(qs.shape[1]):
+        t = qs[:, j, None] - vecs[None, :, j]
+        d = d + t * t
+    key = np.where(np.isnan(d), -np.inf, d)
+    return np.argsort(key, axis=1, kind="stable")[:, :nprobe]
+
+
 def _probe_artifact(
     queries: DataFrame,
     index_path: str,
@@ -3265,77 +3644,130 @@ def _probe_artifact(
     shortlist: int | None = None,
     n_probes: int = 0,
 ) -> DataFrame:
-    """Probe: frozen-manifest read → (coarse) query assignment against
-    the stored pivots and ``pivot_id IN (...)`` pruning of the codec's
-    table → replay dedup → tombstone exclusion → the codec's score,
-    shortlisted per query by :func:`grouped_topk` → the codec's re-rank
-    (exact L2 or exact cosine over ``vectors``, or none).
+    """Probe: frozen-manifest read → the query batch, collected ONCE →
+    candidates → the codec's re-rank (exact L2 or exact cosine over
+    ``vectors``, or none).  Output ``(query_id, id, score, rank)``: the
+    score is ``cosine``, or ``l2_dist`` for the PQ families.
 
-    The probed-list collect is bounded by |queries| × nprobe rows (the
-    query batch is small by contract) and feeds ONLY the pruning
-    predicate; the scoring side recomputes the assignment lazily.
-    Precondition (ADVICE r18 #2): the ``queries`` plan must therefore be
-    DETERMINISTIC — a nondeterministic source (e.g. a fresh ``rand()``
-    column) could assign to pivots outside the collected set and
-    silently lose candidates.
+    * Driver.  The batch is small by contract; its rows give everything
+      query-side in numpy: a coarse family's probed lists per query
+      (:func:`_probe_lists` against the stored pivots) and the codec's
+      query state (:class:`_Scorer`).  A null or ragged query vector
+      raises ``ValueError`` naming ``vec_col``; an empty batch returns an
+      empty frame.
+    * Scoring.  :func:`_scoring_kernel` runs over the codec's table after
+      ``pivot_id IN (...)`` pruning of unprobed lists and the tombstone
+      anti-join (deleted vectors stop ranking at once; compaction removes
+      them physically): each row is scored against the queries probing its
+      list, a query's own id is dropped (``exclude_self``), and each query
+      keeps its ``shortlist`` (or, with no re-rank, ``k``) best distinct
+      ids, merged by :func:`_merge_topk`'s one exchange.  lsh instead
+      equi-joins its bucket table to the queries' probe rows: every
+      (query, id) bucket member is a candidate.
+    * Re-rank.  The candidates — at most |queries| × shortlist rows, or
+      lsh's bucket members — are collected through Arrow and deduped, and
+      :func:`_rerank_kernel` scores exactly those pairs over ``vectors``,
+      merged the same way.
 
-    Replay dedup: coarse tables dedup per (id, list) over the probed
-    lists only and the re-rank dedups after its shortlist join (both
-    bounded); flat appendable artifacts dedup both tables per id; lsh has
-    no append and dedups its candidate pairs.  Queries enter the re-rank
-    under the index's ``vec_col``, whatever the caller's column is
-    named."""
+    Replays of an at-least-once append are exact copies of a row, so the
+    kernels and the merge drop them (distinct candidates) and no probe
+    dedups a table.  A zero-norm cosine raises as Spark's ANSI division
+    does, with ``[DIVIDE_BY_ZERO]``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
     meta, codec = read_manifest(index_path, family)
     id_col = meta["id_col"]
     spark = queries.sparkSession
+    q_sel = queries.select(F.col(query_id_col), F.col(vec_col))
+    rows = q_sel.collect()
+    qid_field = q_sel.schema[query_id_col]
     table = spark.read.parquet(os.path.join(index_path, codec.tables[0]))
-    q, pivots = queries, None
-    if codec.coarse:
-        pivots = _read_pivots(spark, index_path, codec)
-        qcol = vec_col
-        if codec.space is not None:
-            qcol = "__qpre"
-            q = q.select(
-                F.col(query_id_col), codec.space(F.col(vec_col), meta).alias(qcol)
-            )
-        q = ivf_assign(q, pivots, nprobe, query_id_col, qcol, keep_cols=(qcol,))
-        probed = sorted({r["pivot_id"] for r in q.select("pivot_id").collect()})
-        table = table.filter(F.col("pivot_id").isin(probed))
-    if codec.appendable:
-        table = table.dropDuplicates([id_col, *codec.key])
-    # deleted vectors stop ranking immediately (physical removal happens
-    # at the next index_maintenance.compact_index)
-    table = index_maintenance.exclude_tombstoned(table, index_path, id_col, id_col)
-    if codec.scan is not None:
-        table = codec.scan(table, meta)
-    on = "pivot_id" if codec.coarse else codec.join_on
-    scored = table.join(
-        F.broadcast(codec.query(q, meta, pivots, query_id_col, vec_col, n_probes)),
-        on, "inner" if on else "cross",
-    )
-    if codec.score is None:
-        scored = scored.select(query_id_col, id_col).distinct()
-    if exclude_self:
-        a, b = (id_col, query_id_col) if codec.id_first else (query_id_col, id_col)
-        scored = scored.filter(F.col(a) != F.col(b))
-    if codec.score is not None:
-        name, expr = codec.score
-        ranked = grouped_topk(
-            scored.withColumn(name, expr(meta)), query_id_col, id_col,
-            shortlist if codec.rerank else k, score_col=name,
+    name = "l2_dist" if codec.rerank == "l2" else "cosine"
+    if not rows:
+        return spark.createDataFrame([], StructType([
+            qid_field, table.schema[id_col],
+            StructField(name, DoubleType()), StructField("rank", IntegerType()),
+        ]))
+    qv = _dense([r[1] for r in rows], vec_col)
+    # one kernel task per core: the scan's small list files would each be
+    # a task, and a task's fixed cost outweighs its scoring
+    cores = spark.sparkContext.defaultParallelism
+    qids = pa.array([r[0] for r in rows], type=to_arrow_type(qid_field.dataType))
+    q_ids = np.asarray([r[0] for r in rows])
+    self_ids = q_ids if exclude_self else None
+    if codec.scorer is None:
+        probe_rows = codec.query(
+            spark.createDataFrame(rows, q_sel.schema), meta, None,
+            query_id_col, vec_col, n_probes,
         )
+        table = index_maintenance.exclude_tombstoned(table, index_path, id_col, id_col)
+        # a vector shares buckets with a query in several tables: the
+        # distinct pairs are taken on the driver below
+        cands = table.join(F.broadcast(probe_rows), codec.join_on).select(
+            query_id_col, id_col
+        )
+        if exclude_self:
+            cands = cands.filter(F.col(query_id_col) != F.col(id_col))
+    else:
+        # the quantizer's space: the manifest's prefix, else the vector
+        qs = qv[:, : meta["prefix_dims"]] if "prefix_dims" in meta else qv
+        pivots = lists = probes = None
+        if codec.coarse:
+            ids, pivots = _stored_pivots(index_path, codec)
+            lists = _probe_lists(qs, pivots, nprobe, vec_col)
+            slots: dict = {}
+            for slot, p in enumerate(lists.ravel()):
+                slots.setdefault(ids[p], []).append(slot)
+            probes = {
+                p: (np.asarray(s) // lists.shape[1], np.asarray(s))
+                for p, s in slots.items()
+            }
+            table = table.filter(F.col("pivot_id").isin(sorted(probes)))
+        scorer = codec.scorer(meta, qs, pivots, lists)
+        table = index_maintenance.exclude_tombstoned(table, index_path, id_col, id_col)
+        n = shortlist if codec.rerank else k
+        cols = [id_col, *(c for c, _ in scorer.cols)] + ["pivot_id"] * codec.coarse
+        partial = table.select(*cols).coalesce(cores).mapInArrow(
+            _scoring_kernel(scorer, n, probes, self_ids, qids, query_id_col),
+            _cands_schema(
+                qid_field, DoubleType() if scorer.is_float else LongType(),
+                table.schema[id_col].dataType,
+            ),
+        )
+        cands = _merge_topk(partial, query_id_col, id_col, n, name, distinct=True)
         if codec.rerank is None:
-            return ranked
-        scored = ranked.select(query_id_col, id_col)
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    if codec.appendable and not codec.coarse:
-        vectors = vectors.dropDuplicates([id_col])
-    rerank = _exact_l2_rerank if codec.rerank == "l2" else _exact_cosine_rerank
-    return rerank(
-        scored, vectors,
-        queries.select(F.col(query_id_col), F.col(vec_col).alias(meta["vec_col"])),
-        k, id_col, meta["vec_col"], query_id_col, dedup_ids=codec.coarse,
+            return cands
+    with _kernel_errors():
+        pairs = cands.select(query_id_col, id_col).toArrow()
+    # each pair's query index (the first query of that id), then the
+    # distinct (id, query) pairs sorted by id, as the re-rank looks them up
+    by_id = np.argsort(q_ids, kind="stable")
+    at = by_id[np.searchsorted(
+        q_ids[by_id], pairs.column(0).to_numpy(zero_copy_only=False)
+    )]
+    want = (
+        pa.table({"id": pairs.column(1), "q": at})
+        .group_by(["id", "q"]).aggregate([])
+        .sort_by([("id", "ascending"), ("q", "ascending")])
     )
+    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
+    partial = vectors.select(
+        F.col(id_col), F.col(meta["vec_col"])
+    ).coalesce(cores).mapInArrow(
+        _rerank_kernel(
+            codec.rerank, meta["vec_col"], qv,
+            want.column("id").to_numpy(),
+            want.column("q").to_numpy().astype(np.int64),
+            k, qids, query_id_col,
+        ),
+        _cands_schema(qid_field, DoubleType(), vectors.schema[id_col].dataType),
+    )
+    ranked = _merge_topk(partial, query_id_col, id_col, k, name, distinct=True)
+    if codec.rerank == "l2":
+        # the kernel ranks −d; l2_dist is d again (two exact sign flips)
+        ranked = ranked.withColumn(name, -F.col(name))
+    return ranked
 
 
 def _artifact_drift_report(
@@ -3429,8 +3861,9 @@ def ivf_topk_against_index(
 ) -> DataFrame:
     """Approximate cosine top-k against a :func:`build_ivf_index` artifact,
     reading ONLY the probed inverted lists; bit-identical to
-    :func:`ivf_topk` under the stored pivots (same tie-breaks).  See
-    :func:`_probe_artifact` for the deterministic-queries precondition."""
+    :func:`ivf_topk` under the stored pivots (same tie-breaks).  The query
+    batch is collected once and assigned to its lists on the driver; one
+    Arrow kernel scores the lists (see :func:`_probe_artifact`)."""
     return _probe_artifact(
         queries, index_path, "ivf", k, query_id_col, vec_col, exclude_self,
         nprobe=nprobe,
@@ -3462,7 +3895,9 @@ def lsh_topk_against_index(
 ) -> DataFrame:
     """Amplified-LSH top-k against a :func:`build_lsh_index` artifact:
     identical candidates, scores and ranks as the in-memory
-    :func:`lsh_multitable_topk` under the manifest's plane tables."""
+    :func:`lsh_multitable_topk` under the manifest's plane tables.  The
+    bucket equi-join finds the candidates; the probe's re-rank kernel
+    scores their exact cosines."""
     return _probe_artifact(
         queries, index_path, "lsh", k, query_id_col, vec_col, exclude_self,
         n_probes=n_probes,
@@ -3509,9 +3944,11 @@ def ivfpq_topk_against_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a :func:`build_ivfpq_index` artifact: per-(query, probed
-    list) residual LUTs ADC-score the pruned codes, the exact L2 re-rank
-    reads ``vectors`` for queries × shortlist rows only.  Bit-identical
-    to :func:`ivfpq_residual_topk` under the same quantizer/codebooks.
+    list) residual LUTs, built on the driver from the collected query
+    batch, ADC-score the pruned codes in one Arrow kernel; the exact L2
+    re-rank kernel reads ``vectors`` for the shortlisted pairs only.
+    Bit-identical to :func:`ivfpq_residual_topk` under the same
+    quantizer/codebooks.
     Output: ``(query_id, vec_id, l2_dist, rank)``."""
     return _probe_artifact(
         queries, index_path, "ivfpq", k, query_id_col, vec_col,
@@ -3551,7 +3988,9 @@ def pq_topk_against_index(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Two-stage PQ retrieval against a :func:`build_pq_index` artifact:
-    identical to :func:`pq_adc_rerank_topk` under the stored codebooks."""
+    identical to :func:`pq_adc_rerank_topk` under the stored codebooks.
+    Per-query LUTs are built on the driver; ADC scoring and the exact L2
+    re-rank run in the probe's two Arrow kernels."""
     return _probe_artifact(
         queries, index_path, "pq", k, query_id_col, vec_col, exclude_self,
         shortlist=shortlist,
@@ -3589,7 +4028,9 @@ def sq8_topk_against_index(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Two-stage SQ8 retrieval against a :func:`build_sq8_index`
-    artifact: bit-identical to :func:`sq8_topk` under the stored stats."""
+    artifact: bit-identical to :func:`sq8_topk` under the stored stats.
+    The reconstruction dot and the exact cosine re-rank run in the
+    probe's two Arrow kernels."""
     return _probe_artifact(
         queries, index_path, "sq8", k, query_id_col, vec_col, exclude_self,
         shortlist=shortlist,
@@ -3630,7 +4071,9 @@ def ivfsq8_topk_against_index(
 ) -> DataFrame:
     """Probe a :func:`build_ivfsq8_index` artifact reading only the probed
     lists' codes; bit-identical to :func:`ivfsq8_topk` under the stored
-    stats and pivots."""
+    stats and pivots.  Lists are assigned on the driver; the
+    reconstruction dot and the exact cosine re-rank run in the probe's
+    two Arrow kernels."""
     return _probe_artifact(
         queries, index_path, "ivfsq8", k, query_id_col, vec_col, exclude_self,
         nprobe=nprobe, shortlist=shortlist,
@@ -3673,7 +4116,9 @@ def matryoshka_topk_against_index(
 ) -> DataFrame:
     """Probe a :func:`build_matryoshka_index` artifact: prefix cosine over
     the probed lists shortlists, the exact full-dimension cosine
-    re-ranks; bit-identical to :func:`matryoshka_ivf_topk`."""
+    re-ranks; bit-identical to :func:`matryoshka_ivf_topk`.  Queries are
+    cut to their prefix and assigned on the driver; both cosines run in
+    the probe's two Arrow kernels."""
     return _probe_artifact(
         queries, index_path, "matryoshka", k, query_id_col, vec_col,
         exclude_self, nprobe=nprobe, shortlist=shortlist,
@@ -3715,7 +4160,9 @@ def ivfbq_topk_against_index(
 ) -> DataFrame:
     """Probe a :func:`build_ivfbq_index` artifact: Hamming over the probed
     lists' packed words shortlists, exact cosine re-ranks; bit-identical
-    to :func:`ivfbq_topk` under the stored thresholds and pivots."""
+    to :func:`ivfbq_topk` under the stored thresholds and pivots.  Query
+    words are packed on the driver; Hamming scoring and the re-rank run in
+    the probe's two Arrow kernels."""
     return _probe_artifact(
         queries, index_path, "ivfbq", k, query_id_col, vec_col, exclude_self,
         nprobe=nprobe, shortlist=shortlist,

@@ -213,6 +213,58 @@ def test_grouped_topk_partition_partial_matches_global_order(spark):
     assert dict(out2.dtypes)["s"] == "float"
 
 
+def test_grouped_topk_selects_batch_by_batch(spark):
+    """The partial top-k keeps at most groups × k candidates while it
+    reads a partition batch by batch: the output with 7-row Arrow batches
+    (so the k boundary moves across many batches, through ties, NaN,
+    NULL and int scores) equals the output at the default batch size."""
+    from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.operators import (
+        similarity,
+    )
+
+    rows = [
+        (f"q{i % 3}", i, None if i % 11 == 0 else float("nan") if i % 13 == 0
+         else float(i % 6))
+        for i in range(200)
+    ]
+    floats = spark.createDataFrame(rows, "g string, id long, s double").coalesce(2)
+    ints = spark.createDataFrame(
+        [(g, i, None if s is None or s != s else int(s) * 7 - i % 2)
+         for g, i, s in rows],
+        "g string, id long, s int",
+    ).coalesce(2)
+
+    def runs():
+        return [
+            sorted(
+                (r["g"], r["rank"], r["id"], repr(r["s"]))
+                for r in similarity.grouped_topk(df, "g", "id", 9, "s").collect()
+            )
+            for df in (floats, ints)
+        ]
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = runs()
+    spark.conf.set(conf, "7")
+    try:
+        assert runs() == default
+    finally:
+        spark.conf.unset(conf)
+
+
+def test_grouped_topk_refuses_a_decimal_score(spark):
+    from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.operators import (
+        similarity,
+    )
+
+    scored = spark.createDataFrame(
+        [("q", 1, 0.5), ("q", 2, 0.25)], "g string, id int, s double"
+    )
+    dec = scored.selectExpr("g", "id", "cast(s as decimal(10, 2)) as s")
+    with pytest.raises(TypeError, match="decimal"):
+        similarity.grouped_topk(dec, "g", "id", 1, score_col="s")
+
+
 def test_int8_quantize_error_bound(spark):
     """Reconstruction error per lane is bounded by (scale/2)²."""
     from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark import (

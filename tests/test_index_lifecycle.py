@@ -545,3 +545,222 @@ def test_maintenance_refuses_unknown_manifest_version(spark, tmp_path, op):
     with pytest.raises(ValueError, match="version"):
         op(spark, path)
     assert not os.path.isdir(os.path.join(path, "tombstones"))
+
+
+# ---------------------------------------------------------------------------
+# the probe's query side: what one collected query batch ranks to
+# ---------------------------------------------------------------------------
+
+#: Output columns of each family's probe.
+PROBE_DTYPES = {
+    f: [("query_id", "bigint"), ("vec_id", "bigint"),
+        ("l2_dist" if f in ("pq", "ivfpq") else "cosine", "double"),
+        ("rank", "int")]
+    for f in ROUND_TRIP_FAMILIES
+}
+
+
+@pytest.mark.parametrize("family", ROUND_TRIP_FAMILIES)
+def test_probe_schema_and_empty_batch_every_codec(spark, tmp_path, family):
+    """Each family's probe keeps its output columns and types, and an
+    empty query batch returns an empty frame of the same schema."""
+    base = spark.read.parquet(EMB).filter(F.col("vec_id") < 400)
+    q = base.filter(F.col("vec_id") % 40 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    build, probe, _twin = _round_trip_cases(base)[family]
+    path = str(tmp_path / family)
+    build(base, path)
+    out = probe(q, path, "embedding")
+    assert out.dtypes == PROBE_DTYPES[family]
+    assert out.count() == 10 * q.count()
+    empty = probe(q.filter(F.lit(False)), path, "embedding")
+    assert empty.dtypes == PROBE_DTYPES[family]
+    assert empty.collect() == []
+
+
+def _nan_pivot_index(spark, tmp_path):
+    """A 4-dim IVF index (modulus 10: pivots 0, 10, 20, 30) whose pivot 0
+    holds a NaN, so every distance to it is NaN; returns the path, the
+    vectors and each vector's list under the NaN-greatest argmin."""
+    import numpy as np
+
+    vecs = np.random.default_rng(7).normal(size=(40, 4)).astype(np.float32)
+    vecs[0, 0] = np.nan
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    path = similarity.build_ivf_index(corpus, str(tmp_path / "ivf"), modulus=10)
+    v64 = vecs.astype(np.float64)
+    d = ((v64[:, None, :] - v64[None, [0, 10, 20, 30], :]) ** 2).sum(axis=2)
+    lists = np.where(
+        np.isnan(d).all(axis=1), 0, np.where(np.isnan(d), np.inf, d).argmin(axis=1)
+    ) * 10
+    return path, v64, lists
+
+
+def test_probe_ranks_nan_distances_and_scores_as_ivf_assign(spark, tmp_path):
+    """``nprobe=1`` ranks a NaN distance greatest (never probed unless all
+    are NaN); ``nprobe>1`` ranks NaN distances first.  A NaN cosine ranks
+    first among a query's candidates, ties broken by id."""
+    import math
+
+    path, vecs, lists = _nan_pivot_index(spark, tmp_path)
+    assert [int(i) for i in range(40) if lists[i] == 0] == [0]
+    near = [float(x) for x in vecs[21] + 0.01]
+    nan_q = [float("nan")] * 4
+    q = spark.createDataFrame(
+        [(100, near), (101, nan_q)], "query_id long, embedding array<float>"
+    )
+
+    def probe(nprobe):
+        out = {}
+        for r in similarity.ivf_topk_against_index(
+            q, path, k=5, nprobe=nprobe
+        ).collect():
+            out.setdefault(r["query_id"], []).append(
+                (r["rank"], r["vec_id"], "nan" if math.isnan(r["cosine"]) else r["cosine"])
+            )
+        return {k: sorted(v) for k, v in out.items()}
+
+    one, two = probe(1), probe(2)
+    # the real query probes only its nearest real list
+    assert {v for _r, v, _c in one[100]} <= {i for i in range(40) if lists[i] == lists[21]}
+    assert all(c != "nan" for _r, _v, c in one[100])
+    # nprobe=2 adds the NaN pivot's list, whose NaN cosine ranks first
+    assert two[100][0] == (1, 0, "nan")
+    assert [v for _r, v, _c in two[100][1:]] == [v for _r, v, _c in one[100][:4]]
+    # an all-NaN query: every distance is NaN, so the lowest pivot ids win
+    assert one[101] == [(1, 0, "nan")]
+    members = sorted(i for i in range(40) if lists[i] in (0, 10))
+    assert two[101] == [(r + 1, v, "nan") for r, v in enumerate(members[:5])]
+
+
+@pytest.mark.parametrize("family", ["ivf", "sq8"])
+def test_zero_norm_query_cosine_divides_by_zero(spark, tmp_path, family):
+    """A zero-norm query's cosine divides by zero, which Spark's ANSI
+    division refuses; the probe raises the same error."""
+    base = spark.read.parquet(EMB).filter(F.col("vec_id") < 400)
+    dim = len(base.first()["embedding"])
+    build, probe, _twin = _round_trip_cases(base)[family]
+    path = str(tmp_path / family)
+    build(base, path)
+    q = spark.createDataFrame(
+        [(1000, [0.0] * dim)], "query_id long, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        probe(q, path, "embedding").collect()
+
+
+@pytest.mark.parametrize(
+    "vec", [None, "null element", "ragged"], ids=["null", "null element", "ragged"]
+)
+@pytest.mark.parametrize("family", ["ivf", "pq"])
+def test_probe_rejects_null_and_ragged_query_vectors(spark, tmp_path, family, vec):
+    base = spark.read.parquet(EMB).filter(F.col("vec_id") < 400)
+    dim = len(base.first()["embedding"])
+    build, probe, _twin = _round_trip_cases(base)[family]
+    path = str(tmp_path / family)
+    build(base, path)
+    bad = {
+        None: None,
+        "null element": [0.5] * (dim - 1) + [None],
+        "ragged": [0.5] * (dim - 1),
+    }[vec]
+    q = spark.createDataFrame(
+        [(1000, [0.25] * dim), (1001, bad)], "query_id long, q_emb array<float>"
+    )
+    with pytest.raises(ValueError, match="'q_emb'"):
+        probe(q, path, "q_emb").collect()
+
+
+def test_probe_kernels_run_where_the_package_cannot_be_imported(tmp_path):
+    """Python workers cannot import this package, so every probe kernel
+    must pickle by value: each codec's scoring kernel and both re-rank
+    kernels run in a fresh interpreter without the package on its path
+    and return what they return here."""
+    import pickle
+    import subprocess
+    import sys
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark import cloudpickle
+
+    rng = np.random.default_rng(3)
+    dim, n = 16, 40
+    qv = rng.normal(size=(3, dim))
+    vecs = rng.normal(size=(n, dim)).astype(np.float32)
+    pivots = vecs[[0, 10, 20]].astype(np.float64)
+    ids = pa.array(np.arange(n, dtype=np.int64))
+    lists = similarity._probe_lists(qv, pivots, 2, "embedding")
+    piv = pa.array(np.asarray([0, 10, 20])[np.arange(n) % 3])
+    probes = {}
+    for slot, p in enumerate(lists.ravel()):
+        probes.setdefault([0, 10, 20][p], []).append(slot)
+    probes = {p: (np.asarray(s) // 2, np.asarray(s)) for p, s in probes.items()}
+    qids = pa.array([100, 101, 102], type=pa.int64())
+
+    def col(a):
+        return pa.array([list(r) for r in a])
+
+    books = rng.normal(size=(4, 8, dim // 4)).tolist()
+    cases = {
+        "ivf": ({"vec_col": "embedding"}, col(vecs), None),
+        "sq8": ({"mins": [-3.0] * dim, "steps": [0.02] * dim},
+                col(rng.integers(0, 256, (n, dim)).astype(np.int32)), None),
+        "ivfpq": ({"codebooks": books},
+                  col(rng.integers(0, 8, (n, 4)).astype(np.int32)), piv),
+        "matryoshka": ({"prefix_dims": dim}, col(vecs), piv),
+        "ivfbq": ({"thresholds": [0.0] * dim},
+                  col(rng.integers(0, 1 << 16, (n, 1))), piv),
+    }
+    kernels, inputs = {}, {}
+    for fam, (meta, codes, pivot_col) in cases.items():
+        codec = similarity.CODECS[fam]
+        coarse = pivot_col is not None
+        scorer = codec.scorer(meta, qv, pivots if coarse else None,
+                              lists if coarse else None)
+        kernels[fam] = similarity._scoring_kernel(
+            scorer, 5, probes if coarse else None, np.asarray([100, 5, 102]),
+            qids, "query_id",
+        )
+        cols = [ids, codes] + ([pivot_col] if coarse else [])
+        inputs[fam] = pa.RecordBatch.from_arrays(
+            cols, names=[f"c{i}" for i in range(len(cols))]
+        )
+    want = (np.asarray([3, 5, 7, 9]), np.asarray([0, 1, 1, 2]))
+    for metric in ("l2", "cosine"):
+        kernels[metric] = similarity._rerank_kernel(
+            metric, "embedding", qv, *want, 2, qids, "query_id"
+        )
+        inputs[metric] = pa.RecordBatch.from_arrays(
+            [ids, col(vecs)], names=["vec_id", "embedding"]
+        )
+
+    def run(kernel, batch):
+        return [b.to_pylist() for b in kernel(iter([batch]))]
+
+    here = {name: run(k, inputs[name]) for name, k in kernels.items()}
+    assert all(here.values())
+    (tmp_path / "kernels.pkl").write_bytes(cloudpickle.dumps((kernels, inputs)))
+    script = (
+        "import pickle, sys\n"
+        "try:\n"
+        "    import medallion_data_warehouse_on_azure_with_databricks_pyspark_spark\n"
+        "    sys.exit('the package is importable here')\n"
+        "except ModuleNotFoundError:\n"
+        "    pass\n"
+        "kernels, inputs = pickle.load(open('kernels.pkl', 'rb'))\n"
+        "out = {n: [b.to_pylist() for b in k(iter([inputs[n]]))]\n"
+        "       for n, k in kernels.items()}\n"
+        "pickle.dump(out, open('out.pkl', 'wb'))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert pickle.loads((tmp_path / "out.pkl").read_bytes()) == here

@@ -779,6 +779,30 @@ def test_ivf_index_matches_inmemory_path(spark, tmp_path):
     assert via_index
 
 
+def _probe_plans(spark, probe) -> str:
+    """Formatted plans of an indexed probe: the frame ``probe()`` returns
+    and every query it ran eagerly while building it (a probe with a
+    re-rank scores its pruned lists before it returns), read from
+    Spark's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        # by id: the store retains a bounded window, so positions shift
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    out = probe()
+    fm = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = out._jdf.queryExecution().explainString(fm)
+    return plan + "".join(
+        "\n" + e.physicalPlanDescription()
+        for e in executions() if e.executionId() > seen
+    )
+
+
 def test_ivf_index_prunes_unprobed_lists(spark, tmp_path):
     """Partition pruning is the point of the artifact: a 1-query nprobe=2
     probe must plan a scan restricted to exactly the 2 probed list
@@ -1556,11 +1580,10 @@ def test_ivfsq8_index_roundtrip_and_pruning(spark, tmp_path):
     assert via_index
 
     one_query = queries.limit(1)
-    out = similarity.ivfsq8_topk_against_index(one_query, idx, k=10, nprobe=2)
-    fm = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
+    plan = _probe_plans(
+        spark,
+        lambda: similarity.ivfsq8_topk_against_index(one_query, idx, k=10, nprobe=2),
     )
-    plan = out._jdf.queryExecution().explainString(fm)
     m = re.search(r"PartitionFilters: \[pivot_id#\d+ IN \(([\d,]+)\)", plan)
     assert m, plan
     assert len(m.group(1).split(",")) == 2, m.group(1)
@@ -1738,13 +1761,12 @@ def test_matryoshka_index_roundtrip_pruning_and_lifecycle(spark, tmp_path):
     assert sorted(map(key, via_index)) == sorted(map(key, direct))
     assert via_index
 
-    out = similarity.matryoshka_topk_against_index(
-        queries.limit(1), idx, k=10, nprobe=2
+    plan = _probe_plans(
+        spark,
+        lambda: similarity.matryoshka_topk_against_index(
+            queries.limit(1), idx, k=10, nprobe=2
+        ),
     )
-    fm = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = out._jdf.queryExecution().explainString(fm)
     m = re.search(r"PartitionFilters: \[pivot_id#\d+ IN \(([\d,]+)\)", plan)
     assert m, plan
     assert len(m.group(1).split(",")) == 2, m.group(1)
@@ -1893,11 +1915,10 @@ def test_ivfbq_index_roundtrip_and_pruning(spark, tmp_path):
     assert via_index
 
     one_query = queries.limit(1)
-    out = similarity.ivfbq_topk_against_index(one_query, idx, k=10, nprobe=2)
-    fm = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
+    plan = _probe_plans(
+        spark,
+        lambda: similarity.ivfbq_topk_against_index(one_query, idx, k=10, nprobe=2),
     )
-    plan = out._jdf.queryExecution().explainString(fm)
     m = re.search(r"PartitionFilters: \[pivot_id#\d+ IN \(([\d,]+)\)", plan)
     assert m, plan
     assert len(m.group(1).split(",")) == 2, m.group(1)
