@@ -56,15 +56,16 @@ _TARGET_FILE_MB = 128
 
 
 def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """The index's pending-delete id set (distinct), or ``None`` when no
-    delete has happened since the last build/compaction — callers skip
-    the anti-join entirely in the common no-deletes case."""
+    """The index's pending-delete ids as stored — an id deleted twice
+    appears twice; a left-anti join needs no distinct build side — or
+    ``None`` when no delete has happened since the last build/compaction:
+    callers skip the anti-join entirely in the common no-deletes case."""
     tomb = os.path.join(index_path, TOMBSTONE_DIR)
     if not os.path.isdir(tomb) or not any(
         f.endswith(".parquet") for f in os.listdir(tomb)
     ):
         return None
-    return spark.read.parquet(tomb).distinct()
+    return spark.read.parquet(tomb)
 
 
 def exclude_tombstoned(
@@ -92,7 +93,7 @@ def delete_from_index(
     index rows are read or rewritten; the read paths exclude tombstoned
     ids from candidates, and the next :func:`compact_index` makes the
     removal physical.  Idempotent — deleting an id twice, or an id the
-    index never held, is harmless (tombstones are applied as a distinct
+    index never held, is harmless (tombstones are applied as an
     anti-join set)."""
     meta, _codec = similarity.read_manifest(index_path)
     target = meta["id_col"]
@@ -254,7 +255,7 @@ def index_health(spark: SparkSession, index_path: str) -> dict:
         F.countDistinct(*nat_key).alias("nat_rows"),
     ).first()
     tomb = read_tombstones(spark, index_path)
-    n_tomb = tomb.count() if tomb is not None else 0
+    n_tomb = tomb.distinct().count() if tomb is not None else 0
     out = {
         "family": codec.family,
         "rows": agg["rows"],

@@ -12,18 +12,21 @@ Approximate-nearest-neighbor over ``array<float>`` embeddings:
   ranking only bucket members.  Corpus-side cost amortizes via the
   persisted bucket table; per-query cost drops from O(N) to O(bucket).
 * ``cosine_dedup_pairs`` — embedding near-dup pairs via the same bucketing.
-* on-disk index artifacts (end of module) — ``build_*_index`` /
-  ``append_to_*_index`` / ``*_topk_against_index`` for every family
-  (ivf, lsh, pq, sq8, ivfpq, ivfsq8, matryoshka, ivfbq), bound to one
-  build / append / probe lifecycle over the ``CODECS`` table.  A probe
-  collects its (small) query batch once, derives the query side on the
-  driver in numpy, and scores and re-ranks in two ``mapInArrow`` kernels
-  that keep a bounded top-n per query, so no (query, candidate) pair row
-  is ever materialized.
+* the quantized ANN ladder (ivf, pq, ivfpq, sq8, ivfsq8, matryoshka, bq,
+  ivfbq) — one family per codec of the ``CODECS`` table, each reachable
+  two ways: in memory (``ivf_topk``, ``pq_adc_rerank_topk``, … encode
+  the corpus per call) and as an on-disk artifact (``build_*_index`` /
+  ``append_to_*_index`` / ``*_topk_against_index``, one build / append /
+  probe lifecycle, lsh's bucket table included).  Both end in the same
+  probe, :func:`_probe`: it collects the (small) query batch once,
+  derives the query side on the driver in numpy, and scores and
+  re-ranks in two ``mapInArrow`` kernels that keep a bounded top-n per
+  query, so no (query, candidate) pair row is ever materialized.
 
-Scale design: the corpus never self-joins; planes/queries are broadcast;
-norms are precomputed once.  Distances use double accumulation in element
-order so results are deterministic.
+Scale design: the corpus never self-joins; planes and queries are
+broadcast, or held by the probe's kernels; norms are precomputed once.
+Distances use double accumulation in element order so results are
+deterministic.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ import os
 import re
 import uuid
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import NamedTuple
 
 import numpy as np
@@ -1063,33 +1066,19 @@ def ivf_topk(
     lists.
 
     The 100 TB shape: the assignment is computed once and persisted with
-    the corpus (here inline); per-query candidate count is ~nprobe·N/P.
-    The probe join is an equi-join on ``pivot_id`` with the query side
-    broadcast — the corpus shuffles once, on list id.
+    the corpus (here inline, as ``build_ivf_index`` would store it);
+    per-query candidate count is ~nprobe·N/P.  The lists run through
+    :func:`_probe`: probed lists are picked per query on the driver, the
+    scoring kernel reads only rows of probed lists, and the corpus never
+    crosses the queries.  ``pivots`` overrides the every-``modulus``-th
+    seeds (e.g. :func:`kmeans_pivots`).
     """
     if pivots is None:
         pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    # keep_cols carries the vectors through the zero-shuffle assignment —
-    # no re-join of corpus or queries by id (optimization r18, guide §2.4).
-    c = ivf_assign(
-        _spread(corpus), pivots, 1, id_col, vec_col, keep_cols=(vec_col,)
-    ).select(
-        F.col(id_col), F.col(vec_col).alias("__cvec"), "pivot_id"
-    ).withColumn("__cnorm", _norm(F.col("__cvec")))
-    q = ivf_assign(
-        queries, pivots, nprobe, query_id_col, vec_col, keep_cols=(vec_col,)
-    ).select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec"), "pivot_id"
-    ).withColumn("__qnorm", _norm(F.col("__qvec")))
-    scored = c.join(F.broadcast(q), "pivot_id")
-    if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    scored = scored.withColumn(
-        "cosine",
-        _dot(F.col("__qvec"), F.col("__cvec"))
-        / (F.col("__qnorm") * F.col("__cnorm")),
+    return _probe_corpus(
+        "ivf", corpus, queries, {}, pivots, k, id_col, vec_col, query_id_col,
+        spread=True, exclude_self=exclude_self, nprobe=nprobe,
     )
-    return grouped_topk(scored, query_id_col, id_col, k)
 
 
 def cosine_dedup_pairs(
@@ -1584,72 +1573,6 @@ def _pq_lloyd(
     return books
 
 
-def _pq_subdists_kernel(codebooks: list[list[list[float]]]):
-    """Arrow kernel: per input vector, the flat array of squared L2
-    distances to EVERY codebook entry — slot ``m·K + k`` (the per-query
-    ADC LUT, and the argmin input for encoding).
-
-    Hybrid plan like the SimHash vote: the pure-Catalyst formulation is
-    M×K interpreted ``aggregate`` lambdas per row (measured ~20 s for
-    2000 rows at M=16, K=16); this kernel is one Arrow batch transfer.
-    Bit-reproducibility is preserved by construction: ``(x-c)·(x-c)``
-    terms (explicit multiply — libm ``pow(x, 2)`` is not exact
-    cross-engine) accumulate via an explicit LEFT-ASSOCIATIVE add chain
-    over the sub-dimension — numpy's pairwise ``sum`` would re-associate
-    and drift the last ulp vs the oracle's ordered fold."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    books = np.asarray(codebooks, dtype=np.float64)  # (M, K, d)
-    n_sub, n_codes, d = books.shape
-
-    @pandas_udf("array<double>")
-    def subdists(col):
-        # type: (pd.Series) -> pd.Series
-        if not len(col):
-            return pd.Series([], dtype="object")
-        v = np.stack([np.asarray(e, dtype=np.float64) for e in col])
-        sub = v.reshape(len(v), n_sub, 1, d)          # (B, M, 1, d)
-        diff = sub - books[None]                      # (B, M, K, d)
-        sq = diff * diff
-        acc = sq[..., 0].copy()                       # left-assoc over d
-        for j in range(1, d):
-            acc = acc + sq[..., j]
-        flat = acc.reshape(len(v), n_sub * n_codes)
-        return pd.Series(list(flat))
-
-    return subdists
-
-
-def _adc_score_kernel(n_sub: int, n_codes: int):
-    """Arrow kernel for the ADC scoring projection: per (pq_code, lut)
-    row, ``Σ_m lut[m·K + code_m]`` with an explicit left-associative add
-    chain (bit-identical to the oracle's m-ordered fold).  The Catalyst
-    formulation — a ``transform`` of per-code ``element_at`` lookups +
-    an interpreted fold per candidate row — measured ~30 s for the
-    160k-row query×corpus scoring at sf0.1; the kernel is one
-    batch-vectorized gather."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    base = np.arange(n_sub, dtype=np.int64) * n_codes
-
-    @pandas_udf("double")
-    def adc(codes, luts):
-        # type: (pd.Series, pd.Series) -> pd.Series
-        if not len(codes):
-            return pd.Series([], dtype="float64")
-        c2 = np.stack([np.asarray(c, dtype=np.int64) for c in codes])
-        l2 = np.stack([np.asarray(x, dtype=np.float64) for x in luts])
-        vals = np.take_along_axis(l2, base[None, :] + c2, axis=1)
-        acc = vals[:, 0].copy()
-        for j in range(1, n_sub):
-            acc = acc + vals[:, j]
-        return pd.Series(acc)
-
-    return adc
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1699,44 +1622,22 @@ def pq_adc_topk(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: each query scores every
-    vector as ``Σ_m l2sq(q_sub[m], codebook[m][code_m])`` — 8 literal-table
+    vector as ``Σ_m l2sq(q_sub[m], codebook[m][code_m])`` — M table
     lookups + adds per candidate instead of a ``dim``-length float scan,
     the compressed-domain speedup PQ exists for.
 
-    Plan: corpus encodes once (:func:`pq_encode`), the (tiny) query side
-    broadcasts with a precomputed per-query distance LUT (subspaces ×
-    codes doubles), scoring is a map-side projection over the code array
-    folded in subspace order (bit-reproducible), and the only exchange is
-    the two-phase :func:`grouped_topk`.  Output: ``(query_id, vec_id,
-    adc_dist, rank)`` — rank ascending by distance, ties on id.
+    Plan: the corpus encodes once (:func:`pq_encode`) and streams through
+    :func:`_probe`'s scoring kernel, which holds each query's distance
+    LUT (subspaces × codes doubles, built on the driver), sums it in
+    subspace order (bit-reproducible) and keeps a per-partition top-k;
+    the only exchange merges those.  A query never ranks itself.
+    Output: ``(query_id, vec_id, adc_dist, rank)`` — rank ascending by
+    distance, ties on id.
     """
-    n_sub = len(codebooks)
-    n_codes = len(codebooks[0])
-    d = len(codebooks[0][0])
-    # Materialize the codes BEFORE the query join: the encode projection
-    # (argmin over the kernel's distance array) otherwise re-evaluates per
-    # joined output row — measured 30 s vs 4 s at sf0.1 for an 80-query
-    # batch.  At scale this materialization IS the PQ design: codes are
-    # built once (build_pq_index) and scanned per batch.
-    codes = pq_encode(corpus, codebooks, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
-    # per-query LUT: flat array, slot m*n_codes + code  (built on the query
-    # side — queries × subspaces × codes entries, tiny by construction)
-    q = queries.select(
-        F.col(query_id_col),
-        _pq_subdists_kernel(codebooks)(F.col(vec_col)).alias("__lut"),
-    )
-    scored = codes.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col(query_id_col)
-    )
-    adc = _adc_score_kernel(len(codebooks), n_codes)
-    scored = scored.withColumn(
-        "__negd", -adc(F.col("pq_code"), F.col("__lut"))
-    ).select(query_id_col, id_col, "__negd")
-    ranked = grouped_topk(scored, query_id_col, id_col, k, score_col="__negd")
-    return ranked.select(
-        query_id_col, id_col, (-F.col("__negd")).alias("adc_dist"), "rank"
+    return _probe_corpus(
+        replace(CODECS["pq"], rerank=None), corpus, queries,
+        {"codebooks": codebooks}, None, k, id_col, vec_col, query_id_col,
+        score="adc_dist",
     )
 
 
@@ -1751,61 +1652,16 @@ def pq_adc_rerank_topk(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """PQ two-stage retrieval, the production shape: ADC over compressed
-    codes shortlists ``shortlist`` candidates per query
-    (:func:`pq_adc_topk` — LUT lookups, no float vectors touched), then
-    ONLY the shortlist is re-ranked with exact squared L2 on the full
-    vectors.  At 100 TB the expensive float scan shrinks from N to
-    queries × shortlist rows; the shortlist join shuffles candidate ids,
-    never the corpus.  Output: ``(query_id, vec_id, l2_dist, rank)``."""
-    sl = pq_adc_topk(
-        corpus, queries, codebooks, k=shortlist,
-        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-    ).select(query_id_col, id_col)
-    return _exact_l2_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
-    )
-
-
-def _exact_l2_rerank(
-    shortlist: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    dedup_ids: bool = False,
-) -> DataFrame:
-    """Exact squared-L2 re-rank of a ``(query_id, id)`` shortlist: full
-    vectors are read for queries × shortlist rows only (the join shuffles
-    candidate ids, never the corpus); element-ordered fold keeps distances
-    bit-reproducible.  Shared tail of the PQ and IVF-PQ stacks.
-
-    ``dedup_ids``: replay guard for index readers whose vectors file can
-    carry duplicate rows after an at-least-once append — dedup per
-    ``(query, id)`` AFTER the shortlist join, so the guard's exchange is
-    bounded by queries × shortlist instead of the whole vectors table
-    (the pre-r18 form deduped the full table per probe call)."""
-    qv = queries.select(
-        F.col(query_id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__qv"),
-    )
-    cand = shortlist.join(
-        corpus.select(F.col(id_col), F.col(vec_col).alias("__cv")), id_col
-    )
-    if dedup_ids:
-        cand = cand.dropDuplicates([query_id_col, id_col])
-    cand = cand.join(F.broadcast(qv), query_id_col)
-    diff = F.zip_with(
-        F.col("__qv"), F.col("__cv"),
-        lambda x, y: (x - y.cast("double")) * (x - y.cast("double")),
-    )
-    scored = cand.withColumn(
-        "__negd", -F.aggregate(diff, F.lit(0.0), lambda a, v: a + v)
-    ).select(query_id_col, id_col, "__negd")
-    ranked = grouped_topk(scored, query_id_col, id_col, k, score_col="__negd")
-    return ranked.select(
-        query_id_col, id_col, (-F.col("__negd")).alias("l2_dist"), "rank"
+    codes shortlists ``shortlist`` candidates per query (the
+    :func:`pq_adc_topk` scan — LUT lookups, no float vectors touched),
+    then ONLY the shortlist is re-ranked with exact squared L2 on the
+    full vectors (:func:`_probe`'s re-rank kernel reads the corpus and
+    scores the collected (query, id) pairs only).  At 100 TB the
+    expensive float scan shrinks from N to queries × shortlist pairs.
+    Output: ``(query_id, vec_id, l2_dist, rank)``."""
+    return _probe_corpus(
+        "pq", corpus, queries, {"codebooks": codebooks}, None, k, id_col,
+        vec_col, query_id_col, shortlist=shortlist,
     )
 
 
@@ -1824,47 +1680,17 @@ def ivfpq_topk(
     """The composed billion-vector layout, IVF-PQ: IVF lists prune
     candidates (each query ADC-scores only its ``nprobe`` probed lists,
     never the corpus), PQ codes make the scoring LUT-only, and the exact
-    float read is deferred to the ``shortlist`` re-rank.  At 100 TB every
-    stage touches the small thing: pivots and query LUTs broadcast, the
-    candidate join carries ``queries × probed-list`` id rows, codes are
-    ~32× smaller than vectors, and full floats surface for
-    queries × shortlist rows only."""
-    pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    q_probes = ivf_assign(
-        queries, pivots, nprobe=nprobe, id_col=query_id_col, vec_col=vec_col
-    ).select(query_id_col, "pivot_id")
-    # One quantizer-kernel pass carrying assignment AND codes,
-    # materialized for the same per-output-row re-evaluation hazard as
-    # pq_adc_topk (the candidate join replicates code rows per query).
-    # Candidates then join codes directly on pivot_id.
-    codes = _pq_codes(
-        corpus, codebooks, id_col, vec_col, _pivot_matrix(pivots)
-    ).localCheckpoint(eager=False)
-    n_codes = len(codebooks[0])
-    q_lut = queries.select(
-        F.col(query_id_col),
-        _pq_subdists_kernel(codebooks)(F.col(vec_col)).alias("__lut"),
+    float read is deferred to the ``shortlist`` re-rank.  Codes encode
+    the raw vector, so one LUT per query serves every probed list
+    (:func:`ivfpq_residual_topk` encodes residuals).  At 100 TB every
+    stage touches the small thing: pivots and query LUTs live on the
+    driver and in the kernels, codes are ~32× smaller than vectors, and
+    full floats surface for queries × shortlist pairs only."""
+    return _probe_corpus(
+        "ivfpq", corpus, queries, {"codebooks": codebooks, "residual": False},
+        ivf_pivots(corpus, id_col, vec_col, modulus), k, id_col, vec_col,
+        query_id_col, nprobe=nprobe, shortlist=shortlist,
     )
-    scored = (
-        codes.join(F.broadcast(q_probes), "pivot_id")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .join(F.broadcast(q_lut), query_id_col)
-    )
-    adc = _adc_score_kernel(len(codebooks), n_codes)
-    scored = scored.withColumn(
-        "__negd", -adc(F.col("pq_code"), F.col("__lut"))
-    ).select(query_id_col, id_col, "__negd")
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negd"
-    ).select(query_id_col, id_col)
-    return _exact_l2_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
-    )
-
-
-def _as_double(col) -> Column:
-    return F.transform(F.col(col) if isinstance(col, str) else col,
-                       lambda x: x.cast("double"))
 
 
 def ivfpq_residual_topk(
@@ -1891,10 +1717,11 @@ def ivfpq_residual_topk(
     a tight distribution instead of the whole corpus spread — the reason
     production IVF-PQ encodes residuals.  The per-query LUT becomes
     per-(query, probed list): subdistances of ``q − c_list`` against the
-    residual codebooks (nprobe LUTs per query, still tiny and
-    broadcast).  A candidate is always scored with the LUT of ITS OWN
-    list — the join key (query, pivot) guarantees it, since candidates
-    are generated from the probed list they live in.
+    residual codebooks (nprobe LUTs per query, built on the driver).  A
+    candidate is always scored with the LUT of ITS OWN list: the scoring
+    kernel scores a list's rows only with the LUTs of the queries'
+    probes of that list.  This is the ``ivfpq`` codec exactly, the
+    layout ``build_ivfpq_index`` stores.
 
     Exactness is engine-replayable end-to-end: residual subtraction is
     double arithmetic on double-cast inputs (bit-exact in any IEEE
@@ -1919,54 +1746,14 @@ def ivfpq_residual_topk(
     """
     if pivots is None:
         pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    coarse = _pivot_matrix(pivots)
     if codebooks is None:
         codebooks = _pq_lloyd(
             corpus, n_subspaces, n_codes, iters, id_col, vec_col,
-            coarse=coarse,
+            coarse=_pivot_matrix(pivots),
         ).tolist()
-    # One residual encode pass carrying assignment AND codes, materialized
-    # for the same per-output-row re-evaluation hazard as pq_adc_topk.
-    # Candidates join the code table directly on pivot_id — no per-call
-    # id-join of a candidate list back to the codes (optimization r18,
-    # guide §2.4).
-    codes = _pq_codes(
-        corpus, codebooks, id_col, vec_col, coarse, residual=True
-    ).localCheckpoint(eager=False)
-    # keep_cols carries the query vector through the probe assignment, so
-    # the per-(query, probed-list) LUT needs no join back to ``queries``.
-    q_assigned = ivf_assign(
-        queries, pivots, nprobe=nprobe, id_col=query_id_col,
-        vec_col=vec_col, keep_cols=(vec_col,),
-    )
-    q_probes = q_assigned.select(query_id_col, "pivot_id")
-    q_lut = (
-        q_assigned.join(F.broadcast(pivots), "pivot_id")
-        .select(
-            query_id_col,
-            "pivot_id",
-            _pq_subdists_kernel(codebooks)(
-                F.zip_with(
-                    _as_double(vec_col), _as_double("pivot_vec"),
-                    lambda x, y: x - y,
-                )
-            ).alias("__lut"),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(q_probes), "pivot_id")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .join(F.broadcast(q_lut), [query_id_col, "pivot_id"])
-    )
-    adc = _adc_score_kernel(len(codebooks), len(codebooks[0]))
-    scored = scored.withColumn(
-        "__negd", -adc(F.col("pq_code"), F.col("__lut"))
-    ).select(query_id_col, id_col, "__negd")
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negd"
-    ).select(query_id_col, id_col)
-    return _exact_l2_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
+    return _probe_corpus(
+        "ivfpq", corpus, queries, {"codebooks": codebooks}, pivots, k, id_col,
+        vec_col, query_id_col, nprobe=nprobe, shortlist=shortlist,
     )
 
 
@@ -2065,51 +1852,21 @@ def sq8_topk(
     bounded by step/2 per dimension — far gentler than PQ's codebook
     error, at 8× less compression.
 
-    Two stages, both deterministic: (1) approximate dot-product scan over
-    the codes (broadcast queries, corpus streams map-side, per-query
-    shortlist via :func:`grouped_topk` — the exchange carries only
-    partitions × queries × shortlist rows); (2) exact cosine re-rank of
-    the shortlist only.  Ties break on ``vec_id`` in both stages, so an
-    SQL oracle replays stats → codes → approx ranks → exact ranks
-    bit-for-bit.
+    Two stages of :func:`_probe`, both deterministic: (1) approximate
+    dot-product scan over the codes (the scoring kernel holds the query
+    batch and keeps a per-partition shortlist, so the exchange carries
+    only partitions × queries × shortlist rows); (2) exact cosine
+    re-rank of the shortlist only.  Ties break on ``vec_id`` in both
+    stages, so an SQL oracle replays stats → codes → approx ranks →
+    exact ranks bit-for-bit.
 
     Output: ``(query_id, vec_id, cosine, rank)`` — same contract as
     :func:`cosine_topk`.
     """
-    mins, steps = stats if stats is not None else sq8_stats(corpus, vec_col)
-    mn = F.array(*[F.lit(v) for v in mins])
-    st = F.array(*[F.lit(v) for v in steps])
-    coded = sq8_encode(corpus, mins, steps, vec_col, out="__code").select(
-        id_col, F.col(vec_col).alias("__cvec"), "__code"
+    return _probe_corpus(
+        "sq8", corpus, queries, _sq8_params(corpus, vec_col, stats), None, k,
+        id_col, vec_col, query_id_col, shortlist=shortlist,
     )
-    recon = F.transform(
-        F.col("__code"),
-        lambda c, i: F.element_at(mn, i + 1)
-        + c.cast("double") * F.element_at(st, i + 1),
-    )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    scored = (
-        coded.join(F.broadcast(q), how="cross")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn("__approx", _dot(F.col("__qvec"), recon))
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__approx"
-    ).select(query_id_col, id_col)
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec")).withColumn(
-        "__cnorm", _norm(F.col("__cvec"))
-    )
-    qn = q.withColumn("__qnorm", _norm(F.col("__qvec")))
-    rescored = (
-        sl.join(c, id_col)
-        .join(F.broadcast(qn), query_id_col)
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qnorm") * F.col("__cnorm")),
-        )
-    )
-    return grouped_topk(rescored, query_id_col, id_col, k)
 
 
 def matryoshka_topk(
@@ -2138,91 +1895,13 @@ def matryoshka_topk(
     structural gate is that ``prefix_dims == dim`` reproduces the exact
     top-k bit-for-bit.
 
-    Both stages are deterministic total orders on (score, id); Catalyst
-    ``slice`` keeps the prefix fold JVM-side.  Output matches
-    :func:`cosine_topk`: ``(query_id, vec_id, cosine, rank)``."""
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    qp = q.withColumn("__qpre", F.slice(F.col("__qvec"), 1, prefix_dims))
-    c = _spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec")))
-    cp = c.withColumn("__cpre", F.slice(F.col("__cvec"), 1, prefix_dims))
-    scored = (
-        cp.select(id_col, "__cpre")
-        .join(F.broadcast(qp.select(query_id_col, "__qpre")), how="cross")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "__pcos",
-            _dot(F.col("__qpre"), F.col("__cpre"))
-            / (_norm(F.col("__qpre")) * _norm(F.col("__cpre"))),
-        )
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__pcos"
-    ).select(query_id_col, id_col)
-    cn = c.withColumn("__cnorm", _norm(F.col("__cvec")))
-    qn = q.withColumn("__qnorm", _norm(F.col("__qvec")))
-    rescored = (
-        sl.join(cn, id_col)
-        .join(F.broadcast(qn), query_id_col)
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qnorm") * F.col("__cnorm")),
-        )
-    )
-    return grouped_topk(rescored, query_id_col, id_col, k)
-
-
-def _exact_cosine_rerank(
-    shortlist: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    dedup_ids: bool = False,
-) -> DataFrame:
-    """Exact cosine re-rank of a ``(query_id, id)`` shortlist — the shared
-    tail of the SQ8 / matryoshka funnels (the cosine-contract sibling of
-    :func:`_exact_l2_rerank`): raw vectors are read for
-    queries × shortlist rows only, queries broadcast, ordered-fold dot
-    products bit-reproducible.  Output: ``(query_id, id, cosine, rank)``.
-
-    ``dedup_ids``: replay guard for index readers whose vectors file can
-    carry duplicate rows after an at-least-once append — dedup per
-    ``(query, id)`` AFTER the shortlist join, so the guard's exchange is
-    bounded by queries × shortlist instead of the whole vectors table
-    (the pre-r18 form deduped the full table per probe call)."""
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec")).withColumn(
-        "__cnorm", _norm(F.col("__cvec"))
-    )
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
-    ).withColumn("__qnorm", _norm(F.col("__qvec")))
-    cand = shortlist.join(c, id_col)
-    if dedup_ids:
-        cand = cand.dropDuplicates([query_id_col, id_col])
-    rescored = (
-        cand
-        .join(F.broadcast(q), query_id_col)
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qnorm") * F.col("__cnorm")),
-        )
-    )
-    return grouped_topk(rescored, query_id_col, id_col, k)
-
-
-def _sq8_recon(code_col: str, mins: list[float], steps: list[float]) -> Column:
-    """Reconstructed vector ``min + code·step`` from an SQ8 code column —
-    the decode half of :func:`sq8_encode`, shared by every SQ8 scorer."""
-    mn = F.array(*[F.lit(v) for v in mins])
-    st = F.array(*[F.lit(v) for v in steps])
-    return F.transform(
-        F.col(code_col),
-        lambda c, i: F.element_at(mn, i + 1)
-        + c.cast("double") * F.element_at(st, i + 1),
+    The matryoshka codec probed with no pivots: every query scores every
+    prefix.  Both stages are deterministic total orders on (score, id).
+    Output matches :func:`cosine_topk`: ``(query_id, vec_id, cosine,
+    rank)``."""
+    return _probe_corpus(
+        "matryoshka", corpus, queries, {"prefix_dims": prefix_dims}, None, k,
+        id_col, vec_col, query_id_col, spread=True, shortlist=shortlist,
     )
 
 
@@ -2248,13 +1927,12 @@ def ivfsq8_topk(
     whole code table (4× fewer bytes, same asymptotics — at 100 TB that
     is still ~25 TB per batch).  Composing with the IVF coarse quantizer
     changes the asymptotics, not just the constant: each corpus vector
-    lives in its nearest pivot's list (``nprobe=1`` assignment, partial-
-    aggregated shuffle), each query scores only its ``nprobe`` probed
-    lists — ~nprobe/P of the code bytes — through an equi-join on
-    ``pivot_id`` with the query side broadcast.  Codes score as the
-    RECONSTRUCTED vector ``min + code·step`` against the raw query, so
-    accuracy loss stays bounded by step/2 per dimension, exactly as in
-    the flat lane.
+    lives in its nearest pivot's list (``nprobe=1`` assignment), and
+    each query scores only its ``nprobe`` probed lists — ~nprobe/P of
+    the code bytes — in :func:`_probe`'s scoring kernel.  Codes score as
+    the RECONSTRUCTED vector ``min + code·step`` against the raw query,
+    so accuracy loss stays bounded by step/2 per dimension, exactly as
+    in the flat lane.
 
     Every stage is a deterministic total order on (score, id), so an SQL
     oracle replays quantizer stats → codes → coarse assignment → probes
@@ -2264,33 +1942,11 @@ def ivfsq8_topk(
 
     Output: ``(query_id, vec_id, cosine, rank)`` — the family contract.
     """
-    if pivots is None:
-        pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    mins, steps = stats if stats is not None else sq8_stats(corpus, vec_col)
-    # keep_cols carries the vector through the zero-shuffle assignment and
-    # the encode projection runs on top of it — no id re-joins on either
-    # side (optimization r18, guide §2.4).
-    assigned = ivf_assign(
-        _spread(corpus), pivots, 1, id_col, vec_col, keep_cols=(vec_col,)
-    )
-    codes = sq8_encode(assigned, mins, steps, vec_col, out="__code").select(
-        id_col, "__code", "pivot_id"
-    )
-    q = ivf_assign(
-        queries, pivots, nprobe, query_id_col, vec_col, keep_cols=(vec_col,)
-    ).select(F.col(query_id_col), F.col(vec_col).alias("__qvec"), "pivot_id")
-    scored = (
-        codes.join(F.broadcast(q), "pivot_id")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "__approx", _dot(F.col("__qvec"), _sq8_recon("__code", mins, steps))
-        )
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__approx"
-    ).select(query_id_col, id_col)
-    return _exact_cosine_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
+    params, seeds = CODECS["ivfsq8"].train(corpus, id_col, vec_col, modulus, stats)
+    return _probe_corpus(
+        "ivfsq8", corpus, queries, params, seeds if pivots is None else pivots,
+        k, id_col, vec_col, query_id_col, spread=True, nprobe=nprobe,
+        shortlist=shortlist,
     )
 
 
@@ -2328,36 +1984,10 @@ def matryoshka_ivf_topk(
     assignment, probes, and both rank stages bit-for-bit.
 
     Output: ``(query_id, vec_id, cosine, rank)`` — the family contract."""
-    cpre = corpus.select(
-        F.col(id_col), F.slice(F.col(vec_col), 1, prefix_dims).alias("__pre")
-    )
-    qpre = queries.select(
-        F.col(query_id_col),
-        F.slice(F.col(vec_col), 1, prefix_dims).alias("__pre"),
-    )
-    pivots = ivf_pivots(cpre, id_col, "__pre", modulus)
-    # keep_cols carries the prefixes through the zero-shuffle assignment —
-    # no id re-joins on either side (optimization r18, guide §2.4)
-    c = ivf_assign(
-        _spread(cpre), pivots, 1, id_col, "__pre", keep_cols=("__pre",)
-    ).select(id_col, "__pre", "pivot_id")
-    q = ivf_assign(
-        qpre, pivots, nprobe, query_id_col, "__pre", keep_cols=("__pre",)
-    ).select(query_id_col, F.col("__pre").alias("__qpre"), "pivot_id")
-    scored = (
-        c.join(F.broadcast(q), "pivot_id")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "__pcos",
-            _dot(F.col("__qpre"), F.col("__pre"))
-            / (_norm(F.col("__qpre")) * _norm(F.col("__pre"))),
-        )
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__pcos"
-    ).select(query_id_col, id_col)
-    return _exact_cosine_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
+    params, pivots = _train_matryoshka(corpus, id_col, vec_col, prefix_dims, modulus)
+    return _probe_corpus(
+        "matryoshka", corpus, queries, params, pivots, k, id_col, vec_col,
+        query_id_col, spread=True, nprobe=nprobe, shortlist=shortlist,
     )
 
 
@@ -2470,28 +2100,16 @@ def bq_topk(
     :func:`ivfbq_topk`, which composes the same codes with the IVF
     coarse quantizer so a query touches ~nprobe/P of them.  Kept because
     probing every list reproduces this lane exactly — the geometry-
-    independent equivalence gate the whole ladder uses.
+    independent equivalence gate the whole ladder uses.  It is the
+    ivfbq codec probed with no pivots.
 
     Output: ``(query_id, vec_id, cosine, rank)`` — the family contract.
     """
     if thresholds is None:
         thresholds = bq_thresholds(corpus, vec_col)
-    codes = bq_encode(corpus, thresholds, vec_col, out="__code").select(
-        id_col, "__code"
-    )
-    q = bq_encode(queries, thresholds, vec_col, out="__qcode").select(
-        query_id_col, "__qcode"
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(q))
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn("__negham", -bq_hamming("__qcode", "__code"))
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negham"
-    ).select(query_id_col, id_col)
-    return _exact_cosine_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
+    return _probe_corpus(
+        "ivfbq", corpus, queries, {"thresholds": thresholds}, None, k, id_col,
+        vec_col, query_id_col, shortlist=shortlist,
     )
 
 
@@ -2514,9 +2132,9 @@ def ivfbq_topk(
     the exact cosine read is deferred to the shortlist re-rank.  The
     same composition argument as :func:`ivfsq8_topk`: the coarse
     quantizer changes the asymptotics (each query scores ~nprobe/P of
-    the code bytes through an equi-join on ``pivot_id`` with the query
-    side broadcast), the code width changes the constant — together the
-    approximate stage reads ~nprobe/P · 1/32 of the raw float bytes.
+    the code bytes in :func:`_probe`'s scoring kernel), the code width
+    changes the constant — together the approximate stage reads
+    ~nprobe/P · 1/32 of the raw float bytes.
 
     Every stage is integer-exact or a deterministic total order on
     (score, id), so an SQL oracle replays thresholds → words → coarse
@@ -2526,36 +2144,11 @@ def ivfbq_topk(
 
     Output: ``(query_id, vec_id, cosine, rank)`` — the family contract.
     """
-    if pivots is None:
-        pivots = ivf_pivots(corpus, id_col, vec_col, modulus)
-    if thresholds is None:
-        thresholds = bq_thresholds(corpus, vec_col)
-    # keep_cols carries the vector through the zero-shuffle assignment and
-    # the bit-pack projection runs on top of it — no id re-joins on either
-    # side (optimization r18, guide §2.4).
-    assigned = ivf_assign(
-        _spread(corpus), pivots, 1, id_col, vec_col, keep_cols=(vec_col,)
-    )
-    codes = bq_encode(assigned, thresholds, vec_col, out="__code").select(
-        id_col, "__code", "pivot_id"
-    )
-    q = bq_encode(
-        ivf_assign(
-            queries, pivots, nprobe, query_id_col, vec_col,
-            keep_cols=(vec_col,),
-        ),
-        thresholds, vec_col, out="__qcode",
-    ).select(query_id_col, "__qcode", "pivot_id")
-    scored = (
-        codes.join(F.broadcast(q), "pivot_id")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn("__negham", -bq_hamming("__qcode", "__code"))
-    )
-    sl = grouped_topk(
-        scored, query_id_col, id_col, shortlist, score_col="__negham"
-    ).select(query_id_col, id_col)
-    return _exact_cosine_rerank(
-        sl, corpus, queries, k, id_col, vec_col, query_id_col
+    params, seeds = _train_ivfbq(corpus, id_col, vec_col, modulus, thresholds)
+    return _probe_corpus(
+        "ivfbq", corpus, queries, params, seeds if pivots is None else pivots,
+        k, id_col, vec_col, query_id_col, spread=True, nprobe=nprobe,
+        shortlist=shortlist,
     )
 
 
@@ -2839,11 +2432,12 @@ def ivf_drift_report(
       pivots retrained on the current corpus: the recall a rebuild would
       buy.  ``fresh - stale`` is the decision variable.
 
-    Plan shape: one corpus pass per probe (each the standard IVF
-    broadcast-pivot assignment + list-equi-join), one exact scan (the
-    ground truth every recall evaluation needs — run it on a sampled
-    query set in production), and a broadcast left-join per hit count —
-    nothing corpus×corpus, nothing collected.  ``tests/test_llmops.py``
+    Plan shape: one corpus pass per probe (each :func:`ivf_topk`:
+    broadcast-pivot assignment, then the scoring kernel over the probed
+    lists), one exact scan (the ground truth every recall evaluation
+    needs — run it on a sampled query set in production), and a
+    broadcast left-join per hit count — nothing corpus×corpus; only the
+    query batch and the pivots are collected.  ``tests/test_llmops.py``
     pins the semantics: planted drift (an appended shifted cluster)
     degrades stale recall and skews list sizes; retraining restores it.
     """
@@ -2928,23 +2522,26 @@ class IndexCodec:
       pivots or None)``; ``retrain(meta)`` → the params a drift rebuild
       re-derives from a manifest (None: the family has no rebuild).
     * ``encode(df, meta, pivots)`` → primary-table rows under the frozen
-      manifest (build and append share it).
+      manifest (build, append and the in-memory twins share it; the
+      matryoshka and ivfbq encodes also run flat, with ``pivots`` None).
     * ``space(vec, meta)`` — the quantizer's vector space when it is not
       the full vector (matryoshka prefixes); ``pivot_col`` names the
       stored pivot vectors.
     * ``scorer(meta, qs, pivots, lists)`` → a :class:`_Scorer`: the
       codec's numpy score over its table's code columns, bound to a
       collected query batch ``qs`` (in the quantizer's space), the stored
-      pivot matrix and each query's probed lists (None, None for flat
-      codecs).  None for lsh, whose
+      pivot matrix and each query's probed lists (None, None for a flat
+      probe).  None for lsh, whose
       candidates are unscored bucket members: ``query(q, meta, pivots,
       query_id_col, vec_col, n_probes)`` builds its probe rows, equi-joined
       to the table on ``join_on``.
     * ``rerank`` — ``"l2"`` / ``"cosine"``: the score only shortlists and
       exact distances over ``vectors`` rank; None: the score ranks.
-    * ``appendable`` — the family takes appends (lsh does not: its probe
-      never dedups ``vectors``, so a replayed append would duplicate
-      candidates).
+    * ``appendable`` — the family takes appends.  lsh does not: the
+      family has no ``append_to_lsh_index`` binding, so the streaming
+      wire refuses it.  (Its probe would absorb a replayed append — the
+      candidate pairs are deduped on the driver and the re-rank keeps
+      distinct ids — so an lsh append needs only that binding.)
     """
 
     family: str
@@ -3020,10 +2617,11 @@ def _train_ivfpq(
 
 
 def _encode_ivfpq(df, meta, pivots):
-    """Residual codes under the stored codebooks, keyed by list."""
+    """Residual codes under the stored codebooks, keyed by list (raw
+    codes when ``meta["residual"]`` is False: :func:`ivfpq_topk`)."""
     return _pq_codes(
         df, meta["codebooks"], meta["id_col"], meta["vec_col"],
-        _pivot_matrix(pivots), residual=True,
+        _pivot_matrix(pivots), residual=meta.get("residual", True),
     )
 
 
@@ -3036,8 +2634,11 @@ def _train_matryoshka(corpus, id_col, vec_col, prefix_dims=16, modulus=37):
 
 
 def _encode_matryoshka(df, meta, pivots):
+    """Prefix rows, keyed by list when ``pivots`` are given."""
     i = meta["id_col"]
     pre = df.select(F.col(i), _prefix(F.col(meta["vec_col"]), meta).alias("__pre"))
+    if pivots is None:
+        return pre.select(F.col(i), F.col("__pre").alias("prefix"))
     return ivf_assign(pre, pivots, 1, i, "__pre", keep_cols=("__pre",)).select(
         F.col(i), F.col("__pre").alias("prefix"), "pivot_id"
     )
@@ -3059,8 +2660,8 @@ def _train_ivfbq(corpus, id_col, vec_col, modulus=37, thresholds=None):
 
 # -- probe kernels -------------------------------------------------------------
 #
-# An indexed probe reads its query batch ONCE on the driver (small by
-# contract) and derives everything query-side there in numpy: each query's
+# A probe, indexed or in memory, reads its query batch ONCE on the driver
+# (small by contract) and derives everything query-side there in numpy: each query's
 # probed lists and the codec's query state (ADC LUTs, norms, SQ8 vectors, BQ
 # codes, prefixes).  Two mapInArrow kernels then do the row work — scoring
 # over the codec's table, exact re-rank over ``vectors`` — each keeping a
@@ -3135,8 +2736,8 @@ def _cosine_scorer(col: str | None):
 
 
 def _sq8_scorer(meta, qs, pivots, lists):
-    """``dot(q, min + code·step)``, the reconstruction as
-    :func:`_sq8_recon` spells it, folded from 0.0."""
+    """``dot(q, min + code·step)`` — the decode of :func:`sq8_encode`,
+    as the SQL oracles spell it — folded from 0.0."""
     mins = np.asarray(meta["mins"], dtype=np.float64)
     steps = np.asarray(meta["steps"], dtype=np.float64)
     if qs.shape[1] != len(mins):
@@ -3159,9 +2760,11 @@ def _sq8_scorer(meta, qs, pivots, lists):
 def _adc_scorer(meta, qs, pivots, lists):
     """Negated ADC distance ``−Σ_m lut[m, code_m]``, summed in subspace
     order from the first subspace's term.  LUTs are built here, per query
-    (flat pq) or per (query, probed list) over the residual ``q − pivot``
-    (ivfpq), with :func:`_pq_subdists_kernel`'s arithmetic: ``(x−c)²``
-    folded left over the sub-dimension."""
+    (flat pq, and ivfpq over raw codes: ``meta["residual"]`` False) or
+    per (query, probed list) over the residual ``q − pivot`` (ivfpq):
+    ``(x−c)·(x−c)`` folded left over the sub-dimension (explicit products
+    and an ordered add chain; numpy's pairwise ``sum`` would re-associate
+    and drift the last ulp from the oracle's fold)."""
     books = np.asarray(meta["codebooks"], dtype=np.float64)  # (M, K, d)
     n_sub, _, d = books.shape
     if qs.shape[1] != n_sub * d:
@@ -3169,8 +2772,9 @@ def _adc_scorer(meta, qs, pivots, lists):
             f"query vectors have {qs.shape[1]} dimensions; the codebooks "
             f"cover {n_sub * d}"
         )
+    per_list = lists is not None and meta.get("residual", True)
     x = qs
-    if lists is not None:
+    if per_list:
         x = (qs[:, None, :] - pivots[lists]).reshape(-1, qs.shape[1])
     diff = x.reshape(len(x), n_sub, 1, d) - books[None]
     sq = diff * diff
@@ -3180,7 +2784,7 @@ def _adc_scorer(meta, qs, pivots, lists):
 
     def score(blocks, qidx, slots):
         codes = blocks[0]
-        lut = luts[qidx if slots is None else slots]  # (Qp, M, K)
+        lut = luts[slots if per_list else qidx]  # (Qp, M, K)
         acc = lut[:, 0, codes[:, 0]]
         for m in range(1, n_sub):
             acc = acc + lut[:, m, codes[:, m]]
@@ -3336,9 +2940,9 @@ def _rerank_kernel(
     """The probe's exact re-rank (``mapInArrow`` over ``vectors``, columns
     ``(id, vec)``): for each stored row among the wanted ``(want_ids[i],
     query want_q[i])`` pairs (sorted by id), the exact squared L2 (ranked
-    ascending) or exact cosine of that pair only, folded as
-    :func:`_exact_l2_rerank` / :func:`_exact_cosine_rerank` do; each query
-    keeps its k best distinct candidates."""
+    ascending) or exact cosine of that pair only, folded from 0.0 in
+    element order as :func:`_l2sq` / :func:`_dot` fold; each query keeps
+    its k best distinct candidates."""
     select, emit = _topk_state(k, distinct=True)
     block = _vector_block()
     part = _candidates(True)
@@ -3471,9 +3075,9 @@ CODECS: dict[str, IndexCodec] = {
             train=_train_ivfbq,
             retrain=lambda m: {"modulus": m["modulus"]},
             encode=lambda df, m, p: bq_encode(
-                _assigned(df, m, p), m["thresholds"], m["vec_col"],
-                out="bq_code",
-            ).select(m["id_col"], "bq_code", "pivot_id"),
+                df if p is None else _assigned(df, m, p), m["thresholds"],
+                m["vec_col"], out="bq_code",
+            ).select(m["id_col"], "bq_code", *["pivot_id"] * (p is not None)),
             scorer=_bq_scorer,
             rerank="cosine",
         ),
@@ -3632,58 +3236,63 @@ def _probe_lists(qs: np.ndarray, vecs: np.ndarray, nprobe: int, col: str) -> np.
     return np.argsort(key, axis=1, kind="stable")[:, :nprobe]
 
 
-def _probe_artifact(
+def _probe(
+    codec: IndexCodec,
+    meta: dict,
+    table: DataFrame,
+    vectors: DataFrame | None,
     queries: DataFrame,
-    index_path: str,
-    family: str,
     k: int,
     query_id_col: str,
     vec_col: str,
     exclude_self: bool = True,
+    pivots: tuple[list, np.ndarray] | None = None,
     nprobe: int | None = None,
     shortlist: int | None = None,
     n_probes: int = 0,
+    score: str | None = None,
 ) -> DataFrame:
-    """Probe: frozen-manifest read → the query batch, collected ONCE →
-    candidates → the codec's re-rank (exact L2 or exact cosine over
-    ``vectors``, or none).  Output ``(query_id, id, score, rank)``: the
-    score is ``cosine``, or ``l2_dist`` for the PQ families.
+    """The one ANN probe, over frames: the query batch, collected ONCE →
+    candidates from ``table`` (the codec's rows under ``meta``) → the
+    codec's re-rank (exact L2 or exact cosine over ``vectors``, or none).
+    Output ``(query_id, id, score, rank)``: the score is ``score`` when
+    given, else ``cosine``, or ``l2_dist`` for an L2 re-rank.  Every
+    score but a cosine is a distance, returned as such.
 
     * Driver.  The batch is small by contract; its rows give everything
-      query-side in numpy: a coarse family's probed lists per query
-      (:func:`_probe_lists` against the stored pivots) and the codec's
-      query state (:class:`_Scorer`).  A null or ragged query vector
-      raises ``ValueError`` naming ``vec_col``; an empty batch returns an
-      empty frame.
-    * Scoring.  :func:`_scoring_kernel` runs over the codec's table after
-      ``pivot_id IN (...)`` pruning of unprobed lists and the tombstone
-      anti-join (deleted vectors stop ranking at once; compaction removes
-      them physically): each row is scored against the queries probing its
-      list, a query's own id is dropped (``exclude_self``), and each query
-      keeps its ``shortlist`` (or, with no re-rank, ``k``) best distinct
-      ids, merged by :func:`_merge_topk`'s one exchange.  lsh instead
-      equi-joins its bucket table to the queries' probe rows: every
-      (query, id) bucket member is a candidate.
+      query-side in numpy: with ``pivots`` (the coarse quantizer as
+      ``(ids ascending, (P, D) matrix)``) each query's probed lists
+      (:func:`_probe_lists`), and the codec's query state
+      (:class:`_Scorer`).  A null or ragged query vector raises
+      ``ValueError`` naming ``vec_col``; an empty batch returns an empty
+      frame.
+    * Scoring.  :func:`_scoring_kernel` runs over ``table`` — pruned to
+      the probed lists by ``pivot_id IN (...)`` when ``pivots`` are
+      given, else every row scores against every query: each row is
+      scored against the queries probing its list, a query's own id is
+      dropped (``exclude_self``), and each query keeps its ``shortlist``
+      (or, with no re-rank, ``k``) best distinct ids, merged by
+      :func:`_merge_topk`'s one exchange.  lsh instead equi-joins its
+      bucket table to the queries' probe rows: every (query, id) bucket
+      member is a candidate.
     * Re-rank.  The candidates — at most |queries| × shortlist rows, or
       lsh's bucket members — are collected through Arrow and deduped, and
       :func:`_rerank_kernel` scores exactly those pairs over ``vectors``,
       merged the same way.
 
-    Replays of an at-least-once append are exact copies of a row, so the
-    kernels and the merge drop them (distinct candidates) and no probe
+    Exact copies of a row (an at-least-once append's replays) are dropped
+    by the kernels and the merge (distinct candidates), so no probe
     dedups a table.  A zero-norm cosine raises as Spark's ANSI division
     does, with ``[DIVIDE_BY_ZERO]``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    meta, codec = read_manifest(index_path, family)
     id_col = meta["id_col"]
     spark = queries.sparkSession
     q_sel = queries.select(F.col(query_id_col), F.col(vec_col))
     rows = q_sel.collect()
     qid_field = q_sel.schema[query_id_col]
-    table = spark.read.parquet(os.path.join(index_path, codec.tables[0]))
-    name = "l2_dist" if codec.rerank == "l2" else "cosine"
+    name = score or ("l2_dist" if codec.rerank == "l2" else "cosine")
     if not rows:
         return spark.createDataFrame([], StructType([
             qid_field, table.schema[id_col],
@@ -3701,7 +3310,6 @@ def _probe_artifact(
             spark.createDataFrame(rows, q_sel.schema), meta, None,
             query_id_col, vec_col, n_probes,
         )
-        table = index_maintenance.exclude_tombstoned(table, index_path, id_col, id_col)
         # a vector shares buckets with a query in several tables: the
         # distinct pairs are taken on the driver below
         cands = table.join(F.broadcast(probe_rows), codec.join_on).select(
@@ -3712,10 +3320,10 @@ def _probe_artifact(
     else:
         # the quantizer's space: the manifest's prefix, else the vector
         qs = qv[:, : meta["prefix_dims"]] if "prefix_dims" in meta else qv
-        pivots = lists = probes = None
-        if codec.coarse:
-            ids, pivots = _stored_pivots(index_path, codec)
-            lists = _probe_lists(qs, pivots, nprobe, vec_col)
+        vecs = lists = probes = None
+        if pivots is not None:
+            ids, vecs = pivots
+            lists = _probe_lists(qs, vecs, nprobe, vec_col)
             slots: dict = {}
             for slot, p in enumerate(lists.ravel()):
                 slots.setdefault(ids[p], []).append(slot)
@@ -3724,10 +3332,10 @@ def _probe_artifact(
                 for p, s in slots.items()
             }
             table = table.filter(F.col("pivot_id").isin(sorted(probes)))
-        scorer = codec.scorer(meta, qs, pivots, lists)
-        table = index_maintenance.exclude_tombstoned(table, index_path, id_col, id_col)
+        scorer = codec.scorer(meta, qs, vecs, lists)
         n = shortlist if codec.rerank else k
-        cols = [id_col, *(c for c, _ in scorer.cols)] + ["pivot_id"] * codec.coarse
+        cols = [id_col, *(c for c, _ in scorer.cols)]
+        cols += ["pivot_id"] * (pivots is not None)
         partial = table.select(*cols).coalesce(cores).mapInArrow(
             _scoring_kernel(scorer, n, probes, self_ids, qids, query_id_col),
             _cands_schema(
@@ -3736,38 +3344,102 @@ def _probe_artifact(
             ),
         )
         cands = _merge_topk(partial, query_id_col, id_col, n, name, distinct=True)
-        if codec.rerank is None:
-            return cands
-    with _kernel_errors():
-        pairs = cands.select(query_id_col, id_col).toArrow()
-    # each pair's query index (the first query of that id), then the
-    # distinct (id, query) pairs sorted by id, as the re-rank looks them up
-    by_id = np.argsort(q_ids, kind="stable")
-    at = by_id[np.searchsorted(
-        q_ids[by_id], pairs.column(0).to_numpy(zero_copy_only=False)
-    )]
-    want = (
-        pa.table({"id": pairs.column(1), "q": at})
-        .group_by(["id", "q"]).aggregate([])
-        .sort_by([("id", "ascending"), ("q", "ascending")])
-    )
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
-    partial = vectors.select(
-        F.col(id_col), F.col(meta["vec_col"])
-    ).coalesce(cores).mapInArrow(
-        _rerank_kernel(
-            codec.rerank, meta["vec_col"], qv,
-            want.column("id").to_numpy(),
-            want.column("q").to_numpy().astype(np.int64),
-            k, qids, query_id_col,
-        ),
-        _cands_schema(qid_field, DoubleType(), vectors.schema[id_col].dataType),
-    )
-    ranked = _merge_topk(partial, query_id_col, id_col, k, name, distinct=True)
-    if codec.rerank == "l2":
-        # the kernel ranks −d; l2_dist is d again (two exact sign flips)
+    ranked = cands
+    if codec.rerank is not None:
+        with _kernel_errors():
+            pairs = cands.select(query_id_col, id_col).toArrow()
+        # each pair's query index (the first query of that id), then the
+        # distinct (id, query) pairs sorted by id, as the re-rank looks
+        # them up
+        by_id = np.argsort(q_ids, kind="stable")
+        at = by_id[np.searchsorted(
+            q_ids[by_id], pairs.column(0).to_numpy(zero_copy_only=False)
+        )]
+        want = (
+            pa.table({"id": pairs.column(1), "q": at})
+            .group_by(["id", "q"]).aggregate([])
+            .sort_by([("id", "ascending"), ("q", "ascending")])
+        )
+        partial = vectors.select(
+            F.col(id_col), F.col(meta["vec_col"])
+        ).coalesce(cores).mapInArrow(
+            _rerank_kernel(
+                codec.rerank, meta["vec_col"], qv,
+                want.column("id").to_numpy(),
+                want.column("q").to_numpy().astype(np.int64),
+                k, qids, query_id_col,
+            ),
+            _cands_schema(qid_field, DoubleType(), vectors.schema[id_col].dataType),
+        )
+        ranked = _merge_topk(partial, query_id_col, id_col, k, name, distinct=True)
+    if name != "cosine":
+        # distances rank negated; two exact sign flips restore them
         ranked = ranked.withColumn(name, -F.col(name))
     return ranked
+
+
+def _probe_corpus(
+    codec: IndexCodec | str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    params: dict,
+    pivots: DataFrame | None,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    spread: bool = False,
+    **probe,
+) -> DataFrame:
+    """An in-memory probe: ``corpus`` encoded by the codec (a family name
+    or an :class:`IndexCodec`) under ``params`` and ``pivots`` (None: a
+    flat probe), as a build would store it, then :func:`_probe` with the
+    corpus as the re-rank store.  ``spread`` first spreads the corpus
+    over the cores (:func:`_spread`) for a Catalyst-expression encode."""
+    codec = CODECS[codec] if isinstance(codec, str) else codec
+    meta = {"id_col": id_col, "vec_col": vec_col, **params}
+    table = codec.encode(_spread(corpus) if spread else corpus, meta, pivots)
+    coarse = None if pivots is None else _pivot_matrix(pivots)[:2]
+    return _probe(
+        codec, meta, table, corpus, queries, k, query_id_col, vec_col,
+        pivots=coarse, **probe,
+    )
+
+
+def _probe_artifact(
+    queries: DataFrame,
+    index_path: str,
+    family: str,
+    k: int,
+    query_id_col: str,
+    vec_col: str,
+    exclude_self: bool = True,
+    nprobe: int | None = None,
+    shortlist: int | None = None,
+    n_probes: int = 0,
+) -> DataFrame:
+    """Probe an on-disk index: the frozen manifest, the codec's table
+    minus tombstoned ids (a broadcast anti-join: deleted vectors stop
+    ranking at once; compaction removes them physically), the stored
+    pivots (read on the driver) and ``vectors``, handed to
+    :func:`_probe`.  The codec's table is listed before ``vectors``, so
+    a concurrent append (vectors first, codes second) never shortlists
+    a code whose vector the re-rank cannot see."""
+    meta, codec = read_manifest(index_path, family)
+    id_col = meta["id_col"]
+    spark = queries.sparkSession
+    table = index_maintenance.exclude_tombstoned(
+        spark.read.parquet(os.path.join(index_path, codec.tables[0])),
+        index_path, id_col, id_col,
+    )
+    vectors = None
+    if "vectors" in codec.tables:
+        vectors = spark.read.parquet(os.path.join(index_path, "vectors"))
+    return _probe(
+        codec, meta, table, vectors, queries, k, query_id_col, vec_col,
+        exclude_self, _stored_pivots(index_path, codec) if codec.coarse else None,
+        nprobe, shortlist, n_probes,
+    )
 
 
 def _artifact_drift_report(

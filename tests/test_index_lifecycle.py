@@ -656,23 +656,66 @@ def test_zero_norm_query_cosine_divides_by_zero(spark, tmp_path, family):
 @pytest.mark.parametrize(
     "vec", [None, "null element", "ragged"], ids=["null", "null element", "ragged"]
 )
-@pytest.mark.parametrize("family", ["ivf", "pq"])
+@pytest.mark.parametrize("family", ["ivf", "pq", "in-memory"])
 def test_probe_rejects_null_and_ragged_query_vectors(spark, tmp_path, family, vec):
+    """A null or ragged query vector raises ``ValueError`` naming its
+    column on every probe path: the ivf and pq index probes, and the
+    in-memory twins of both (``ivf_topk``, ``pq_adc_rerank_topk``)."""
     base = spark.read.parquet(EMB).filter(F.col("vec_id") < 400)
     dim = len(base.first()["embedding"])
-    build, probe, _twin = _round_trip_cases(base)[family]
-    path = str(tmp_path / family)
-    build(base, path)
+    cases = _round_trip_cases(base)
     bad = {
         None: None,
         "null element": [0.5] * (dim - 1) + [None],
         "ragged": [0.5] * (dim - 1),
     }[vec]
+    # an in-memory twin reads the corpus's vector column from the queries
+    col = "embedding" if family == "in-memory" else "q_emb"
     q = spark.createDataFrame(
-        [(1000, [0.25] * dim), (1001, bad)], "query_id long, q_emb array<float>"
+        [(1000, [0.25] * dim), (1001, bad)], f"query_id long, {col} array<float>"
     )
-    with pytest.raises(ValueError, match="'q_emb'"):
-        probe(q, path, "q_emb").collect()
+    if family == "in-memory":
+        runs = [lambda twin=cases[f][2]: twin(q, None) for f in ("ivf", "pq")]
+    else:
+        build, probe, _twin = cases[family]
+        path = str(tmp_path / family)
+        build(base, path)
+        runs = [lambda: probe(q, path, col)]
+    for run in runs:
+        with pytest.raises(ValueError, match=f"'{col}'"):
+            run().collect()
+
+
+def test_deleting_ids_twice_probes_as_deleting_them_once(spark, tmp_path):
+    """Tombstones are stored as deleted — an id deleted twice is stored
+    twice — because the probe's anti-join needs no distinct set: the
+    probe after a double delete equals the probe after one delete, and
+    ``index_health`` counts each id once."""
+    import shutil
+
+    base = spark.read.parquet(EMB).filter(F.col("vec_id") < 400)
+    q = base.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    build, probe, _twin = _round_trip_cases(base)["ivfpq"]
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    build(base, once)
+    shutil.copytree(once, twice)
+
+    def rows(path):
+        return sorted(tuple(r) for r in probe(q, path, "embedding").collect())
+
+    victims = sorted({r[1] for r in rows(once)})[:5]
+    for path, times in ((once, 1), (twice, 2)):
+        for _ in range(times):
+            _delete(spark, path, victims, "vec_id")
+    deleted = rows(once)
+    assert deleted and not {r[1] for r in deleted} & set(victims)
+    assert rows(twice) == deleted
+    stored = spark.read.parquet(os.path.join(twice, "tombstones")).count()
+    assert stored == 2 * len(victims)
+    health = index_maintenance.index_health(spark, twice)
+    assert health["tombstones"] == len(victims)
 
 
 def test_probe_kernels_run_where_the_package_cannot_be_imported(tmp_path):

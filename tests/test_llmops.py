@@ -1259,13 +1259,37 @@ def test_ivfpq_residual_full_probe_includes_all_candidates(spark):
     got = similarity.ivfpq_residual_topk(
         emb, q, k=10, nprobe=n_pivots, shortlist=n
     )
-    allpairs = q.select("query_id").crossJoin(emb.select("vec_id")).where(
-        "vec_id <> query_id"
-    )
-    want = similarity._exact_l2_rerank(
-        allpairs, emb, q, 10, "vec_id", "embedding", "query_id"
-    )
+    want = _exact_l2_topk(emb, q, 10)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def _exact_l2_topk(corpus, queries, k):
+    """Reference: the exact squared-L2 top-k of every query over the whole
+    corpus in Catalyst — ``(q−c)·(q−c)`` in double folded from 0.0 in
+    element order, ranked by (distance, id), a query never ranking
+    itself.  Output ``(query_id, vec_id, l2_dist, rank)``."""
+    from pyspark.sql import Window
+
+    def sq(x, y):
+        return (x.cast("double") - y.cast("double")) * (
+            x.cast("double") - y.cast("double")
+        )
+
+    scored = (
+        queries.select("query_id", F.col("embedding").alias("__qv"))
+        .crossJoin(corpus.select("vec_id", "embedding"))
+        .where("vec_id <> query_id")
+        .select(
+            "query_id", "vec_id",
+            F.aggregate(
+                F.zip_with("__qv", "embedding", sq), F.lit(0.0), lambda a, v: a + v
+            ).alias("l2_dist"),
+        )
+    )
+    order = Window.partitionBy("query_id").orderBy("l2_dist", "vec_id")
+    return scored.withColumn("rank", F.row_number().over(order)).where(
+        F.col("rank") <= k
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1688,13 +1712,14 @@ def test_matryoshka_ivf_recall_vs_flat_and_monotonic(spark):
 
 
 def test_matryoshka_ivf_plan_prunes_the_corpus_cross(spark):
-    """The point of the ANN-prefix stage: the flat lane's prefix scan is
-    a queries × CORPUS broadcast nested-loop cross; the pruned lane's
-    only cross joins are the two IVF assignment stages against the TINY
-    pivot set (every-37th filter on the build side — the inherent N×P
-    assignment cost of any IVF), while candidate generation is an
-    equi-join on ``pivot_id``.  So: exactly 2 nested-loop joins, both
-    pivot-bounded, and a hash join keyed on pivot_id in the plan."""
+    """The point of the ANN-prefix stage: the flat lane scores every
+    corpus prefix against every query; the pruned lane's only cross join
+    is the IVF assignment of the corpus against the TINY pivot set
+    (every-37th filter — the inherent N×P assignment cost of any IVF),
+    and its scoring kernel reads only rows of probed lists.  Read from
+    every plan the probe runs (it scores before it returns): the queries
+    (the every-25th filter) cross nothing, every broadcast is the pivot
+    array, and the scoring scan is filtered ``pivot_id IN (...)``."""
     import re
 
     from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.workload_llm import (
@@ -1703,26 +1728,32 @@ def test_matryoshka_ivf_plan_prunes_the_corpus_cross(spark):
 
     emb = spark.read.parquet(EMB)
     queries = _emb_queries(emb)
-    pruned = similarity.matryoshka_ivf_topk(
+    plans = _probe_plans(spark, lambda: similarity.matryoshka_ivf_topk(
         emb, queries, k=10, prefix_dims=16, nprobe=12, shortlist=40
+    ))
+    # no queries × corpus cross: the plans reading the queries join nothing
+    reads_queries = [
+        p for p in plans.split("== Physical Plan ==") if "% 25)" in p
+    ]
+    assert reads_queries and not any("Join" in p for p in reads_queries), plans
+    assert "CartesianProduct" not in plans, plans
+    # the corpus crosses only the pivot set (the % 37 seed filter)
+    assert "BroadcastNestedLoopJoin" in plans, plans
+    broadcasts = re.findall(
+        r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[(\w+)#", plans
     )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastNestedLoopJoin") == 2, plan
-    assert "CartesianProduct" not in plan, plan
-    # each cross is against the pivot relation (the % 37 seed filter)
-    assert plan.count("% 37)") >= 2, plan
-    # candidate generation joins lists on pivot_id, never crosses corpus
-    assert re.search(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)[^\n]*pivot_id",
-        plan,
-    ), plan
-    flat = similarity.matryoshka_topk(
+    assert broadcasts and set(broadcasts) == {"__pivarr"}, plans
+    assert "% 37)" in plans, plans
+    # candidate generation reads the probed lists only
+    assert re.search(r"pivot_id#\d+L? (IN \(|INSET )", plans), plans
+    flat = _probe_plans(spark, lambda: similarity.matryoshka_topk(
         emb, queries, k=10, prefix_dims=16, shortlist=40
-    )
-    flat_plan = flat._jdf.queryExecution().executedPlan().toString()
-    # the contrast: the flat lane crosses the corpus with NO pivot filter
-    assert "BroadcastNestedLoopJoin" in flat_plan
-    assert "% 37)" not in flat_plan
+    ))
+    # the contrast: the flat lane scores the whole corpus, with NO pivot
+    # set and no list filter
+    assert "MapInArrow" in flat, flat
+    assert "% 37)" not in flat
+    assert "pivot_id" not in flat, flat
 
 
 def test_sq8_stats_empty_corpus_raises_clearly(spark):

@@ -51,10 +51,12 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            ran = store.executionsList(seen, store.executionsCount() - seen)
-            for i in range(ran.size()):
+            n = store.executionsCount() - seen
+            # the store refuses an empty window (a lane that ran nothing)
+            ran = store.executionsList(seen, n) if n > 0 else None
+            for i in range(n):
                 plan += (
-                    f"\n\n== eager query {i + 1} of {ran.size()} run while "
+                    f"\n\n== eager query {i + 1} of {n} run while "
                     f"building the lane ==\n"
                     + ran.apply(i).physicalPlanDescription()
                 )
